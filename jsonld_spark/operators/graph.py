@@ -2,24 +2,30 @@
 
 The reference has no cross-document operations at all; entity linking is
 new engineering required by the north rule (SURVEY.md §4 item 2).
-Hand-rolled (no GraphFrames dependency): min-label propagation with
-pointer jumping, which converges in O(log diameter) rounds, with a
-reliable ``checkpoint()`` per round to truncate lineage — NOT
+Hand-rolled (no GraphFrames dependency).  Connected components is gated
+on size: an alias graph whose edge bytes fit under the session's
+``spark.sql.autoBroadcastJoinThreshold`` is labeled by one union-find on
+the driver; a larger one runs min-label propagation with pointer
+jumping, which converges in O(log diameter) rounds, with a reliable
+``checkpoint()`` per round to truncate lineage — NOT
 ``localCheckpoint``, whose executor-memory-backed partitions become
 unrecoverable when an executor is lost, failing the whole job on a real
 cluster.  Mega-component skew on the ``groupBy(id)`` min is left to AQE
 skew handling plus the two-stage partial aggregation Spark already
-performs for ``min``.
-"""
+performs for ``min``."""
 
 from __future__ import annotations
 
 import atexit
+import logging
 import shutil
 import tempfile
 import warnings
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql.types import BinaryType, StringType, StructField, StructType
+
+log = logging.getLogger(__name__)
 
 OWL_SAME_AS = "http://www.w3.org/2002/07/owl#sameAs"
 SCHEMA_SAME_AS = "http://schema.org/sameAs"
@@ -69,20 +75,30 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 25,
-    checkpoint_every: int = 1,
     dictionary_encode: bool = False,
 ) -> DataFrame:
     """→ DataFrame(id, comp): every vertex labeled with the lexicographic
-    minimum IRI of its component (the canonical representative).
+    minimum IRI of its component (the canonical representative).  The
+    labels keep the type of the edge columns (IRIs, or the long doc ids
+    of ``text.dedup_groups``).
 
-    ``checkpoint_every`` truncates lineage with a RELIABLE checkpoint
-    every Nth round (aligned with the convergence probe).  Interleaved
-    A/B on the 800k-page bench subset (3 reps each): every-round
-    checkpointing beats every-2nd (22.4/22.5/24.8 s vs 23.8/26.0/27.0 s)
-    — between truncations the convergence probe and the next round each
-    recompute an extra round of lineage, which costs more than the
-    saved local-disk write.  Default 1; the knob stays for clusters
-    whose checkpoint store (object storage) is slower than recompute.
+    Two paths, chosen after the symmetric edge frame is checkpointed
+    (the only time ``edges`` is evaluated on either path):
+
+    * the edge bytes fit under ``spark.sql.autoBroadcastJoinThreshold``
+      → the edges are collected and labeled by ONE union-find on the
+      driver, rooted at each component's least vertex, and returned as
+      a local relation (which a downstream join then broadcasts).  The
+      threshold bounds what the driver holds: below it, the broadcast
+      of the mapping in ``link_entities`` already puts that much data
+      on the driver.  ``-1`` turns this path off, like the broadcast.
+      At that size the rounds' joins, group-bys, checkpoints and
+      convergence probes are job-scheduling cost, not data movement.
+      Edges with a NULL endpoint contribute no vertex here.
+    * otherwise: min-label propagation with pointer jumping, one
+      reliable checkpoint per round (every-round checkpointing beat
+      every 2nd round in an interleaved A/B on an 800k-page crawl,
+      22.4/22.5/24.8 s vs 23.8/26.0/27.0 s).
 
     ``dictionary_encode=True`` assigns each vertex a dense 8-byte id in
     LEXICOGRAPHIC IRI ORDER (one global sort via a window rank) and runs
@@ -97,14 +113,38 @@ def connected_components(
     50-100+ bytes and whose alias graphs need more rounds, where the
     per-round byte savings dominate the one-time encode."""
     if dictionary_encode:
-        return _connected_components_encoded(
-            edges, src, dst, max_iter, checkpoint_every
-        )
+        return _connected_components_encoded(edges, src, dst, max_iter)
     _ensure_checkpoint_dir(edges)
     sym = edges.select(
         F.col(src).alias("a"), F.col(dst).alias("b")
     ).union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-    sym = sym.repartition("a").checkpoint()
+    # the size rides the checkpoint job as observed metrics: no extra
+    # job, and a retried task can only over-count (→ distributed path)
+    size = Observation()
+    sym = (
+        sym.observe(
+            size,
+            F.count(F.lit(1)).alias("rows"),
+            F.sum(_value_bytes(sym, "a") + _value_bytes(sym, "b")).alias("bytes"),
+        )
+        .repartition("a")
+        .checkpoint()
+    )
+    observed = size.get
+    n_rows, n_bytes = observed["rows"], observed["bytes"] or 0
+    spark = edges.sparkSession
+    threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    on_driver = n_bytes <= threshold
+    log.debug(
+        "connected_components: %s path, %d symmetric edge rows, %d bytes, "
+        "autoBroadcastJoinThreshold %d",
+        "driver" if on_driver else "distributed", n_rows, n_bytes, threshold,
+    )
+    if on_driver:
+        # each undirected edge once (a self-loop too, so its vertex
+        # stays); the comparison drops NULL endpoints
+        pairs = sym.filter(F.col("a") <= F.col("b")).collect()
+        return _local_labels(spark, _min_root_labels(pairs), sym.schema["a"])
 
     # no init checkpoint: round 0 consumes labels twice (message join +
     # union) under ONE action, so the distinct's exchange is computed
@@ -117,7 +157,7 @@ def connected_components(
         .withColumn("comp", F.col("id"))
     )
 
-    for it in range(max_iter):
+    for _ in range(max_iter):
         # 1. neighbor-min message passing.  The PREVIOUS label rides
         # along as ``_old`` (unique per id, so max() recovers it through
         # the min-aggregation; message rows carry NULL, which max
@@ -140,23 +180,64 @@ def connected_components(
         jump = new_labels.select(
             F.col("id").alias("jid"), F.col("comp").alias("jcomp")
         )
+        # truncate lineage where we also probe convergence — the
+        # checkpointed result feeds both the probe and the next round
         new_labels = new_labels.join(
             jump, new_labels.comp == jump.jid, "left"
-        ).select("id", F.coalesce("jcomp", "comp").alias("comp"), "_old")
-        check = it % checkpoint_every == checkpoint_every - 1 or it == max_iter - 1
-        if check:
-            # truncate lineage where we also probe convergence — the
-            # checkpointed result feeds both the probe and the next round
-            new_labels = new_labels.checkpoint()
-            changed = (
-                new_labels.filter(F.col("comp") != F.col("_old"))
-                .limit(1)
-                .count()
-            )
+        ).select(
+            "id", F.coalesce("jcomp", "comp").alias("comp"), "_old"
+        ).checkpoint()
+        changed = (
+            new_labels.filter(F.col("comp") != F.col("_old")).limit(1).count()
+        )
         labels = new_labels.select("id", "comp")
-        if check and changed == 0:
+        if changed == 0:
             break
     return labels
+
+
+def _value_bytes(df: DataFrame, col: str):
+    """Bytes one value of ``col`` holds: UTF-8/binary length for
+    variable-width columns, 8 for fixed-width ids."""
+    if isinstance(df.schema[col].dataType, (StringType, BinaryType)):
+        return F.octet_length(col)
+    return F.lit(8)
+
+
+def _min_root_labels(pairs) -> list[tuple]:
+    """Union-find over ``(a, b)`` pairs whose root is always the least
+    vertex of its set (a union hangs the larger root under the smaller),
+    with path halving.  → [(vertex, least vertex of its component)].
+    Python orders str by code point, which is Spark's UTF-8 byte order."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return [(v, find(v)) for v in parent]
+
+
+def _local_labels(spark, labels: list[tuple], field: StructField) -> DataFrame:
+    """``(id, comp)`` rows as a frame typed like ``field``.  With Arrow
+    on (``spark.sql.execution.arrow.pyspark.enabled``, as in
+    ``default_session``) a pandas frame becomes a ``LocalRelation`` kept
+    on the driver — sized exactly, so joins broadcast it — while it is
+    under ``spark.sql.execution.arrow.localRelationThreshold``; without
+    Arrow it is RDD-backed and AQE sizes it at runtime."""
+    import pandas as pd
+
+    schema = StructType(
+        [StructField("id", field.dataType), StructField("comp", field.dataType)]
+    )
+    return spark.createDataFrame(pd.DataFrame(labels, columns=["id", "comp"]), schema)
 
 
 def ranged_partition_offsets(df: DataFrame, order_cols, weight: str | None = None):
@@ -206,11 +287,7 @@ def dense_ids_by_sorted_order(df: DataFrame, col: str = "iri") -> DataFrame:
 
 
 def _connected_components_encoded(
-    edges: DataFrame,
-    src: str,
-    dst: str,
-    max_iter: int,
-    checkpoint_every: int,
+    edges: DataFrame, src: str, dst: str, max_iter: int
 ) -> DataFrame:
     """Dictionary-encoded CC: vertices → dense longs in lexicographic
     order, iterate on longs, decode once at the end."""
@@ -232,11 +309,7 @@ def _connected_components_encoded(
         .select("src_id", "dst_id")
     )
     labels = connected_components(
-        enc_edges,
-        src="src_id",
-        dst="dst_id",
-        max_iter=max_iter,
-        checkpoint_every=checkpoint_every,
+        enc_edges, src="src_id", dst="dst_id", max_iter=max_iter
     )
     id_map = vert_ids.select(F.col("vid").alias("id"), F.col("iri").alias("id_iri"))
     comp_map = vert_ids.select(
@@ -270,11 +343,12 @@ def link_entities(
     """Rewrite subj/obj through the canonical-IRI mapping.
 
     The mapping (alias table) is small relative to the triples at crawl
-    scale; sizing the join is left to AQE, which sees the mapping's true
-    size at runtime (the CC output is checkpointed) and broadcasts it
-    when it fits — no eager driver-side count during plan construction
-    (a ``mapping.count()`` here would run the whole CC job just to pick
-    a join strategy).  ``broadcast=True`` forces the hint when the
+    scale; sizing the join is left to the planner — no eager driver-side
+    count during plan construction (a ``mapping.count()`` here would run
+    the whole CC job just to pick a join strategy).  A mapping from a
+    broadcast-sized alias graph is a local relation of known size, so
+    the join broadcasts it up front; a larger one comes off the CC
+    round checkpoints, and AQE sizes it at runtime.  ``broadcast=True`` forces the hint when the
     caller already knows the mapping is small.
     """
     m = F.broadcast(mapping) if broadcast else mapping

@@ -10,8 +10,11 @@ Stages (SURVEY.md §3.1 re-trace):
 3. deterministic bucketing ``part_id = pmod(xxhash64(url), N)`` — the
    salted shuffle key (url-hash, NOT subject) so mega-domain subject
    skew cannot concentrate a partition;
-4. optional sameAs entity linking (broadcast alias join + connected
-   components, operators.graph);
+4. optional sameAs entity linking (operators.graph): connected
+   components over the sameAs edges — one driver-side union-find when
+   the edges fit under ``spark.sql.autoBroadcastJoinThreshold``,
+   checkpointed pointer-jumping rounds otherwise — then the alias join,
+   which broadcasts a driver-labeled mapping;
 5. partitioned write + per-partition lineage rows → idempotent resume
    (completed buckets are skipped; dynamic partition overwrite makes
    bucket re-runs exactly-once).
@@ -22,12 +25,15 @@ broadcast cache dict (north-star requirement).
 
 from __future__ import annotations
 
+import logging
 import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .udfs import TRIPLES_SCHEMA, make_pages_to_triples
+
+log = logging.getLogger(__name__)
 
 LINEAGE_COLS = [
     "run_id",
@@ -97,17 +103,29 @@ def parallelize_small_input(
     with an unconditional repartition), while the same op at 10× the
     input is dominated by the serial stage.  Heavy per-row ops (the
     JSON-LD Python stage, shingle+collect_list) keep the default 0."""
+    # imported here, not at module top: a module-level pyspark.errors
+    # import ahead of pyspark.sql can deadlock-break pyspark's package
+    # import when another thread imports pyspark.sql at the same time
+    from py4j.protocol import Py4JError
+    from pyspark.errors import AnalysisException
+
     spark = df.sparkSession
     para = spark.sparkContext.defaultParallelism
     try:
         size = int(
             str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
         )
-    except Exception:  # noqa: BLE001 — stats are advisory; never fail the plan
+    except (Py4JError, AnalysisException) as e:
+        # stats are advisory: an analysis error surfaces at the action
+        log.debug("parallelize_small_input: no size estimate (%s), left as is", e)
         return df
-    if min_bytes <= size <= para * max_bytes_per_core:
-        return df.repartition(para)
-    return df
+    spread = min_bytes <= size <= para * max_bytes_per_core
+    log.debug(
+        "parallelize_small_input: estimated %d bytes, window %d..%d: %s",
+        size, min_bytes, para * max_bytes_per_core,
+        "round-robin" if spread else "left as is",
+    )
+    return df.repartition(para) if spread else df
 
 
 class KGPipeline:

@@ -12,30 +12,89 @@ from jsonld_spark.operators.graph import (
 )
 
 
+BROADCAST_THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
+
+
 def _edges(spark, pairs):
     return spark.createDataFrame(pairs, ["src", "dst"])
 
 
-def test_cc_two_components(spark):
-    e = _edges(spark, [("b", "a"), ("c", "b"), ("y", "x"), ("z", "y")])
-    labels = {r.id: r.comp for r in connected_components(e).collect()}
-    assert labels == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x", "z": "x"}
+@pytest.fixture(params=["driver", "distributed"])
+def cc_path(request, spark):
+    """The connected-components path under test.  Test edge sets are far
+    below the broadcast threshold, so they take the driver union-find;
+    turning the threshold off forces the distributed rounds."""
+    prev = spark.conf.get(BROADCAST_THRESHOLD)
+    if request.param == "distributed":
+        spark.conf.set(BROADCAST_THRESHOLD, "-1")
+    yield request.param
+    spark.conf.set(BROADCAST_THRESHOLD, prev)
 
 
-def test_cc_long_chain(spark):
+@pytest.fixture(params=["str", "long"])
+def vertex(request):
+    """i → vertex id: an IRI (sameAs linking) or a long doc id
+    (``text.dedup_groups``), ordered like i in both cases."""
+    if request.param == "str":
+        return lambda i: f"http://e/{i:03d}"
+    return lambda i: i
+
+
+def _labeled_on_driver(df) -> bool:
+    return "LocalRelation" in df._jdf.queryExecution().analyzed().toString()
+
+
+def test_cc_two_components(spark, cc_path, vertex):
+    a, b, c, x, y, z = map(vertex, (0, 1, 2, 23, 24, 25))
+    e = _edges(spark, [(b, a), (c, b), (y, x), (z, y)])
+    cc = connected_components(e)
+    assert _labeled_on_driver(cc) == (cc_path == "driver")
+    labels = {r.id: r.comp for r in cc.collect()}
+    assert labels == {a: a, b: a, c: a, x: x, y: x, z: x}
+
+
+def test_cc_long_chain(spark, cc_path, vertex):
     # chain of 200 nodes → pointer jumping must converge << 200 iters
-    pairs = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(199)]
+    pairs = [(vertex(i), vertex(i + 1)) for i in range(199)]
     e = _edges(spark, pairs)
     labels = connected_components(e, max_iter=12)
+    assert _labeled_on_driver(labels) == (cc_path == "driver")
     comps = labels.select("comp").distinct().collect()
     assert len(comps) == 1
-    assert comps[0].comp == "n000"
+    assert comps[0].comp == vertex(0)
+    assert labels.count() == 200
 
 
-def test_canonical_mapping_excludes_roots(spark):
-    e = _edges(spark, [("b", "a")])
-    m = {r.iri: r.canon for r in canonical_mapping(e).collect()}
-    assert m == {"b": "a"}
+def test_canonical_mapping_excludes_roots(spark, cc_path, vertex):
+    a, b = vertex(0), vertex(1)
+    e = _edges(spark, [(b, a)])
+    mapping = canonical_mapping(e)
+    assert _labeled_on_driver(mapping) == (cc_path == "driver")
+    assert {r.iri: r.canon for r in mapping.collect()} == {b: a}
+
+
+def test_cc_size_gate_picks_path(spark):
+    """Edge bytes over ``spark.sql.autoBroadcastJoinThreshold`` take the
+    distributed rounds; under it, the driver union-find, whose labels
+    come back as a local relation.  Both label the same."""
+    big = [(f"http://e/{i:04d}", f"http://e/{i + 1:04d}") for i in range(0, 40, 2)]
+    small = big[:1]
+    prev = spark.conf.get(BROADCAST_THRESHOLD)
+    spark.conf.set(BROADCAST_THRESHOLD, "300")
+    try:
+        over = connected_components(_edges(spark, big))
+        under = connected_components(_edges(spark, small))
+        assert not _labeled_on_driver(over)
+        assert _labeled_on_driver(under)
+        assert {(r.id, r.comp) for r in over.collect()} == {
+            (v, s) for s, d in big for v in (s, d)
+        }
+        assert {(r.id, r.comp) for r in under.collect()} == {
+            ("http://e/0000", "http://e/0000"),
+            ("http://e/0001", "http://e/0000"),
+        }
+    finally:
+        spark.conf.set(BROADCAST_THRESHOLD, prev)
 
 
 def test_link_entities_rewrites(spark):
@@ -188,29 +247,21 @@ def test_dense_ids_match_global_window_and_avoid_single_partition(spark):
     assert {(r.iri, r.vid) for r in got.collect()} == expected
 
 
-def test_connected_components_dictionary_encoded_equivalence(spark):
+def test_connected_components_dictionary_encoded_equivalence(
+    spark, cc_path, vertex
+):
     """dictionary_encode=True must produce the identical (id, comp)
     mapping — ids are assigned in lexicographic IRI order, so min-id
     equals min-IRI."""
-    from jsonld_spark.operators.graph import connected_components
-
-    edges = spark.createDataFrame(
-        [
-            ("http://e/a", "http://e/b"),
-            ("http://e/b", "http://e/c"),
-            ("http://e/x", "http://e/y"),
-            ("http://e/c", "http://e/a"),
-            ("http://e/m", "http://e/a"),
-        ],
-        "src string, dst string",
-    )
+    a, b, c, m, x, y = map(vertex, (0, 1, 2, 12, 23, 24))
+    edges = _edges(spark, [(a, b), (b, c), (x, y), (c, a), (m, a)])
+    expected = {(a, a), (b, a), (c, a), (m, a), (x, x), (y, x)}
     plain = {(r.id, r.comp) for r in connected_components(edges).collect()}
     enc = {
         (r.id, r.comp)
         for r in connected_components(edges, dictionary_encode=True).collect()
     }
-    assert plain == enc
-    assert ("http://e/m", "http://e/a") in enc
+    assert plain == enc == expected
 
 
 def test_component_stats_histogram(spark):

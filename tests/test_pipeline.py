@@ -2,6 +2,8 @@
 
 import os
 import shutil
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -11,7 +13,7 @@ from jsonld_spark.pipeline import KGPipeline
 from jsonld_spark.sources.pages import build_context_cache_entries
 from jsonld_spark.udfs import page_to_rows
 
-from conftest import DATA_DIR
+from conftest import DATA_DIR, REPO
 
 
 @pytest.fixture(scope="module")
@@ -261,6 +263,52 @@ def test_giant_document_gated_before_parse():
     # same page under the limit parses fine
     ok = page_to_rows("http://page.example/big", html, cache, max_html_bytes=10_000)
     assert any(r[8] is None for r in ok)
+
+
+def test_errors_default_reports_oversized_scriptless_page(spark, pipe, monkeypatch):
+    """``errors()`` defaults to ``skip_scriptless=False``: an oversized
+    page with no ld+json still reports its 'document too large' row,
+    while ``extract()``'s default pre-filter drops the page before the
+    size gate."""
+    import jsonld_spark.pipeline as pipeline_mod
+    from jsonld_spark.udfs import make_pages_to_triples
+
+    monkeypatch.setattr(
+        pipeline_mod,
+        "make_pages_to_triples",
+        lambda *a, **k: make_pages_to_triples(*a, max_html_bytes=1024, **k),
+    )
+    url = "http://page.example/big-scriptless"
+    pages = spark.createDataFrame(
+        [(url, b"<html><p>" + b"x" * 4000 + b"</p></html>")],
+        "url string, html binary",
+    )
+    errs = pipe.errors(pages).collect()
+    assert [r.url for r in errs] == [url]
+    assert errs[0].error.startswith("document too large")
+    assert pipe.extract(pages).count() == 0
+
+
+def test_pipeline_import_races_udfs_import_in_a_thread():
+    """Importing ``jsonld_spark.pipeline`` while another thread imports
+    ``jsonld_spark.udfs`` (the benchmark replays pages in a thread as
+    the Spark session starts) must not break pyspark's package import:
+    both modules reach pyspark through ``pyspark.sql`` first."""
+    code = (
+        "import sys, threading\n"
+        "failed = []\n"
+        "threading.excepthook = failed.append\n"
+        "t = threading.Thread(target=__import__, args=('jsonld_spark.udfs',))\n"
+        "t.start()\n"
+        "import jsonld_spark.pipeline\n"
+        "t.join()\n"
+        "sys.exit(1 if failed else 0)\n"
+    )
+    for _ in range(4):  # the race lost 8 of 12 tries with the bad order
+        proc = subprocess.run(
+            [sys.executable, "-c", code], cwd=REPO, capture_output=True, text=True
+        )
+        assert proc.returncode == 0, proc.stderr[-2000:]
 
 
 def test_text_byte_identical_per_url(spark):
