@@ -99,6 +99,9 @@ InvalidStreamingKeyOrder = _err(
 MissingIncludedReferent = _err(
     "MissingIncludedReferent", "missing @included referent"
 )
+# engine guard, not a spec code: a document whose quads exceed the
+# batch UDF's per-document budget (udfs.MAX_QUADS_PER_DOC)
+DocumentTooLarge = _err("DocumentTooLarge", "document too large")
 KeywordRedefinition = _err("KeywordRedefinition", "keyword redefinition")
 LoadingDocumentFailed = _err("LoadingDocumentFailed", "loading document failed")
 LoadingRemoteContextFailed = _err(

@@ -62,10 +62,6 @@ def _node_ref(v) -> bool:
     return isinstance(v, dict) and set(v) == {"@id"}
 
 
-def _value_obj(v) -> bool:
-    return isinstance(v, dict) and "@value" in v
-
-
 def _list_obj(v) -> bool:
     return isinstance(v, dict) and "@list" in v
 

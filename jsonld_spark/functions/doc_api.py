@@ -18,7 +18,6 @@ from ..context import ContextCache
 from ..expand import expand_document
 from ..flatten import flatten_expanded
 from ..frame import frame_document
-from ..sources.html_jsonld import extract_jsonld
 
 DOC_RESULT_SCHEMA = T.StructType(
     [
@@ -37,32 +36,21 @@ def _doc_op_udf(op: Callable, cache_bc, max_html_bytes: int):
         # broadcast + per-process memo (udfs._get_cache) — shipping the
         # entries dict in the task closure would pay O(cache) pickling
         # per task and lose cross-task context-parse memoization
-        from ..udfs import _get_cache
+        from ..udfs import _get_cache, page_scripts
 
         entries = cache_bc.value if cache_bc is not None else None
         cache = _get_cache(entries, "doc-api")
         for pdf in batches:
             out = []
             for url, html in zip(pdf["url"], pdf["html"]):
-                if html is not None and len(html) > max_html_bytes:
-                    # same oversized-page guard as the fused triples UDF
-                    out.append(
-                        (url, -1, None,
-                         f"document too large: {len(html)} bytes > {max_html_bytes}")
-                    )
-                    continue
-                try:
-                    docs = extract_jsonld(html, url)
-                except Exception as e:  # noqa: BLE001
-                    out.append((url, -1, None, f"extract: {e}"))
-                    continue
-                for d in docs:
+                # the triples path's page-level steps: NULL skip, size
+                # gate, extract and invalid-script rows
+                for d in page_scripts(url, html, max_html_bytes):
                     if d.error:
                         out.append((url, d.script_index, None, d.error))
                         continue
                     try:
-                        doc = d.parsed
-                        res = op(doc, d.base or url, cache)
+                        res = op(d.parsed, d.base or url, cache)
                         out.append(
                             (url, d.script_index, json.dumps(res, sort_keys=True), None)
                         )

@@ -2,9 +2,9 @@
 
 Image/audio/video payloads are opaque ``binary`` columns with a typed
 metadata struct; decode / feature-extraction run as Arrow-batched
-``mapInPandas`` stages.  The actual codecs aren't available in this
-container, so decoding is STUBBED (clearly-marked ``NotImplementedError``
-or a deterministic fake) — the Spark-side plumbing (schema, batch shape,
+``mapInPandas`` stages.  No pixel codec is used: image dimensions
+come from header bytes (``parse_image_dims``), anything else gets a
+deterministic fake — the Spark-side plumbing (schema, batch shape,
 partition flow) is real and tested, which is the part that matters at
 100 TB: payload bytes stay columnar in Arrow; only metadata leaves the
 stage.
@@ -44,16 +44,6 @@ def attach_payload(docs: DataFrame) -> DataFrame:
         "doc_id",
         F.encode("text", "utf-8").alias("payload"),
         F.lit("application/octet-stream").alias("media_type"),
-    )
-
-
-def decode_image(payload: bytes):
-    """STUB: full pixel decode requires an image lib not present here.
-    Header-level metadata (format, width, height) IS implemented —
-    see ``parse_image_dims``."""
-    raise NotImplementedError(
-        "image pixel decode requires pillow/opencv; not available in this "
-        "runtime — parse_image_dims covers header metadata"
     )
 
 
@@ -188,7 +178,7 @@ FROM documents ORDER BY doc_id
 
 # Oracle for the mapInPandas feature stage: every output column is a
 # deterministic function of the payload bytes (md5-derived fake dims
-# stand in for the stubbed decode), so DuckDB can predict it exactly.
+# stand in for a pixel decode), so DuckDB can predict it exactly.
 # ASSUMPTION (ADVICE r6): the text-derived payloads this SQL mirrors
 # never BEGIN with a real image signature (PNG/GIF/JPEG/WEBP magic) —
 # extract_features would then real-parse dims while this oracle still

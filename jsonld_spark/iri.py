@@ -110,17 +110,6 @@ def is_blank_node_id(value) -> bool:
     return isinstance(value, str) and value.startswith("_:")
 
 
-def is_relative_iri(value) -> bool:
-    """Relative IRI-reference: a string that is neither absolute nor a
-    blank-node id nor a keyword."""
-    return (
-        isinstance(value, str)
-        and not is_absolute_iri(value)
-        and not is_blank_node_id(value)
-        and not is_keyword(value)
-    )
-
-
 def is_iri(value) -> bool:
     return is_absolute_iri(value) or is_blank_node_id(value)
 

@@ -47,18 +47,6 @@ def node_stats(triples: DataFrame) -> DataFrame:
     )
 
 
-def subject_objects(triples: DataFrame) -> DataFrame:
-    """groupBy(graph, subj).agg(collect_list(struct(...))) — the node map
-    as a relational value (reference from_rdf.rb:35-104 analog)."""
-    return triples.groupBy("graph", "subj").agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct("pred", "obj", "obj_is_literal", "obj_datatype", "obj_lang")
-            )
-        ).alias("po")
-    )
-
-
 def materialize_graphs(
     triples: DataFrame,
     ordered: bool = True,

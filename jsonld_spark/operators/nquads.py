@@ -97,10 +97,6 @@ def nquad_col(
     ).otherwise(F.concat_ws(" ", line, F.lit(".")))
 
 
-def with_nquads(triples: DataFrame, col_name: str = "nquad") -> DataFrame:
-    return triples.withColumn(col_name, nquad_col())
-
-
 NQ_TRIPLES_SCHEMA = (
     "subj string, pred string, obj string, obj_is_literal boolean,"
     " obj_datatype string, obj_lang string, graph string"

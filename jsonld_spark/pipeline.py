@@ -35,6 +35,18 @@ from .udfs import TRIPLES_SCHEMA, make_pages_to_triples
 
 log = logging.getLogger(__name__)
 
+# JVM pre-filter in front of the Arrow crossing: only pages whose html
+# contains the case-folded ``ld+json`` substring reach Python.  NULL
+# html fails it — the same zero rows as the Python path.  CAST, not
+# decode(): Spark 4's decode() throws MALFORMED_CHARACTER_CODING on
+# invalid UTF-8 — and a real crawl (this filter's whole target) always
+# contains such pages — while binary→string cast is validation-free and
+# byte-preserving, so the ASCII 'ld+json' substring test sees exactly
+# the raw bytes (the Python scanner decodes with errors='replace', which
+# can never CREATE ascii letters, so cast-contains never false-negatives
+# against it).
+LDJSON_PREFILTER = "contains(lower(cast(html as string)), 'ld+json')"
+
 LINEAGE_COLS = [
     "run_id",
     "part_id",
@@ -163,7 +175,9 @@ class KGPipeline:
         lacks the (case-folded) ``ld+json`` substring cannot produce a
         single row from the scanner (sources/html_jsonld.py requires
         ``type="application/ld+json"``, case-insensitive, and a page
-        with no script block yields zero rows — udfs.py page_to_rows),
+        with no script block yields zero rows — udfs.iter_page_rows,
+        the one page loop of both the batch UDF and the streaming
+        reader),
         so filtering it JVM-side is semantically transparent while
         deleting the dominant cost at crawl scale: most real pages
         carry no JSON-LD, and without the filter every one of them pays
@@ -186,19 +200,7 @@ class KGPipeline:
         # column pruning: only url+html cross the Arrow boundary
         src = pages.select("url", "html")
         if skip_scriptless:
-            # NULL html fails the predicate → filtered, same zero-row
-            # outcome as the Python path.  CAST, not decode(): Spark 4's
-            # decode() throws MALFORMED_CHARACTER_CODING on invalid
-            # UTF-8 — and a real crawl (this filter's whole target)
-            # always contains such pages — while binary→string cast is
-            # validation-free and byte-preserving, so the ASCII
-            # 'ld+json' substring test sees exactly the raw bytes (the
-            # Python scanner decodes with errors='replace', which can
-            # never CREATE ascii letters, so cast-contains never
-            # false-negatives against it).
-            src = src.filter(
-                F.expr("contains(lower(cast(html as string)), 'ld+json')")
-            )
+            src = src.filter(F.expr(LDJSON_PREFILTER))
         # small-input parallelism: a one-split derived frame would run
         # the whole Python stage on one core (no-op at crawl scale —
         # see parallelize_small_input)
@@ -244,9 +246,9 @@ class KGPipeline:
         streaming/reader.py's error-semantics note); url is the identity
         quads and error rows share, so the anti-join retracts a failed
         document's partial quads page-wide.  ``warning:`` rows are NOT
-        failures — page_to_rows emits them alongside a page's triples as
-        observability (dropped keys, malformed tags) and its contract is
-        explicit that warnings never suppress output; only real error
+        failures — the page loop (udfs.iter_page_rows) emits them after
+        a script's triples as observability (dropped keys, malformed
+        tags), and warnings never suppress output; only real error
         rows put a url in the failed set.  The error-side projection is
         thin (url only) and typically broadcasts."""
         failed = (

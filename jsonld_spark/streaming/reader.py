@@ -34,12 +34,15 @@ recurring in several elements re-emits its quads (the batch path's
 whole-document node map dedups them); RDF set semantics make the
 repeats harmless and the pipeline's dropDuplicates absorbs them.
 
-Error semantics: AT-LEAST-PARTIAL emission.  When a document fails
-mid-spine, quads already streamed out for earlier elements (flushed
-Arrow chunks and rows still buffered) remain in the output alongside
-the error row — a bounded-memory pass cannot retract what it already
-emitted without buffering the whole document, which is the batch path.
-(The batch ``page_to_rows`` is all-or-nothing per document.)  Downstream
+Error semantics: AT-LEAST-PARTIAL emission.  The reader's UDF runs the
+batch path's own page loop (``udfs.iter_page_rows``: the same error,
+warning and salting rows); the ONLY difference is that its quad source
+is this generator where the batch path's is a list.  So when a document
+fails mid-spine, quads already streamed out for earlier elements
+(flushed Arrow chunks and rows still buffered) remain in the output
+alongside the error row — a bounded-memory pass cannot retract what it
+already emitted without buffering the whole document, which is the
+batch path (all-or-nothing per document, and html-size gated).  Downstream
 that needs batch-equivalent strictness anti-joins the triples on ``url``
 against the error rows (``drop_failed_pages``): the url is the identity
 both row kinds share, so a failed document's partial quads are dropped
@@ -52,7 +55,6 @@ from typing import Iterator
 
 from .. import errors as err
 from ..context import Context, ContextCache
-from ..errors import JsonLdError
 from ..iri import is_keyword
 from ..expand import ExpandOptions, expand
 from ..flatten import BlankNodeNamer, create_node_map
@@ -543,100 +545,27 @@ def make_streaming_pages_to_triples(
     chunk_rows: int = 50_000,
     rdfstar: bool = False,
 ):
-    """mapInPandas factory for giant-document crawls: quads stream out in
-    ≤``chunk_rows`` Arrow batches, so one multi-million-quad page cannot
-    balloon the Python worker (the batch path materializes each page's
-    full quad list before the first row leaves the UDF)."""
-    import json as _json
+    """mapInPandas factory for giant-document crawls: the batch path's
+    page loop (``udfs.pages_fn`` / ``udfs.iter_page_rows``) fed by
+    ``stream_doc_quads``, so quads stream out in ≤``chunk_rows`` Arrow
+    batches and one multi-million-quad page cannot balloon the Python
+    worker (the batch path materializes each script's full quad list
+    before its first row leaves the UDF).  No html-size gate: giant
+    pages are what this reader is for."""
+    from ..udfs import iter_page_rows, pages_fn
 
-    import pandas as pd
+    def script_quads(doc, base, cache, warnings):
+        return stream_doc_quads(
+            doc,
+            base=base,
+            cache=cache,
+            rdf_direction=rdf_direction,
+            produce_generalized_rdf=produce_generalized_rdf,
+            warnings_out=warnings,
+            rdfstar=rdfstar,
+        )
 
-    from ..sources.html_jsonld import extract_jsonld
-    from ..udfs import TRIPLE_COLS, _get_cache, salt_bnode, salt_quad_to_row
+    def page_rows(url, html, cache):
+        return iter_page_rows(url, html, cache, script_quads)
 
-    def fn(batches):
-        entries = cache_bc.value if cache_bc is not None else None
-        cache = _get_cache(entries, cache_version)
-        out: list[tuple] = []
-
-        def flush():
-            nonlocal out
-            chunk = pd.DataFrame(out, columns=TRIPLE_COLS)
-            out = []
-            return chunk
-
-        for pdf in batches:
-            for url, html in zip(pdf["url"].to_numpy(), pdf["html"].to_numpy()):
-                if html is None:
-                    continue
-                try:
-                    docs = extract_jsonld(html, url)
-                except Exception as e:  # noqa: BLE001 — page must not kill worker
-                    out.append(
-                        (url, None, None, None, None, None, None, None, f"extract: {e}")
-                    )
-                    continue
-                for d in docs:
-                    if d.error:
-                        out.append(
-                            (url, None, None, None, None, None, None, None, d.error)
-                        )
-                        continue
-                    si = d.script_index
-                    # one sha256 per DISTINCT label per doc (matches the
-                    # batch path's per-doc memo)
-                    salted: dict = {}
-
-                    def _salt(label, _u=url, _si=si, _m=salted):
-                        v = _m.get(label)
-                        if v is None:
-                            v = salt_bnode(_u, _si, label)
-                            _m[label] = v
-                        return v
-
-                    warnings: list = []
-                    try:
-                        doc = (
-                            d.parsed
-                            if d.parsed is not None
-                            else _json.loads(d.json_text)
-                        )
-                        for q in stream_doc_quads(
-                            doc,
-                            base=d.base or url,
-                            cache=cache,
-                            rdf_direction=rdf_direction,
-                            produce_generalized_rdf=produce_generalized_rdf,
-                            rdfstar=rdfstar,
-                            warnings_out=warnings,
-                        ):
-                            # shared row builder = the batch path's
-                            # exact salting rules (udfs.salt_quad_to_row)
-                            out.append(salt_quad_to_row(url, si, q, _salt))
-                            if len(out) >= chunk_rows:
-                                yield flush()
-                        # warning rows AFTER a successful stream, deduped
-                        # — the batch path's observability contract
-                        for w in dict.fromkeys(warnings):
-                            out.append(
-                                (url, None, None, None, None, None, None,
-                                 None, f"warning: {w}")
-                            )
-                    except JsonLdError as e:
-                        out.append(
-                            (url, None, None, None, None, None, None, None, e.code)
-                        )
-                    except RecursionError:
-                        out.append(
-                            (url, None, None, None, None, None, None, None,
-                             "recursion limit")
-                        )
-                    except Exception as e:  # noqa: BLE001
-                        out.append(
-                            (url, None, None, None, None, None, None, None,
-                             f"internal: {e}")
-                        )
-            if out:
-                yield flush()
-
-    return fn
+    return pages_fn(cache_bc, cache_version, page_rows, chunk_rows)

@@ -100,7 +100,7 @@ def stream_pages_to_triples(
     against the error rows on url, exactly
     ``KGPipeline.drop_failed_pages`` (see streaming/reader.py's
     error-semantics note)."""
-    from ..pipeline import KGPipeline
+    from ..pipeline import LDJSON_PREFILTER, KGPipeline
 
     pages = read_pages_stream(spark, pages_dir)
     if dedup_watermark:
@@ -113,12 +113,9 @@ def stream_pages_to_triples(
         fn = make_streaming_pages_to_triples(
             pipe.cache_bc, cache_version, rdfstar=rdfstar
         )
-        src = pages.select("url", "html").filter(
-            # same JVM pre-filter the batch path applies in extract():
-            # scriptless pages in a micro-batch never cross to Python.
-            # cast, not decode() — crawl html can be invalid UTF-8
-            F.expr("contains(lower(cast(html as string)), 'ld+json')")
-        )
+        # the batch path's extract() pre-filter: scriptless pages in a
+        # micro-batch never cross to Python
+        src = pages.select("url", "html").filter(F.expr(LDJSON_PREFILTER))
         extracted = src.mapInPandas(fn, TRIPLES_SCHEMA)
     else:
         # extract()'s skip_scriptless pre-filter applies to streaming

@@ -6,6 +6,16 @@ emit quads → salt blank-node labels.  Each document crosses the Arrow
 boundary exactly once (SURVEY.md §4 item 5); everything downstream of
 this stage is relational (JVM-side, whole-stage codegen).
 
+The stage is one loop, written once: ``pages_fn`` (the mapInPandas
+loop) drives ``iter_page_rows`` (the per-page row and error loop) for
+both the batch path (``make_pages_to_triples``) and the bounded
+streaming reader (``streaming.reader.make_streaming_pages_to_triples``).
+The two differ only in their quad source, the function that turns one
+parsed script into quads: the batch path's ``doc_to_quads`` list
+(size-guarded and canonically relabeled) versus the reader's
+``stream_doc_quads`` generator.  The doc API (functions/doc_api.py)
+shares the page-level half, ``page_scripts``.
+
 Blank-node identity at cluster scale: doc-local labels (``_:b0``…) are
 rewritten to ``_:h<sha256(url ‖ script_index ‖ label)>`` inside the UDF.
 Deterministic given the row, so re-running a partition after failure
@@ -18,18 +28,23 @@ cluster-wide.
 from __future__ import annotations
 
 import hashlib
-import json
-import re as _re
-from typing import Iterator
+from typing import Callable, Iterable, Iterator
 
 from pyspark.sql import types as T
 
 from .canon import canonicalize_quads
 from .context import ContextCache
-from .errors import JsonLdError
+from .errors import DocumentTooLarge, JsonLdError
 from .rdf_model import XSD_STRING, Quad
-from .sources.html_jsonld import extract_jsonld
+from .sources.html_jsonld import ExtractedDoc, extract_jsonld
 from .to_rdf import doc_to_quads
+
+# A batch-path script whose quad list exceeds this becomes a
+# ``document too large`` row instead of its triples.
+MAX_QUADS_PER_DOC = 100_000
+
+# Most rows one frame of the mapInPandas loop carries.
+CHUNK_ROWS = 50_000
 
 # Output schema of the fused page→triples stage.  ``error`` is NULL on
 # triple rows; error rows carry NULL subj/pred/obj.
@@ -88,13 +103,11 @@ def _salt_quoted_term(url: str, script_index: int, term: str) -> str:
     return _map_quoted(term, lambda b: salt_bnode(url, script_index, b))
 
 
-def salt_quad_to_row(url: str, si: int, q: "Quad", salt) -> tuple:
-    """One output row with doc-scoped bnode salting — the SINGLE
-    definition of the salting rules; the batch UDF (page_to_rows) and
-    the streaming reader both call this so batch/streaming parity
-    cannot drift.  Schema convention: NULL obj_datatype + obj_is_literal
-    ⇒ xsd:string (a validity bit instead of a 40-byte string per row
-    through Arrow, shuffle and parquet)."""
+def salt_quad_to_row(url: str, si: int, q: Quad, salt) -> tuple:
+    """One output row with doc-scoped bnode salting.  Schema convention:
+    NULL obj_datatype + obj_is_literal ⇒ xsd:string (a validity bit
+    instead of a 40-byte string per row through Arrow, shuffle and
+    parquet)."""
     dt = None if q.obj_datatype == XSD_STRING else q.obj_datatype
     s = salt(q.subj) if q.subj.startswith("_:") else q.subj
     if s.startswith("<<"):
@@ -115,85 +128,61 @@ def salt_quad_to_row(url: str, si: int, q: "Quad", salt) -> tuple:
     return (url, s, p, o, q.obj_is_literal, dt, q.obj_lang, g, None)
 
 
-def page_to_rows(
+def _error_row(url: str, error: str) -> tuple:
+    return (url, None, None, None, None, None, None, None, error)
+
+
+def page_scripts(
+    url: str, html, max_html_bytes: int | None = None
+) -> list[ExtractedDoc]:
+    """The page-level half of the per-page loop, shared by the triples
+    loop and the doc API: the page's ld+json scripts, each either parsed
+    (``error`` None, ``parsed`` set) or an invalid-script error.  NULL
+    html has no scripts.  A page over ``max_html_bytes`` UTF-8 bytes
+    (``None``: no gate) or one the extractor chokes on comes back as a
+    single page-level error with script index -1."""
+    if html is None:
+        return []
+    if max_html_bytes is not None:
+        n_bytes = len(html)
+        if isinstance(html, str) and n_bytes > max_html_bytes // 4:
+            # str input measures CHARS; a mostly-multibyte page could be
+            # up to 4x the char count in bytes.  chars <= budget/4
+            # provably fits; only the gray zone pays an encode to
+            # measure exactly.
+            n_bytes = len(html.encode("utf-8", "replace"))
+        if n_bytes > max_html_bytes:
+            # cheap pre-parse gate: a pathological multi-hundred-MB page
+            # would otherwise be JSON-parsed wholesale inside the worker
+            # (the MAX_QUADS_PER_DOC guard fires only AFTER the memory
+            # is spent)
+            msg = f"document too large: {n_bytes} bytes > {max_html_bytes}"
+            return [ExtractedDoc("", None, -1, msg)]
+    try:
+        return extract_jsonld(html, url)
+    except Exception as e:  # noqa: BLE001 — malformed page must not kill executor
+        return [ExtractedDoc("", None, -1, f"extract: {e}")]
+
+
+def iter_page_rows(
     url: str,
     html,
     cache: ContextCache,
-    rdf_direction: str | None = None,
-    max_quads_per_doc: int = 100_000,
-    produce_generalized_rdf: bool = False,
-    canonical_bnodes: bool = True,
-    emit_warnings: bool = True,
-    max_html_bytes: int = 64_000_000,
-    rdfstar: bool = False,
-) -> list[tuple]:
-    """All triple/error rows for one page (pure Python — unit-testable
-    without Spark).  Expansion warnings (dropped keys, malformed
-    language tags) become ``warning:``-prefixed error rows alongside the
-    page's triples — observability without suppressing output."""
-    rows: list[tuple] = []
-    if html is None:
-        return rows
-    n_bytes = len(html)
-    if isinstance(html, str) and n_bytes > max_html_bytes // 4:
-        # str input measures CHARS; a mostly-multibyte page could be up
-        # to 4x the char count in bytes.  chars <= budget/4 provably
-        # fits; only the gray zone pays an encode to measure exactly.
-        n_bytes = len(html.encode("utf-8", "replace"))
-    if n_bytes > max_html_bytes:
-        # cheap pre-parse gate: a pathological multi-hundred-MB page would
-        # otherwise be JSON-parsed wholesale inside the worker (the
-        # max_quads_per_doc guard fires only AFTER the memory is spent)
-        return [
-            (url, None, None, None, None, None, None, None,
-             f"document too large: {n_bytes} bytes > {max_html_bytes}")
-        ]
-    try:
-        docs = extract_jsonld(html, url)
-    except Exception as e:  # noqa: BLE001 — malformed page must not kill executor
-        return [(url, None, None, None, None, None, None, None, f"extract: {e}")]
-    for d in docs:
+    script_quads: Callable[[object, str, ContextCache, list], Iterable[Quad]],
+    max_html_bytes: int | None = None,
+) -> Iterator[tuple]:
+    """THE per-page row loop: page-level and invalid-script error rows,
+    then per script the quads ``script_quads(doc, base, cache,
+    warnings_out)`` produces as salted triple rows, followed by the
+    script's deduped ``warning:`` rows — observability that never
+    suppresses output.  A script that raises yields one error row
+    (``JsonLdError`` → its code) after whatever rows it already
+    produced: none when ``script_quads`` returns a list, some when it
+    is a generator."""
+    for d in page_scripts(url, html, max_html_bytes):
         if d.error:
-            rows.append((url, None, None, None, None, None, None, None, d.error))
+            yield _error_row(url, d.error)
             continue
-        try:
-            doc = d.parsed if d.parsed is not None else json.loads(d.json_text)
-            warnings: list = []
-            quads = doc_to_quads(
-                doc,
-                base=d.base or url,
-                cache=cache,
-                rdf_direction=rdf_direction,
-                produce_generalized_rdf=produce_generalized_rdf,
-                warnings_out=warnings,
-                rdfstar=rdfstar,
-            )
-        except JsonLdError as e:
-            rows.append((url, None, None, None, None, None, None, None, e.code))
-            continue
-        except RecursionError:
-            rows.append(
-                (url, None, None, None, None, None, None, None, "recursion limit")
-            )
-            continue
-        except Exception as e:  # noqa: BLE001
-            rows.append((url, None, None, None, None, None, None, None, f"internal: {e}"))
-            continue
-        if len(quads) > max_quads_per_doc:
-            rows.append(
-                (url, None, None, None, None, None, None, None, "document too large")
-            )
-            continue
-        if emit_warnings:
-            for w in dict.fromkeys(warnings):  # dedup, keep order
-                rows.append(
-                    (url, None, None, None, None, None, None, None, f"warning: {w}")
-                )
-        if canonical_bnodes:
-            # URDNA2015-style relabel: labels become a function of the
-            # graph, not the JSON key order → the salted global ID of a
-            # bnode is stable across re-serializations of the same content
-            quads = canonicalize_quads(quads)
         si = d.script_index
         # one sha256 per DISTINCT label per doc, not per occurrence — a
         # bnode typically appears in several quads
@@ -206,9 +195,88 @@ def page_to_rows(
                 _m[label] = s
             return s
 
-        for q in quads:
-            rows.append(salt_quad_to_row(url, si, q, _salt))
-    return rows
+        warnings: list = []
+        try:
+            for q in script_quads(d.parsed, d.base or url, cache, warnings):
+                yield salt_quad_to_row(url, si, q, _salt)
+        except JsonLdError as e:
+            yield _error_row(url, e.code)
+            continue
+        except RecursionError:
+            yield _error_row(url, "recursion limit")
+            continue
+        except Exception as e:  # noqa: BLE001
+            yield _error_row(url, f"internal: {e}")
+            continue
+        for w in dict.fromkeys(warnings):  # dedup, keep order
+            yield _error_row(url, f"warning: {w}")
+
+
+def page_to_rows(
+    url: str,
+    html,
+    cache: ContextCache,
+    rdf_direction: str | None = None,
+    produce_generalized_rdf: bool = False,
+    canonical_bnodes: bool = True,
+    max_html_bytes: int = 64_000_000,
+    rdfstar: bool = False,
+) -> list[tuple]:
+    """All triple/error rows for one page of the batch path (pure Python
+    — unit-testable without Spark).  Each script's quads are a list
+    built before its first row, so a script yields all of its rows or
+    only an error row."""
+
+    def script_quads(doc, base, cache, warnings):
+        quads = doc_to_quads(
+            doc,
+            base=base,
+            cache=cache,
+            rdf_direction=rdf_direction,
+            produce_generalized_rdf=produce_generalized_rdf,
+            warnings_out=warnings,
+            rdfstar=rdfstar,
+        )
+        if len(quads) > MAX_QUADS_PER_DOC:
+            raise DocumentTooLarge(f"{len(quads)} quads > {MAX_QUADS_PER_DOC}")
+        if canonical_bnodes:
+            # URDNA2015-style relabel: labels become a function of the
+            # graph, not the JSON key order → the salted global ID of a
+            # bnode is stable across re-serializations of the same content
+            quads = canonicalize_quads(quads)
+        return quads
+
+    return list(iter_page_rows(url, html, cache, script_quads, max_html_bytes))
+
+
+def pages_fn(
+    cache_bc,
+    cache_version: str,
+    page_rows: Callable[[str, object, ContextCache], Iterable[tuple]],
+    chunk_rows: int,
+):
+    """THE mapInPandas loop: ``page_rows(url, html, cache)`` over every
+    page, rows leaving in frames of at most ``chunk_rows``, flushed at
+    the end of each input batch.  ``cache_bc`` is a Spark broadcast of
+    the raw context-cache dict (url → context JSON)."""
+    import pandas as pd
+
+    def fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        entries = cache_bc.value if cache_bc is not None else None
+        cache = _get_cache(entries, cache_version)
+        out: list[tuple] = []
+        for pdf in batches:
+            for url, html in zip(pdf["url"].to_numpy(), pdf["html"].to_numpy()):
+                for row in page_rows(url, html, cache):
+                    out.append(row)
+                    if len(out) >= chunk_rows:
+                        yield pd.DataFrame(out, columns=TRIPLE_COLS)
+                        out = []
+            if out:
+                yield pd.DataFrame(out, columns=TRIPLE_COLS)
+                out = []
+
+    return fn
 
 
 def make_pages_to_triples(
@@ -220,50 +288,18 @@ def make_pages_to_triples(
     max_html_bytes: int = 64_000_000,
     rdfstar: bool = False,
 ):
-    """Build the mapInPandas function.  ``cache_bc`` is a Spark broadcast
-    of the raw context-cache dict (url → context JSON)."""
-    import pandas as pd
+    """Build the batch mapInPandas function (see ``pages_fn``)."""
 
-    def fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        entries = cache_bc.value if cache_bc is not None else None
-        cache = _get_cache(entries, cache_version)
-        for pdf in batches:
-            out: list[tuple] = []
-            urls = pdf["url"].to_numpy()
-            htmls = pdf["html"].to_numpy()
-            for url, html in zip(urls, htmls):
-                out.extend(
-                    page_to_rows(
-                        url,
-                        html,
-                        cache,
-                        rdf_direction,
-                        produce_generalized_rdf=produce_generalized_rdf,
-                        canonical_bnodes=canonical_bnodes,
-                        max_html_bytes=max_html_bytes,
-                        rdfstar=rdfstar,
-                    )
-                )
-            yield pd.DataFrame(out, columns=TRIPLE_COLS)
-
-    return fn
-
-
-def rows_to_quads(rows) -> list[Quad]:
-    """Triple rows (without url/error) back into Quad tuples — test helper.
-    Restores the NULL-datatype ⇒ xsd:string convention."""
-    return [
-        Quad(
-            r.subj,
-            r.pred,
-            r.obj,
-            r.obj_is_literal,
-            (r.obj_datatype if r.obj_datatype is not None else XSD_STRING)
-            if r.obj_is_literal and r.obj_lang is None
-            else r.obj_datatype,
-            r.obj_lang,
-            r.graph,
+    def page_rows(url, html, cache):
+        return page_to_rows(
+            url,
+            html,
+            cache,
+            rdf_direction,
+            produce_generalized_rdf=produce_generalized_rdf,
+            canonical_bnodes=canonical_bnodes,
+            max_html_bytes=max_html_bytes,
+            rdfstar=rdfstar,
         )
-        for r in rows
-        if r.subj is not None
-    ]
+
+    return pages_fn(cache_bc, cache_version, page_rows, CHUNK_ROWS)

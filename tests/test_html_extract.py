@@ -159,6 +159,33 @@ def test_doc_pages_template_escapes_dirty_fields(spark):
     assert vals.get("source") == 'a"b\\'
 
 
+def _doc_api_rows(pages, max_html_bytes=64_000_000):
+    """Drive the doc API's mapInPandas function in-process (no Spark)."""
+    import pandas as pd
+
+    from jsonld_spark.functions.doc_api import _doc_op_udf
+
+    fn = _doc_op_udf(lambda doc, base, cache: doc, None, max_html_bytes)
+    frames = fn(iter([pd.DataFrame(pages, columns=["url", "html"])]))
+    return [r for f in frames for r in f.itertuples(index=False, name=None)]
+
+
+def test_doc_api_null_html_yields_no_rows():
+    """A NULL-html page has no scripts — no rows, as on the triples path
+    (not an ``extract:`` error row)."""
+    assert _doc_api_rows([("http://ex.org/null", None)]) == []
+
+
+def test_doc_api_size_gate_counts_utf8_bytes():
+    """The size gate counts UTF-8 bytes like the triples path: 40 × 'é'
+    is 40 chars but 80 bytes, over a 50-byte gate."""
+    html = "é" * 40
+    assert _doc_api_rows([("http://ex.org/e", html)], max_html_bytes=50) == [
+        ("http://ex.org/e", -1, None, "document too large: 80 bytes > 50")
+    ]
+    assert _doc_api_rows([("http://ex.org/e", html)], max_html_bytes=80) == []
+
+
 def test_extract_links_resolution(spark):
     from jsonld_spark.sources.html_jsonld import extract_links
 

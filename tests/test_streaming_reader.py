@@ -210,6 +210,18 @@ def test_streaming_spark_parity(spark):
             '<script type="application/ld+json">' + json.dumps(doc) + "</script>"
         ).encode()
         rows.append((f"http://site.e/{i}", html))
+    # error and warning rows must agree too: NULL html, a malformed
+    # script, an unknown remote context, a dropped @foo key
+    rows += [
+        ("http://site.e/null", None),
+        ("http://site.e/bad", b'<script type="application/ld+json">{"@id": </script>'),
+    ]
+    for url, doc in [
+        ("http://site.e/remote", {"@context": "http://unknown.e/ctx", "@id": "http://e/r"}),
+        ("http://site.e/foo", {"@context": CTX, "@graph": [{**_entity(0), "@foo": 1}]}),
+    ]:
+        html = '<script type="application/ld+json">' + json.dumps(doc) + "</script>"
+        rows.append((url, html.encode()))
     pages = spark.createDataFrame(rows, "url string, html binary")
 
     fn = make_streaming_pages_to_triples(None, chunk_rows=7)
@@ -223,6 +235,11 @@ def test_streaming_spark_parity(spark):
     b = {tuple(r) for r in batch.select(cols).collect()}
     assert s == b
     assert len(s) > 0
+    errors = {(r[0], r[-1]) for r in b if r[-1] is not None}
+    assert ("http://site.e/bad", "invalid script element") in errors
+    assert ("http://site.e/remote", "loading remote context failed") in errors
+    assert any(u == "http://site.e/foo" and e.startswith("warning:") for u, e in errors)
+    assert not any(r[0] == "http://site.e/null" for r in b)
 
 
 def test_json_typed_array_streams_as_one_literal():
