@@ -341,7 +341,6 @@ def forward_chain(
     rules,
     *,
     max_iter: int = 20,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Forward-chaining rule materialization (datalog-style saturation):
     each rule is ``(body_patterns, head_templates)`` — body a BGP, head
@@ -355,8 +354,10 @@ def forward_chain(
     (new facts), so work per round is proportional to what changed —
     the standard datalog optimization, without which every round would
     re-derive everything.  New facts are isolated with a left-anti join
-    against the known set; rounds checkpoint (reliable) to truncate the
-    growing lineage; stops when a round derives nothing new.
+    against the known set; every round checkpoints (reliable) its new
+    facts, so the known set is a union of checkpoint scans and the
+    lineage stays one level deep however many rounds run; stops when a
+    round derives nothing new.
 
     Returns the saturated (subj, pred, obj) set (DISTINCT).  Output
     size is the materialized entailment — for ontology-shaped rules
@@ -373,8 +374,7 @@ def forward_chain(
         triples.select("subj", "pred", "obj").distinct().checkpoint()
     )
     return _saturate(
-        known, known, rules, full_first_round=True,
-        max_iter=max_iter, checkpoint_every=checkpoint_every,
+        known, known, rules, full_first_round=True, max_iter=max_iter
     )
 
 
@@ -384,14 +384,15 @@ def forward_chain_incremental(
     rules,
     *,
     max_iter: int = 20,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Incremental entailment MAINTENANCE: given an already-saturated
     fact set and a batch of new facts (e.g. the '+' side of
     :func:`~jsonld_spark.operators.graph.graph_diff` after a recrawl),
     derive only what the new facts entail — every round, including the
     first, is delta-restricted, so the cost scales with the update,
-    not the knowledge base.  Returns the new saturated set.
+    not the knowledge base.  Rounds checkpoint their new facts as in
+    :func:`forward_chain`, so lineage stays bounded the same way.
+    Returns the new saturated set.
 
     (Additions only — datalog is monotone, so added facts never
     invalidate old conclusions; RETRACTIONS need delete/re-derive
@@ -414,8 +415,7 @@ def forward_chain_incremental(
         return base.checkpoint()
     known = base.union(new_facts).checkpoint()
     return _saturate(
-        known, new_facts, rules, full_first_round=False,
-        max_iter=max_iter, checkpoint_every=checkpoint_every,
+        known, new_facts, rules, full_first_round=False, max_iter=max_iter
     )
 
 
@@ -426,7 +426,6 @@ def _saturate(
     *,
     full_first_round: bool,
     max_iter: int,
-    checkpoint_every: int,
 ) -> DataFrame:
     """Shared semi-naive saturation loop (see the two public entry
     points for semantics)."""
@@ -468,8 +467,7 @@ def _saturate(
                 derived = d if derived is None else derived.union(d)
         new = derived.distinct().join(
             known, on=["subj", "pred", "obj"], how="left_anti"
-        )
-        new = new.checkpoint() if (rnd + 1) % checkpoint_every == 0 else new
+        ).checkpoint()
         if new.isEmpty():
             break
         # known = initial ∪ the per-round checkpointed deltas: every leg

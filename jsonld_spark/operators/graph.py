@@ -12,7 +12,10 @@ jumping, which converges in O(log diameter) rounds, with a reliable
 unrecoverable when an executor is lost, failing the whole job on a real
 cluster.  Mega-component skew on the ``groupBy(id)`` min is left to AQE
 skew handling plus the two-stage partial aggregation Spark already
-performs for ``min``."""
+performs for ``min``.  Both paths label the vertex values themselves
+(IRIs, or long doc ids): dense-long dictionary encoding measured a wash
+on the distributed path (BENCH.md round 3) and would only put a sort, a
+checkpoint and two decode joins in front of the driver union-find."""
 
 from __future__ import annotations
 
@@ -75,7 +78,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 25,
-    dictionary_encode: bool = False,
 ) -> DataFrame:
     """→ DataFrame(id, comp): every vertex labeled with the lexicographic
     minimum IRI of its component (the canonical representative).  The
@@ -98,22 +100,7 @@ def connected_components(
     * otherwise: min-label propagation with pointer jumping, one
       reliable checkpoint per round (every-round checkpointing beat
       every 2nd round in an interleaved A/B on an 800k-page crawl,
-      22.4/22.5/24.8 s vs 23.8/26.0/27.0 s).
-
-    ``dictionary_encode=True`` assigns each vertex a dense 8-byte id in
-    LEXICOGRAPHIC IRI ORDER (one global sort via a window rank) and runs
-    every iteration on longs; the result decodes back to IRIs at the
-    end.  Order preservation keeps the semantics identical: min-id ==
-    min-IRI.  The trade: one sort + two decode joins buys O(log d)
-    rounds whose shuffles, checkpoints and min-aggregations move 8-byte
-    longs instead of IRIs.  Interleaved A/B on the 800k-edge bench
-    subset (short ~25-byte synthetic IRIs, 2 reps each): a WASH locally
-    (23.3/22.7 s encoded vs 24.0/20.1 s plain — within VM noise), so
-    the default stays False; the knob is for crawls whose IRIs run
-    50-100+ bytes and whose alias graphs need more rounds, where the
-    per-round byte savings dominate the one-time encode."""
-    if dictionary_encode:
-        return _connected_components_encoded(edges, src, dst, max_iter)
+      22.4/22.5/24.8 s vs 23.8/26.0/27.0 s)."""
     _ensure_checkpoint_dir(edges)
     sym = edges.select(
         F.col(src).alias("a"), F.col(dst).alias("b")
@@ -167,7 +154,7 @@ def connected_components(
         msgs = sym.join(labels, sym.a == labels.id).select(
             F.col("b").alias("id"),
             F.col("comp"),
-            # typed to comp (CC also runs on dictionary-encoded longs)
+            # typed to comp (CC also labels text.dedup_groups' long doc ids)
             F.lit(None).cast(labels.schema["comp"].dataType).alias("_old"),
         )
         new_labels = (
@@ -286,60 +273,15 @@ def dense_ids_by_sorted_order(df: DataFrame, col: str = "iri") -> DataFrame:
     )
 
 
-def _connected_components_encoded(
-    edges: DataFrame, src: str, dst: str, max_iter: int
-) -> DataFrame:
-    """Dictionary-encoded CC: vertices → dense longs in lexicographic
-    order, iterate on longs, decode once at the end."""
-    _ensure_checkpoint_dir(edges)
-    verts = (
-        edges.select(F.col(src).alias("iri"))
-        .union(edges.select(F.col(dst).alias("iri")))
-        .distinct()
-    )
-    # order-preserving dense ids, assigned WITHOUT a global-sort window
-    # (min-id == min-IRI semantics need only sorted-order assignment)
-    vert_ids = dense_ids_by_sorted_order(verts, "iri").checkpoint()
-
-    e_src = vert_ids.select(F.col("iri").alias("_s"), F.col("vid").alias("src_id"))
-    e_dst = vert_ids.select(F.col("iri").alias("_d"), F.col("vid").alias("dst_id"))
-    enc_edges = (
-        edges.join(e_src, edges[src] == e_src._s)
-        .join(e_dst, edges[dst] == e_dst._d)
-        .select("src_id", "dst_id")
-    )
-    labels = connected_components(
-        enc_edges, src="src_id", dst="dst_id", max_iter=max_iter
-    )
-    id_map = vert_ids.select(F.col("vid").alias("id"), F.col("iri").alias("id_iri"))
-    comp_map = vert_ids.select(
-        F.col("vid").alias("comp"), F.col("iri").alias("comp_iri")
-    )
-    return (
-        labels.join(id_map, "id")
-        .join(comp_map, "comp")
-        .select(F.col("id_iri").alias("id"), F.col("comp_iri").alias("comp"))
-    )
-
-
-def canonical_mapping(
-    edges: DataFrame, max_iter: int = 25, dictionary_encode: bool = False
-) -> DataFrame:
+def canonical_mapping(edges: DataFrame) -> DataFrame:
     """→ DataFrame(iri, canon) for IRIs whose canonical form differs."""
-    labels = connected_components(
-        edges, max_iter=max_iter, dictionary_encode=dictionary_encode
-    )
+    labels = connected_components(edges)
     return labels.filter(F.col("id") != F.col("comp")).select(
         F.col("id").alias("iri"), F.col("comp").alias("canon")
     )
 
 
-def link_entities(
-    triples: DataFrame,
-    mapping: DataFrame,
-    *,
-    broadcast: bool | None = None,
-) -> DataFrame:
+def link_entities(triples: DataFrame, mapping: DataFrame) -> DataFrame:
     """Rewrite subj/obj through the canonical-IRI mapping.
 
     The mapping (alias table) is small relative to the triples at crawl
@@ -348,15 +290,14 @@ def link_entities(
     the whole CC job just to pick a join strategy).  A mapping from a
     broadcast-sized alias graph is a local relation of known size, so
     the join broadcasts it up front; a larger one comes off the CC
-    round checkpoints, and AQE sizes it at runtime.  ``broadcast=True`` forces the hint when the
-    caller already knows the mapping is small.
+    round checkpoints, and AQE sizes it at runtime.
     """
-    m = F.broadcast(mapping) if broadcast else mapping
-
-    subj_map = m.select(
+    subj_map = mapping.select(
         F.col("iri").alias("s_iri"), F.col("canon").alias("s_canon")
     )
-    obj_map = m.select(F.col("iri").alias("o_iri"), F.col("canon").alias("o_canon"))
+    obj_map = mapping.select(
+        F.col("iri").alias("o_iri"), F.col("canon").alias("o_canon")
+    )
 
     out = (
         triples.join(subj_map, triples.subj == subj_map.s_iri, "left")

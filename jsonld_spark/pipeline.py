@@ -47,6 +47,14 @@ log = logging.getLogger(__name__)
 # against it).
 LDJSON_PREFILTER = "contains(lower(cast(html as string)), 'ld+json')"
 
+# a triple row's identity: rows equal on these columns are one fact
+TRIPLE_KEY = (
+    "url", "subj", "pred", "obj", "obj_is_literal", "obj_datatype",
+    "obj_lang", "graph",
+)
+
+SMALL_INPUT_BYTES_PER_CORE = 1_000_000
+
 LINEAGE_COLS = [
     "run_id",
     "part_id",
@@ -86,11 +94,7 @@ def default_session(
     return spark
 
 
-def parallelize_small_input(
-    df: DataFrame,
-    max_bytes_per_core: int = 1_000_000,
-    min_bytes: int = 0,
-) -> DataFrame:
+def parallelize_small_input(df: DataFrame, min_bytes: int = 0) -> DataFrame:
     """Round-robin repartition a SMALL input up to the session's default
     parallelism before an expensive per-row (Python/Arrow) stage.
 
@@ -100,12 +104,12 @@ def parallelize_small_input(
     (measured on the sf0.1 spine: 33 splits, ALL 5000 rows in one task
     — the whole Python stage serial on one of 32 cores).  The gate is
     therefore SIZE-based: when the optimizer's estimated input size is
-    at most ``defaultParallelism * max_bytes_per_core`` the frame is
-    round-robined across the cores — the shuffle moves at most a few MB
-    per core by construction, two orders of magnitude cheaper than the
-    serial Python stage it prevents.  A crawl-scale input fails the
-    gate immediately and never pays the shuffle (at 100 TB this is a
-    no-op by construction).  Keyless repartition is deterministic under
+    at most ``defaultParallelism * SMALL_INPUT_BYTES_PER_CORE`` the
+    frame is round-robined across the cores — the shuffle moves at most
+    a few MB per core by construction, two orders of magnitude cheaper
+    than the serial Python stage it prevents.  A crawl-scale input fails
+    the gate immediately and never pays the shuffle (at 100 TB this is
+    a no-op by construction).  Keyless repartition is deterministic under
     retry (sort-before-repartition is on by default, SPARK-23207).
 
     ``min_bytes``: floor below which the input is left alone — for ops
@@ -131,10 +135,11 @@ def parallelize_small_input(
         # stats are advisory: an analysis error surfaces at the action
         log.debug("parallelize_small_input: no size estimate (%s), left as is", e)
         return df
-    spread = min_bytes <= size <= para * max_bytes_per_core
+    max_bytes = para * SMALL_INPUT_BYTES_PER_CORE
+    spread = min_bytes <= size <= max_bytes
     log.debug(
         "parallelize_small_input: estimated %d bytes, window %d..%d: %s",
-        size, min_bytes, para * max_bytes_per_core,
+        size, min_bytes, max_bytes,
         "round-robin" if spread else "left as is",
     )
     return df.repartition(para) if spread else df
@@ -349,17 +354,14 @@ class KGPipeline:
     def linked_triples(
         self,
         triples: DataFrame,
-        max_iter: int = 25,
         dedup: bool = True,
-        dictionary_encode: bool = False,
         ifp_preds: tuple = (),
-        ifp_max_group: int = 1024,
     ) -> DataFrame:
         """``ifp_preds``: inverse-functional predicates (foaf:mbox-like
         literal keys) whose shared values add link edges alongside the
         explicit sameAs ones — k-1 star edges per value group, junk
-        keys bounded by ``ifp_max_group`` (operators/graph.py
-        ifp_sameas_edges); one connected-components pass merges both
+        keys bounded by ``ifp_sameas_edges``' ``max_group``
+        (operators/graph.py); one connected-components pass merges both
         evidence kinds."""
         from .operators.graph import (
             SAME_AS_PREDICATES,
@@ -371,16 +373,12 @@ class KGPipeline:
 
         edges = sameas_edges(triples)
         for p in ifp_preds:
-            edges = edges.union(
-                ifp_sameas_edges(triples, p, max_group=ifp_max_group)
-            )
+            edges = edges.union(ifp_sameas_edges(triples, p))
         if ifp_preds:
             # one dedup exchange over the whole union, not one per
             # predicate
             edges = edges.distinct()
-        mapping = canonical_mapping(
-            edges, max_iter=max_iter, dictionary_encode=dictionary_encode
-        )
+        mapping = canonical_mapping(edges)
         linked = link_entities(triples, mapping)
         # canonicalization makes sameAs rows degenerate (x sameAs x) and
         # collapses distinct rows into duplicates — clean both up
@@ -389,10 +387,7 @@ class KGPipeline:
         )
         if dedup:
             linked = linked.dropDuplicates(
-                ["url", "subj", "pred", "obj", "obj_is_literal",
-                 "obj_datatype", "obj_lang", "graph"]
-                if "url" in linked.columns
-                else None
+                TRIPLE_KEY if "url" in linked.columns else None
             )
         return linked
 
@@ -518,10 +513,7 @@ class KGPipeline:
             linked = self.linked_triples(triples, dedup=False)
             linked = self.with_bucket(linked.drop("part_id"))
             out = linked.repartition("part_id").dropDuplicates(
-                ["part_id", "url", "subj", "pred", "obj", "obj_is_literal",
-                 "obj_datatype", "obj_lang", "graph"]
-                if "url" in linked.columns
-                else None
+                ("part_id", *TRIPLE_KEY)
             )
 
         triples_path = os.path.join(out_dir, "triples")

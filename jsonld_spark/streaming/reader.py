@@ -63,11 +63,13 @@ from ..to_rdf import _RdfEmitter, _valid_resource
 
 
 def _streamable_spine(doc, ctx: Context, base: str | None):
-    """→ (elements, graph_name, ctx) when the document has a streamable
-    spine (top-level array, or an object whose only entries are
-    @context/@id/@graph with an IRI or absent @id); None otherwise."""
+    """→ (elements, graph_name, ctx, dropped) when the document has a
+    streamable spine (top-level array, or an object whose only entries
+    are @context/@id/@graph with an IRI or absent @id); None otherwise.
+    ``dropped`` lists the top-level keys expansion drops (no keyword or
+    IRI expansion): they count as absent, as in batch."""
     if isinstance(doc, list):
-        return doc, None, ctx
+        return doc, None, ctx, []
     if not isinstance(doc, dict):
         return None
     if "@context" in doc:
@@ -75,6 +77,7 @@ def _streamable_spine(doc, ctx: Context, base: str | None):
     graph_key = None
     id_key = None
     set_key = None
+    dropped = []
     for key in doc:
         if key == "@context":
             continue
@@ -85,13 +88,15 @@ def _streamable_spine(doc, ctx: Context, base: str | None):
             id_key = key
         elif expanded == "@set" and set_key is None:
             set_key = key
+        elif expanded is None or (":" not in expanded and not is_keyword(expanded)):
+            dropped.append(key)  # the same drop rule as expand's key loop
         else:
             return None  # top node carries properties → not a pure wrapper
     if set_key is not None:
         # a lone top-level @set is just an array wrapper — its value IS
         # the spine (expansion unwraps it)
         if graph_key is None and id_key is None and isinstance(doc[set_key], list):
-            return doc[set_key], None, ctx
+            return doc[set_key], None, ctx, dropped
         return None
     if graph_key is None or not isinstance(doc[graph_key], list):
         return None
@@ -106,7 +111,7 @@ def _streamable_spine(doc, ctx: Context, base: str | None):
             # (its per-element {@id, @graph: [el]} mini-docs rename the
             # graph bnode consistently via the shared namer)
             return None
-    return doc[graph_key], graph_name, ctx
+    return doc[graph_key], graph_name, ctx, dropped
 
 
 def _streamable_node(doc, ctx: Context, base: str | None):
@@ -489,10 +494,11 @@ def stream_doc_quads(
         )
         return
 
-    elements, graph_name, ctx = spine
+    elements, graph_name, ctx, dropped = spine
     if graph_name is not None and not _valid_resource(graph_name):
         return
     options = ExpandOptions(base=base, rdfstar=rdfstar)
+    options.warnings.extend(f"dropped key {key!r}" for key in dropped)
     namer = BlankNodeNamer()  # shared: document-scoped _:labels + one sequence
     yield from _emit_elements(
         ((el, ctx) for el in elements),

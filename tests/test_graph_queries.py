@@ -467,6 +467,10 @@ class TestForwardChain:
         ]
         out = forward_chain(t, rules)
         assert out.count() == 6
+        # lineage bound: the saturated set is a union of checkpoint
+        # scans only — no round's join survives into the plan
+        plan = out._jdf.queryExecution().analyzed().toString()
+        assert "LogicalRDD" in plan and "Join" not in plan, plan
 
     def test_rdfs9_two_rules(self, spark):
         from jsonld_spark.operators.bgp import forward_chain

@@ -211,14 +211,15 @@ def test_streaming_spark_parity(spark):
         ).encode()
         rows.append((f"http://site.e/{i}", html))
     # error and warning rows must agree too: NULL html, a malformed
-    # script, an unknown remote context, a dropped @foo key
+    # script, an unknown remote context, a dropped top-level @foo key
+    # next to @graph (the wrapper still streams into the default graph)
     rows += [
         ("http://site.e/null", None),
         ("http://site.e/bad", b'<script type="application/ld+json">{"@id": </script>'),
     ]
     for url, doc in [
         ("http://site.e/remote", {"@context": "http://unknown.e/ctx", "@id": "http://e/r"}),
-        ("http://site.e/foo", {"@context": CTX, "@graph": [{**_entity(0), "@foo": 1}]}),
+        ("http://site.e/foo", {"@context": CTX, "@graph": [_entity(0)], "@foo": 1}),
     ]:
         html = '<script type="application/ld+json">' + json.dumps(doc) + "</script>"
         rows.append((url, html.encode()))
