@@ -420,6 +420,8 @@ def ann_topk_ivf(
     n_probe/n_cells of the corpus instead of scanning it."""
     import numpy as np
 
+    from ..operators.graph import local_frame
+
     centroids = _kmeans_centroids(emb, n_cells)
     assigned = emb.join(ivf_assign(emb, centroids), "vec_id")
 
@@ -434,7 +436,7 @@ def ann_topk_ivf(
         for cell in order:
             probe_pairs.append((r.vec_id, int(cell)))
     spark = emb.sparkSession
-    probes = spark.createDataFrame(probe_pairs, "query_id long, cell int")
+    probes = local_frame(spark, probe_pairs, "query_id long, cell int")
 
     q = emb.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"),

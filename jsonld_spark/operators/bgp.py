@@ -498,7 +498,7 @@ def describe(triples: DataFrame, subjects, *, max_iter: int = 10) -> DataFrame:
     seed set makes it large; CBD
     depth is bnode-nesting depth (rarely >3), bounded by ``max_iter``
     with a reliable checkpoint per round."""
-    from .graph import _ensure_checkpoint_dir
+    from .graph import _ensure_checkpoint_dir, local_frame
 
     if max_iter < 1:
         raise ValueError("describe: max_iter must be >= 1")
@@ -511,8 +511,8 @@ def describe(triples: DataFrame, subjects, *, max_iter: int = 10) -> DataFrame:
         if not subjects:
             raise ValueError("describe: empty subject list")
         spark = triples.sparkSession
-        seeds = spark.createDataFrame(
-            [(s,) for s in subjects], "_s string"
+        seeds = local_frame(
+            spark, [(s,) for s in subjects], "_s string"
         ).distinct()
     _ensure_checkpoint_dir(triples)
     seen = seeds.checkpoint()

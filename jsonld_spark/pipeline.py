@@ -17,7 +17,13 @@ Stages (SURVEY.md §3.1 re-trace):
    which broadcasts a driver-labeled mapping;
 5. partitioned write + per-partition lineage rows → idempotent resume
    (completed buckets are skipped; dynamic partition overwrite makes
-   bucket re-runs exactly-once).
+   bucket re-runs exactly-once).  The write runs one task per core
+   (``min(num_buckets, defaultParallelism)`` hash partitions of
+   ``part_id``, one file per bucket directory).  The run never re-reads
+   its own output: ``_lineage`` is read once, before the extract and
+   only when it exists; the new lineage rows and the run totals come
+   from one collected per-bucket aggregate; ``written_triples`` is a
+   row count observed during a write into a fresh directory.
 
 Executors never touch the network: remote contexts come only from the
 broadcast cache dict (north-star requirement).
@@ -29,7 +35,7 @@ import logging
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from .udfs import TRIPLES_SCHEMA, make_pages_to_triples
 
@@ -55,17 +61,18 @@ TRIPLE_KEY = (
 
 SMALL_INPUT_BYTES_PER_CORE = 1_000_000
 
-LINEAGE_COLS = [
-    "run_id",
-    "part_id",
-    "url_min",
-    "url_max",
-    "context_cache_version",
-    "triple_count",
-    "error_count",
-    "warning_count",
-    "status",
-]
+LINEAGE_SCHEMA = (
+    "run_id string not null, part_id bigint, url_min string, url_max string, "
+    "context_cache_version string not null, triple_count bigint, "
+    "error_count bigint, warning_count bigint, status string not null"
+)
+
+
+def _completed(lineage: list, scoped: bool) -> set[int]:
+    """Complete buckets of this engine's cache version among
+    ``KGPipeline._read_lineage`` rows — only the run's own when
+    ``scoped``."""
+    return {r.part_id for r in lineage if r.current and (r.mine or not scoped)}
 
 
 def default_session(
@@ -415,6 +422,43 @@ class KGPipeline:
     def _lineage_path(self, out_dir: str) -> str:
         return os.path.join(out_dir, "_lineage")
 
+    def _exists(self, path: str) -> bool:
+        jpath = self.spark._jvm.org.apache.hadoop.fs.Path(path)
+        conf = self.spark._jsparkSession.sessionState().newHadoopConf()
+        return jpath.getFileSystem(conf).exists(jpath)
+
+    def _read_lineage(self, out_dir: str, run_id: str | None) -> list:
+        """The complete lineage rows a run needs, in ONE read — none
+        when ``_lineage`` does not exist: distinct ``(part_id, current,
+        mine, triple_count, error_count, warning_count)``, where
+        ``current`` marks this engine's ``context_cache_version`` and
+        ``mine`` marks ``run_id``'s rows (both may be NULL, i.e. false).
+        The counts are kept on ``mine`` rows only, so every other run
+        collapses to one row per bucket: a few rows per bucket reach
+        the driver, however many runs the out_dir has seen."""
+        path = self._lineage_path(out_dir)
+        if not self._exists(path):
+            return []
+        try:
+            # mergeSchema: lineage schema may evolve across engine versions
+            lin = self.spark.read.option("mergeSchema", "true").parquet(path)
+        except Exception:  # noqa: BLE001 — a directory with no lineage files
+            return []
+        current = F.col("context_cache_version") == self.cache_version
+        mine = F.col("run_id") == run_id
+        counts = ("triple_count", "error_count", "warning_count")
+        return (
+            lin.filter((F.col("status") == "complete") & (current | mine))
+            .select(
+                "part_id",
+                current.alias("current"),
+                mine.alias("mine"),
+                *[F.when(mine, F.col(c)).alias(c) for c in counts],
+            )
+            .distinct()
+            .collect()
+        )
+
     def completed_buckets(self, out_dir: str, run_id: str | None = None) -> set[int]:
         """Buckets recorded complete — optionally scoped to ``run_id``.
 
@@ -426,19 +470,7 @@ class KGPipeline:
         a NEW crawl at an old out_dir would skip everything; pass
         ``resume_scope="run_id"`` (or a run_id here) when out_dirs are
         reused across inputs and retries keep their run_id."""
-        path = self._lineage_path(out_dir)
-        try:
-            # mergeSchema: lineage schema may evolve across engine versions
-            lin = self.spark.read.option("mergeSchema", "true").parquet(path)
-        except Exception:  # noqa: BLE001 — first run, no lineage yet
-            return set()
-        cond = (F.col("status") == "complete") & (
-            F.col("context_cache_version") == self.cache_version
-        )
-        if run_id is not None:
-            cond = cond & (F.col("run_id") == run_id)
-        rows = lin.filter(cond).select("part_id").distinct().collect()
-        return {r.part_id for r in rows}
+        return _completed(self._read_lineage(out_dir, run_id), run_id is not None)
 
     def run(
         self,
@@ -473,35 +505,59 @@ class KGPipeline:
         conf ``spark.sql.sources.partitionOverwriteMode=dynamic`` for
         the write — without both, a resumed run on a default-configured
         session would full-truncate the triples table (the exact loss
-        resume exists to prevent)."""
+        resume exists to prevent).
+
+        What is read and how each stat is computed:
+
+        * ``_lineage`` is read ONCE, before the extract, and only when
+          the directory exists (never on a fresh ``out_dir``): it gives
+          the buckets to skip and this run_id's earlier complete rows.
+        * the lineage rows of this run are one collected per-bucket
+          aggregate of the extracted rows (at most ``num_buckets``
+          rows), appended to ``_lineage`` after the triples write from
+          a driver-local frame.
+        * ``triples`` / ``errors`` / ``warnings`` sum those rows,
+          merged over this run_id's earlier rows for the buckets this
+          run did not write (a resume under the same run_id counts the
+          buckets it skipped; a same-run_id re-run counts each bucket
+          once).  They count EXTRACTED rows.
+        * ``written_triples`` (``link_entities`` only) is the row count
+          on disk after linking's dedup: the count observed in the
+          write's result stage when the triples directory did not
+          exist before the run, else a metadata-only parquet
+          ``count()`` of the directory (older buckets included)."""
         t0 = time.time()
+        if resume_scope not in ("out_dir", "run_id"):
+            raise ValueError(f"resume_scope must be out_dir|run_id: {resume_scope}")
         if dedup:
             pages = self.dedup_pages(pages)
         pages_b = self.with_bucket(pages)
-        skipped = 0
-        if resume_scope not in ("out_dir", "run_id"):
-            raise ValueError(f"resume_scope must be out_dir|run_id: {resume_scope}")
-        if resume:
-            done = self.completed_buckets(
-                out_dir, run_id=run_id if resume_scope == "run_id" else None
-            )
-            if done:
-                skipped = len(done)
-                pages_b = pages_b.filter(~F.col("part_id").isin(*done))
+        # the only lineage read of the run, before the extract: the
+        # buckets to skip and this run_id's earlier rows for the totals
+        lineage = self._read_lineage(out_dir, run_id)
+        done = _completed(lineage, resume_scope == "run_id") if resume else set()
+        if done:
+            pages_b = pages_b.filter(~F.col("part_id").isin(*done))
 
         raw = self.extract(pages_b.drop("part_id"))
         # re-derive bucket from url post-UDF (deterministic — avoids
         # shipping part_id through the Arrow boundary)
         raw = self.with_bucket(raw)
-        # the write, the lineage aggregation and the error count all
-        # consume this stage — persist so the Python UDF runs ONCE
-        # (triples are far smaller than the input html)
+        # the write and the lineage aggregation both consume this
+        # stage — persist so the Python UDF runs ONCE (triples are far
+        # smaller than the input html)
         from pyspark import StorageLevel
+
+        from .operators.graph import local_frame
 
         raw = raw.persist(StorageLevel.MEMORY_AND_DISK)
 
         triples = raw.filter(F.col("error").isNull()).drop("error")
-        out = triples.repartition("part_id")
+        # an explicit partition count, which AQE does not coalesce: the
+        # write runs one task per core instead of one task writing every
+        # bucket.  Each part_id still lands in one partition, so each
+        # bucket directory gets one file.
+        n_parts = min(self.num_buckets, self.spark.sparkContext.defaultParallelism)
         if link_entities:
             # dedup AFTER the bucket repartition, with part_id leading
             # the key: part_id is a pure function of url (a dedup-key
@@ -512,11 +568,20 @@ class KGPipeline:
             # by the bucket repartition).
             linked = self.linked_triples(triples, dedup=False)
             linked = self.with_bucket(linked.drop("part_id"))
-            out = linked.repartition("part_id").dropDuplicates(
+            out = linked.repartition(n_parts, "part_id").dropDuplicates(
                 ("part_id", *TRIPLE_KEY)
             )
+        else:
+            out = triples.repartition(n_parts, "part_id")
 
         triples_path = os.path.join(out_dir, "triples")
+        written = None
+        if link_entities and not self._exists(triples_path):
+            # into a fresh directory the rows written ARE the rows on
+            # disk: count them in the write's result stage, where each
+            # partition's metrics are applied once
+            written = Observation()
+            out = out.observe(written, F.count(F.lit(1)).alias("rows"))
         writer = (
             # part_id LEADS the sort: the dynamic-partition writer
             # requires its input ordered by the partition column and
@@ -562,7 +627,9 @@ class KGPipeline:
         else:
             writer.save(triples_path)
 
-        lineage = (
+        # at most num_buckets rows: aggregate on the cluster, append
+        # from the driver as a local frame (no Python task)
+        buckets = (
             raw.groupBy("part_id")
             .agg(
                 F.min("url").alias("url_min"),
@@ -581,48 +648,44 @@ class KGPipeline:
                     F.when(F.col("error").startswith("warning:"), 1).otherwise(0)
                 ).alias("warning_count"),
             )
-            .withColumn("run_id", F.lit(run_id))
-            .withColumn("context_cache_version", F.lit(self.cache_version))
-            .withColumn("status", F.lit("complete"))
-            .select(*LINEAGE_COLS)
+            .collect()
         )
-        lineage.write.mode("append").parquet(self._lineage_path(out_dir))
-
-        this_run = (
-            self.spark.read.option("mergeSchema", "true")
-            .parquet(self._lineage_path(out_dir))
-            .filter(F.col("run_id") == run_id)
-            # lineage is append-only: re-running the SAME run_id without
-            # resume appends a second complete row per part_id while
-            # dynamic overwrite REPLACED the data — dedup per part so the
-            # reported totals match what is actually on disk (identical
-            # re-runs dedup exactly; a re-run over changed input should
-            # use a new run_id)
-            .dropDuplicates(["part_id"])
-        )
-        agg = this_run.agg(
-            F.sum("triple_count").alias("t"),
-            F.sum("error_count").alias("e"),
-            F.sum("warning_count").alias("w"),
-        ).collect()[0]
-        n_triples = int(agg.t or 0)
-        n_errors = int(agg.e or 0)
-        n_warnings = int(agg.w or 0)
         raw.unpersist()
+        rows = [
+            (run_id, b.part_id, b.url_min, b.url_max, self.cache_version,
+             b.triple_count, b.error_count, b.warning_count, "complete")
+            for b in buckets
+        ]
+        # one lineage file per run (a local relation splits up to one per core)
+        local_frame(self.spark, rows, LINEAGE_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(self._lineage_path(out_dir))
+
+        # lineage is append-only: re-running the SAME run_id without
+        # resume appends a second complete row per part_id while dynamic
+        # overwrite REPLACED the data — so the totals take this run's
+        # row for every bucket it wrote and one earlier row of this
+        # run_id for every bucket it did not (identical re-runs agree
+        # exactly; a re-run over changed input should use a new run_id)
+        per_part = {r.part_id: r for r in lineage if r.mine}
+        per_part.update((b.part_id, b) for b in buckets)
         stats = {
             "run_id": run_id,
             "seconds": time.time() - t0,
-            "triples": n_triples,
-            "errors": n_errors,
-            "warnings": n_warnings,
-            "skipped_buckets": skipped,
+            "triples": sum(r.triple_count or 0 for r in per_part.values()),
+            "errors": sum(r.error_count or 0 for r in per_part.values()),
+            "warnings": sum(r.warning_count or 0 for r in per_part.values()),
+            "skipped_buckets": len(done),
             "out": triples_path,
         }
         if link_entities:
             # lineage counts EXTRACTED rows (provenance); linking dedups
             # and drops degenerate sameAs rows, so report what is
-            # actually on disk too (parquet count() is metadata-only)
+            # actually on disk too: observed during a write into a fresh
+            # directory, else a (metadata-only) parquet count()
             stats["written_triples"] = (
-                self.spark.read.format(table_format).load(triples_path).count()
+                written.get["rows"]
+                if written is not None
+                else self.spark.read.format(table_format).load(triples_path).count()
             )
         return stats

@@ -226,12 +226,20 @@ def test_dense_ids_match_global_window_and_avoid_single_partition(spark):
 
     from pyspark.sql import Window
 
-    from jsonld_spark.operators.graph import dense_ids_by_sorted_order
+    from jsonld_spark.operators.graph import (
+        dense_ids_by_sorted_order,
+        ranged_partition_offsets,
+    )
 
     rng = random.Random(7)
     iris = [f"http://e/{rng.randrange(10**9):09d}" for _ in range(997)]
     iris = list(dict.fromkeys(iris))  # distinct, insertion order random
     df = spark.createDataFrame([(i,) for i in iris], "iri string")
+
+    # the per-partition offsets stay on the driver: no RDD, no task
+    _, off_df = ranged_partition_offsets(df, ["iri"])
+    off_plan = off_df._jdf.queryExecution().optimizedPlan().toString()
+    assert off_plan.startswith("LocalRelation"), off_plan
 
     got = dense_ids_by_sorted_order(df, "iri")
     plan = got._jdf.queryExecution().executedPlan().toString()

@@ -521,6 +521,83 @@ def test_rerun_same_run_id_stats_not_doubled(spark, pipe, pages):
     shutil.rmtree(out, ignore_errors=True)
 
 
+def _drop_odd_bucket_lineage(spark, out):
+    """Forget the lineage of the odd buckets, as after a mid-run crash."""
+    path = os.path.join(out, "_lineage")
+    keep = spark.read.parquet(path).filter(F.col("part_id") % 2 == 0)
+    keep.write.mode("overwrite").parquet(path + "_tmp")
+    shutil.rmtree(path)
+    os.rename(path + "_tmp", path)
+
+
+def test_linked_run_stats_match_disk_and_lineage(spark, pipe, pages):
+    """``written_triples`` is the row count on disk and ``triples`` the
+    per-bucket-deduped lineage total of the run_id, on a fresh out_dir,
+    on a resume that skips buckets, and on a same-run_id re-run without
+    resume."""
+    out = os.path.join(DATA_DIR, "kg_out_linked_stats")
+    shutil.rmtree(out, ignore_errors=True)
+
+    def check(stats):
+        on_disk = spark.read.parquet(os.path.join(out, "triples")).count()
+        assert stats["written_triples"] == on_disk
+        lineage = (
+            spark.read.parquet(os.path.join(out, "_lineage"))
+            .filter(F.col("run_id") == stats["run_id"])
+            .dropDuplicates(["part_id"])
+        )
+        assert stats["triples"] == lineage.agg(F.sum("triple_count")).first()[0]
+
+    fresh = pipe.run(pages, out, run_id="r1", resume=False, link_entities=True)
+    check(fresh)
+    assert 0 < fresh["written_triples"] < fresh["triples"]  # linking dedups
+
+    _drop_odd_bucket_lineage(spark, out)
+    resumed = pipe.run(pages, out, run_id="r2", resume=True, link_entities=True)
+    assert resumed["skipped_buckets"] > 0
+    assert 0 < resumed["triples"] < fresh["triples"]  # odd buckets only
+    assert resumed["written_triples"] == fresh["written_triples"]
+    check(resumed)
+
+    rerun = pipe.run(pages, out, run_id="r2", resume=False, link_entities=True)
+    assert rerun["skipped_buckets"] == 0
+    assert rerun["triples"] == fresh["triples"]
+    assert rerun["written_triples"] == fresh["written_triples"]
+    check(rerun)
+    shutil.rmtree(out, ignore_errors=True)
+
+
+def test_linked_run_empty_input_fresh_dir(spark, pipe, pages):
+    """No pages into a fresh out_dir: every stat is 0.  The write
+    creates no bucket directory, so re-reading the triples to count
+    them used to fail with "Unable to infer schema"."""
+    out = os.path.join(DATA_DIR, "kg_out_linked_empty")
+    shutil.rmtree(out, ignore_errors=True)
+    stats = pipe.run(pages.limit(0), out, run_id="e", link_entities=True)
+    assert (stats["triples"], stats["errors"], stats["written_triples"]) == (0, 0, 0)
+    shutil.rmtree(out, ignore_errors=True)
+
+
+def test_linked_run_job_count(spark, pipe, pages):
+    """Regression guard on Spark jobs per fresh-dir linked run: the
+    lineage totals and ``written_triples`` come from the run itself and
+    ``_lineage`` is not read when it does not exist.  This run took 21
+    jobs while it re-read ``_lineage`` and the written triples, 14
+    since."""
+    out = os.path.join(DATA_DIR, "kg_out_linked_jobs")
+    shutil.rmtree(out, ignore_errors=True)
+    sc = spark.sparkContext
+    sc.setJobGroup("linked_run_job_count", "linked run job count")
+    try:
+        pipe.run(pages, out, run_id="j", resume=True, link_entities=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("linked_run_job_count")
+    assert len(jobs) <= 14, sorted(jobs)
+    shutil.rmtree(out, ignore_errors=True)
+
+
 def test_skip_scriptless_prefilter_parity_and_plan(spark, pipe):
     """The JVM pre-filter is semantically transparent on any corpus
     (scriptless pages emit zero rows from the Python scanner anyway)
