@@ -58,12 +58,49 @@ def json_eq(a, b) -> bool:
     return a == b
 
 
-def _add_value_dedup(obj: dict, key: str, value) -> None:
-    """Append value to obj[key] array unless an equal value exists
-    (reference add_value(..., allow_duplicate: false), utils.rb:163-185)."""
+# arrays this long leave the json_eq scan for a keyed index
+_DEDUP_SCAN_MAX = 8
+
+
+def _json_key(v):
+    """A hashable key with ``_json_key(a) == _json_key(b)`` exactly when
+    ``json_eq(a, b)``: booleans tagged apart from numbers, objects as
+    unordered (key, value-key) sets, arrays as ordered tuples.  NaN gets
+    a fresh key, as it equals nothing."""
+    if isinstance(v, bool):
+        return (bool, v)
+    if isinstance(v, dict):
+        return (dict, frozenset((k, _json_key(x)) for k, x in v.items()))
+    if isinstance(v, list):
+        return (list, tuple(_json_key(x) for x in v))
+    if isinstance(v, float) and v != v:
+        return object()
+    return v
+
+
+def add_unique_value(obj: dict, key: str, value, dedup: dict) -> None:
+    """Append value to obj[key] array unless an equal (``json_eq``) value
+    exists (reference add_value(..., allow_duplicate: false),
+    utils.rb:163-185).  Short arrays are scanned; from
+    ``_DEDUP_SCAN_MAX`` values on, ``dedup`` holds the array's value keys
+    under ``id(arr)`` (next to the array, which keeps the id unique), so
+    a property with N values costs O(N), not O(N²).  The keys catch up
+    on values appended to the array directly."""
     arr = obj.setdefault(key, [])
-    if not any(json_eq(value, existing) for existing in arr):
+    if len(arr) < _DEDUP_SCAN_MAX:
+        if not any(json_eq(value, existing) for existing in arr):
+            arr.append(value)
+        return
+    entry = dedup.get(id(arr))
+    if entry is None:
+        entry = dedup[id(arr)] = [arr, set(), 0]
+    seen = entry[1]
+    seen.update(_json_key(existing) for existing in arr[entry[2]:])
+    k = _json_key(value)
+    if k not in seen:
+        seen.add(k)
         arr.append(value)
+    entry[2] = len(arr)
 
 
 def _rename_embedded_bnodes(node, namer: BlankNodeNamer):
@@ -116,6 +153,7 @@ def create_node_map(
     list_: dict | None = None,
     reverse: bool = False,
     rename_embedded: bool = True,
+    dedup: dict | None = None,
 ) -> None:
     """W3C Node Map Generation. Mutates ``node_map`` (and ``element``).
 
@@ -123,7 +161,10 @@ def create_node_map(
     entries keyed by the JCS serialization of the star subject
     (flatten.rb:60-150); ``reverse`` is an explicit flag (the reference's
     ``reverse:`` kwarg) because star subjects make dict
-    ``active_subject`` values legitimate in forward position too."""
+    ``active_subject`` values legitimate in forward position too.
+    ``dedup`` is ``add_unique_value``'s index, one per top-level call."""
+    if dedup is None:
+        dedup = {}
 
     if isinstance(element, list):
         for item in element:
@@ -131,7 +172,7 @@ def create_node_map(
             # (one call per expanded array item across every document)
             create_node_map(
                 item, node_map, namer, active_graph, active_subject,
-                active_property, list_, reverse, rename_embedded,
+                active_property, list_, reverse, rename_embedded, dedup,
             )
         return
 
@@ -175,10 +216,11 @@ def create_node_map(
                 namer=namer,
                 active_graph=active_graph,
                 rename_embedded=False,
+                dedup=dedup,
             )
         if list_ is None:
             if subject_node is not None and active_property is not None:
-                _add_value_dedup(subject_node, active_property, element)
+                add_unique_value(subject_node, active_property, element, dedup)
         else:
             list_["@list"].append(element)
         return
@@ -188,7 +230,7 @@ def create_node_map(
         result: dict[str, Any] = {"@list": []}
         create_node_map(
             element["@list"], node_map, namer, active_graph,
-            active_subject, active_property, result,
+            active_subject, active_property, result, dedup=dedup,
         )
         if list_ is None:
             if subject_node is not None and active_property is not None:
@@ -225,12 +267,12 @@ def create_node_map(
     # 6.5/6.6: link from referencing node
     if reverse:
         # reverse reference: active_subject is the referenced node def
-        _add_value_dedup(node, active_property, active_subject)
+        add_unique_value(node, active_property, active_subject, dedup)
     elif active_property is not None:
         reference = {"@id": id_}
         if list_ is None:
             if subject_node is not None:
-                _add_value_dedup(subject_node, active_property, reference)
+                add_unique_value(subject_node, active_property, reference, dedup)
         else:
             list_["@list"].append(reference)
 
@@ -255,6 +297,7 @@ def create_node_map(
             active_graph=active_graph,
             active_subject=star_subject,
             rename_embedded=False,
+            dedup=dedup,
         )
 
     # 6.7: @type merge
@@ -262,7 +305,7 @@ def create_node_map(
         types = element.pop("@type")
         types = types if isinstance(types, list) else [types]
         for t in types:
-            _add_value_dedup(node, "@type", t)
+            add_unique_value(node, "@type", t, dedup)
 
     # 6.8: @index
     if "@index" in element:
@@ -285,20 +328,23 @@ def create_node_map(
                     active_subject=referenced,
                     active_property=prop,
                     reverse=True,
+                    dedup=dedup,
                 )
 
     # 6.10: @graph
     if "@graph" in element:
         sub = element.pop("@graph")
         create_node_map(
-            element=sub, node_map=node_map, namer=namer, active_graph=ser_id
+            element=sub, node_map=node_map, namer=namer, active_graph=ser_id,
+            dedup=dedup,
         )
 
     # 6.11: @included
     if "@included" in element:
         inc = element.pop("@included")
         create_node_map(
-            element=inc, node_map=node_map, namer=namer, active_graph=active_graph
+            element=inc, node_map=node_map, namer=namer,
+            active_graph=active_graph, dedup=dedup,
         )
 
     # 6.12: remaining properties
@@ -312,6 +358,7 @@ def create_node_map(
         node.setdefault(property_, [])
         create_node_map(
             value, node_map, namer, active_graph, id_, property_,
+            None, False, True, dedup,
         )
 
 
@@ -326,6 +373,7 @@ def merge_node_map_graphs(node_map: dict) -> dict:
     """Union of all graphs' node maps (reference flatten.rb:274-296).
     Relational analog: ``triples.drop("graph").dropDuplicates()``."""
     merged: dict[str, dict] = {}
+    dedup: dict = {}
     for graph_name in sorted(node_map):
         for id_, node in node_map[graph_name].items():
             merged_node = merged.setdefault(id_, {"@id": id_})
@@ -335,12 +383,12 @@ def merge_node_map_graphs(node_map: dict) -> dict:
                 if is_keyword(prop):
                     if prop == "@type":
                         for v in values if isinstance(values, list) else [values]:
-                            _add_value_dedup(merged_node, "@type", v)
+                            add_unique_value(merged_node, "@type", v, dedup)
                     else:
                         merged_node[prop] = values
                 else:
                     for v in values:
-                        _add_value_dedup(merged_node, prop, v)
+                        add_unique_value(merged_node, prop, v, dedup)
     return merged
 
 
@@ -371,7 +419,7 @@ def create_annotations(graph: dict) -> dict:
             del graph[key]
             ann = {k: v for k, v in annotation.items() if k != "@id"}
             if ann:
-                _add_value_dedup(emb_value, "@annotation", ann)
+                add_unique_value(emb_value, "@annotation", ann, {})
             break
     return graph
 

@@ -15,7 +15,7 @@ import math
 from typing import Any
 
 from . import errors as err
-from .flatten import json_eq
+from .flatten import add_unique_value
 from .rdf_model import (
     RDF_DIRECTION,
     RDF_FIRST,
@@ -132,6 +132,7 @@ def from_quads(
     graph_map: dict[str, dict[str, dict]] = {DEFAULT_GRAPH: default_graph}
     referenced_once: dict[str, Any] = {}
     compound_map: dict[str, dict[str, bool]] = {}
+    dedup: dict = {}  # add_unique_value's index
 
     for q in quads:
         gname = q.graph if q.graph is not None else DEFAULT_GRAPH
@@ -178,9 +179,7 @@ def from_quads(
                 q.obj, q.obj_datatype, q.obj_lang, use_native_types, rdf_direction
             )
 
-        arr = node.setdefault(q.pred, [])
-        if not any(json_eq(value, existing) for existing in arr):
-            arr.append(value)
+        add_unique_value(node, q.pred, value, dedup)
 
         if is_resource and not obj_is_star:
             if q.obj == RDF_NIL:

@@ -4,22 +4,31 @@ The reference's ``StreamingReader`` (streaming_reader.rb:29-423) fully
 parses the JSON, then emits statements in ONE pass over the tree,
 buffering only provisional statements for the current node — memory is
 bounded by the largest single node, not by the document's total quad
-count.  The realistic multi-GB JSON-LD document is a dataset dump: one
-top-level array (or one ``@graph`` wrapper) holding millions of sibling
-entities.  This module streams that spine: the shared context is parsed
-once, then each element runs expand → node-map → emit independently
-through a generator, so peak memory is O(largest element), not
-O(total quads).  The second-most-common giant shape — ONE top-level
-node object with a multi-million-element property array — streams
-property-item by property-item (``_stream_node_properties``, the
-analog of the reference's parse_property, streaming_reader.rb:425-575).
-Round 4: top-level @reverse maps, @included arrays, @graph wrappers
-that also carry properties, @nest entries and @index all stream
-single-pass too.  Round 5: top-level value/list objects stream as one
-single-pass element as well (they expand to at most a handful of quads
-— free-floating values drop — but validation errors surface exactly as
-in batch); only unknown aliased-keyword shapes still fall back to
-batch.
+count.  Streaming across pages happens at the pipeline level
+(``streaming.stream``); this reader exists to bound one giant page.
+
+``_classify`` parses a document's ``@context`` once, expands each
+top-level key once, and picks one of three routes:
+
+* **spine** — a top-level array, a lone ``@set`` array, or an ``@graph``
+  array whose wrapper holds at most an IRI ``@id`` besides keys that
+  expansion drops (those count as absent and warn, as in batch).  This
+  is the dataset dump: each element runs expand → node map → emit on
+  its own, so peak memory is O(largest element), not O(total quads).
+* **node** — one top-level node object, the other giant shape (one
+  entity with a multi-million-item property array).  It streams
+  property item by property item (``_stream_node_properties``, the
+  analog of the reference's parse_property, streaming_reader.rb:425-575),
+  and so do its ``@reverse`` maps, ``@included`` arrays and ``@graph``
+  elements; each ``@nest`` entry expands as one unit and ``@index``
+  rides the ``@type`` shell.  Keys that expansion would drop stream as
+  properties, because a type-scoped context may define them.
+* **batch** — every other shape goes to ``doc_to_quads``: value and
+  list objects, unknown or repeated keywords, a non-string ``@id``, an
+  id-only node.  A top-level value or list object expands to at most a
+  handful of quads (free-floating values drop), and streaming it would
+  still expand the whole document in one ``expand`` call, which is what
+  the batch path does — so it does not stream.
 
 Blank-node labels: one ``BlankNodeNamer`` is shared across elements, so
 explicit ``_:x`` labels keep their document-scoped identity.  Output is
@@ -51,173 +60,88 @@ page-wide.
 
 from __future__ import annotations
 
+from collections import Counter
 from typing import Iterator
 
 from .. import errors as err
-from ..context import Context, ContextCache
-from ..iri import is_keyword
+from ..context import UNSET, Context, ContextCache
 from ..expand import ExpandOptions, expand
 from ..flatten import BlankNodeNamer, create_node_map
+from ..iri import is_keyword
 from ..rdf_model import Quad
-from ..to_rdf import _RdfEmitter, _valid_resource
+from ..to_rdf import doc_to_quads, node_map_quads
+
+# the keywords a streamed node object may carry; a document with any
+# other keyword takes the batch path
+_NODE_KEYWORDS = frozenset(
+    ("@id", "@type", "@index", "@reverse", "@included", "@graph", "@nest")
+)
 
 
-def _streamable_spine(doc, ctx: Context, base: str | None):
-    """→ (elements, graph_name, ctx, dropped) when the document has a
-    streamable spine (top-level array, or an object whose only entries
-    are @context/@id/@graph with an IRI or absent @id); None otherwise.
-    ``dropped`` lists the top-level keys expansion drops (no keyword or
-    IRI expansion): they count as absent, as in batch."""
+def _classify(doc, ctx: Context, base: str | None):
+    """Route one document: → ``("spine", ctx, (elements, graph_name,
+    dropped))``, ``("node", ctx, (keys, props))``, or None for the batch
+    path.  ``ctx`` is the document's parsed context; ``keys`` maps each
+    keyword to the top-level keys expanding to it, ``props`` lists the
+    other keys and ``dropped`` those of them expansion drops (no keyword
+    or IRI expansion), in document order."""
     if isinstance(doc, list):
-        return doc, None, ctx, []
+        return "spine", ctx, (doc, None, [])
     if not isinstance(doc, dict):
         return None
     if "@context" in doc:
         ctx = ctx.parse(doc["@context"], base_url=base)
-    graph_key = None
-    id_key = None
-    set_key = None
-    dropped = []
+    keys: dict[str, list[str]] = {}
+    props: list[str] = []
+    dropped: list[str] = []
     for key in doc:
         if key == "@context":
             continue
         expanded = ctx.expand_iri(key, vocab=True)
-        if expanded == "@graph" and graph_key is None:
-            graph_key = key
-        elif expanded == "@id" and id_key is None:
-            id_key = key
-        elif expanded == "@set" and set_key is None:
-            set_key = key
-        elif expanded is None or (":" not in expanded and not is_keyword(expanded)):
-            dropped.append(key)  # the same drop rule as expand's key loop
+        if isinstance(expanded, str) and is_keyword(expanded):
+            keys.setdefault(expanded, []).append(key)
         else:
-            return None  # top node carries properties → not a pure wrapper
-    if set_key is not None:
-        # a lone top-level @set is just an array wrapper — its value IS
-        # the spine (expansion unwraps it)
-        if graph_key is None and id_key is None and isinstance(doc[set_key], list):
-            return doc[set_key], None, ctx, dropped
-        return None
-    if graph_key is None or not isinstance(doc[graph_key], list):
-        return None
-    graph_name = None
-    if id_key is not None:
-        gid = doc[id_key]
-        if not isinstance(gid, str):
-            return None
-        graph_name = ctx.expand_iri(gid, document_relative=True)
-        if not isinstance(graph_name, str) or graph_name.startswith("_:"):
-            # bnode-named wrappers stream through the NODE path instead
-            # (its per-element {@id, @graph: [el]} mini-docs rename the
-            # graph bnode consistently via the shared namer)
-            return None
-    return doc[graph_key], graph_name, ctx, dropped
+            props.append(key)
+            if expanded is None or ":" not in expanded:
+                dropped.append(key)  # the same drop rule as expand's key loop
 
+    # spine: a pure wrapper — one key each for at most @set, or @graph
+    # and @id; dropped keys count as absent
+    if len(props) == len(dropped) and all(len(ks) == 1 for ks in keys.values()):
+        val = {kw: doc[ks[0]] for kw, ks in keys.items()}
+        if val.keys() == {"@set"} and isinstance(val["@set"], list):
+            # a lone top-level @set is just an array wrapper — its value
+            # IS the spine (expansion unwraps it)
+            return "spine", ctx, (val["@set"], None, dropped)
+        if val.keys() <= {"@graph", "@id"} and isinstance(val.get("@graph"), list):
+            if "@id" not in val:
+                return "spine", ctx, (val["@graph"], None, dropped)
+            gid = val["@id"]
+            name = ctx.expand_iri(gid, document_relative=True) if isinstance(gid, str) else None
+            # a bnode-named wrapper takes the NODE path instead: its
+            # per-element {@id, @graph: [el]} mini-docs rename the graph
+            # bnode consistently through the shared namer
+            if isinstance(name, str) and not name.startswith("_:"):
+                return "spine", ctx, (val["@graph"], name, dropped)
 
-def _streamable_node(doc, ctx: Context, base: str | None):
-    """→ (ctx, id_value, type_key, prop_keys, extras) when the document
-    is a top-level NODE OBJECT — the second-most-common giant-document
-    shape (one entity with a multi-million-element property array).
-    Mirrors the reference's parse_property streaming
-    (streaming_reader.rb:425-575).  Beyond plain @id/@type/property
-    keys, ``extras`` carries the remaining single-pass-streamable
-    keyword entries (round 4): ``index_key`` (@index rides the shell
-    mini-doc), ``reverse_keys`` (@reverse maps stream per reverse-item),
-    ``included_keys`` (@included streams per included node),
-    ``graph_keys`` (a wrapper WITH properties streams its named-graph
-    elements one by one), ``nest_keys`` (each @nest entry expands as one
-    unit).  Value/list objects route through ``_value_or_list_ctx``
-    (single-pass, round 5); only unknown aliased keywords (@set with
-    extra members, ...) still fall back to batch."""
-    if not isinstance(doc, dict):
-        return None
-    if "@context" in doc:
-        ctx = ctx.parse(doc["@context"], base_url=base)
-    id_key = None
-    type_key = None
-    prop_keys: list[str] = []
-    extras = {
-        "index_key": None,
-        "reverse_keys": [],
-        "included_keys": [],
-        "graph_keys": [],
-        "nest_keys": [],
-    }
-    for key in doc:
-        if key == "@context":
-            continue
-        expanded = ctx.expand_iri(key, vocab=True)
-        if expanded == "@id" and id_key is None:
-            id_key = key
-        elif expanded == "@type" and type_key is None:
-            type_key = key
-        elif expanded == "@index" and extras["index_key"] is None:
-            extras["index_key"] = key
-        elif expanded == "@reverse":
-            extras["reverse_keys"].append(key)
-        elif expanded == "@included":
-            extras["included_keys"].append(key)
-        elif expanded == "@graph":
-            if extras["graph_keys"]:
-                # batch raises CollidingKeywords on a second @graph key
-                # (@graph is not in expand.rb's @included/@type/@reverse
-                # exemption) — fall back so the error row matches
-                return None
-            extras["graph_keys"].append(key)
-        elif expanded == "@nest":
-            extras["nest_keys"].append(key)
-        elif isinstance(expanded, str) and is_keyword(expanded):
-            return None
-        else:
-            # IRI properties AND droppable keys both stream: per-item
-            # expansion applies the same drop-with-warning rule as batch
-            prop_keys.append(key)
-    if (
-        not prop_keys
-        and type_key is None
-        and not any(
-            extras[k]
-            for k in ("reverse_keys", "included_keys", "graph_keys", "nest_keys")
-        )
+    # node: batch raises CollidingKeywords on a second @graph key (@graph
+    # is not in expand.rb's @included/@type/@reverse exemption), so a
+    # repeated single-valued keyword falls back for error parity
+    if keys.keys() - _NODE_KEYWORDS or any(
+        len(keys.get(kw, ())) > 1 for kw in ("@id", "@type", "@index", "@graph")
     ):
-        return None  # id-only / empty: batch's free-floating drop applies
-    if id_key is not None and not isinstance(doc[id_key], str):
-        return None  # embedded/invalid @id → batch path (error parity)
-    return (
-        ctx,
-        (doc[id_key] if id_key is not None else None),
-        type_key,
-        prop_keys,
-        extras,
-    )
-
-
-def _value_or_list_ctx(doc, ctx: Context, base: str | None):
-    """→ parsed ctx when the top level is a VALUE or LIST object (any key
-    expands to @value/@list); None otherwise.  These expand to at most a
-    handful of quads (free-floating values/lists drop at the top level),
-    but the reference streams ANY shape single-pass
-    (streaming_reader.rb:74-423) — routing them through the same
-    per-element emit closes the last batch-fallback shape, with
-    validation errors surfacing exactly as in batch (same expand())."""
-    if not isinstance(doc, dict):
         return None
-    if "@context" in doc:
-        ctx = ctx.parse(doc["@context"], base_url=base)
-    for key in doc:
-        if key == "@context":
-            continue
-        if ctx.expand_key(key) in ("@value", "@list"):
-            return ctx
-    return None
+    if not props and keys.keys() <= {"@id", "@index"}:
+        return None  # id-only / empty: batch's free-floating drop applies
+    if "@id" in keys and not isinstance(doc[keys["@id"][0]], str):
+        return None  # embedded/invalid @id → batch path (error parity)
+    return "node", ctx, (keys, props)
 
 
 def _type_scoped(ctx: Context, type_values) -> Context:
     """Apply type-scoped contexts exactly as expansion steps 11-12 do
     (expand.py) — needed once so every property mini-document expands
     under the node's scoped context."""
-    from ..context import UNSET
-
     tvals = type_values if isinstance(type_values, list) else [type_values]
     for t in sorted(v for v in tvals if isinstance(v, str)):
         ttd = ctx.term(t)
@@ -272,13 +196,7 @@ def _unused_bnode_label(doc) -> str:
 
 
 def _stream_node_properties(
-    doc,
-    probe,
-    base,
-    rdf_direction,
-    produce_generalized_rdf,
-    warnings_out,
-    rdfstar=False,
+    doc, ctx: Context, keys: dict, props: list, namer, options
 ) -> Iterator[Quad]:
     """Stream one node object property-item by property-item: each item
     becomes a mini-document ``{"@id": subject, key: item}`` expanded and
@@ -287,18 +205,18 @@ def _stream_node_properties(
     @graph wrappers-with-properties stream per inner item the same way;
     @index rides the shell mini-doc (validated there, emits no quads);
     each @nest entry expands as one unit."""
-    ctx, sid_raw, type_key, prop_keys, extras = probe
-    options = ExpandOptions(base=base, rdfstar=rdfstar)
-    namer = BlankNodeNamer()
+    (id_key,) = keys.get("@id", (None,))
+    (type_key,) = keys.get("@type", (None,))
+    (index_key,) = keys.get("@index", (None,))
     # anonymous top-level node: a synthetic explicit label keeps the
     # subject identical across mini-documents (the shared namer renames
     # it consistently; canonical labeling downstream is unaffected).
     # The label is chosen collision-proof against the document's own
     # bnode labels so the shared namer can never merge distinct nodes.
-    subject = sid_raw if sid_raw is not None else _unused_bnode_label(doc)
+    subject = doc[id_key] if id_key is not None else _unused_bnode_label(doc)
 
     def minidocs():
-        if type_key is not None or extras["index_key"] is not None:
+        if type_key is not None or index_key is not None:
             # shell: @id + @type (+ @index, which emits no quads but
             # must be VALIDATED — a non-string @index raises here,
             # before any property quads stream out).  The @type quads
@@ -310,9 +228,9 @@ def _stream_node_properties(
             shell = {"@id": subject}
             if type_key is not None:
                 shell[type_key] = doc[type_key]
-            if extras["index_key"] is not None:
-                shell[extras["index_key"]] = doc[extras["index_key"]]
-            yield shell, ctx
+            if index_key is not None:
+                shell[index_key] = doc[index_key]
+            yield shell
         # container probing uses the scoped ctx (a type-scoped context
         # may redefine a term's @container)
         scoped = (
@@ -324,7 +242,7 @@ def _stream_node_properties(
                 md[type_key] = doc[type_key]
             return md
 
-        for key in prop_keys:
+        for key in props:
             values = doc[key]
             td = scoped.term(key)
             container = td.container_mapping if td else frozenset()
@@ -339,46 +257,46 @@ def _stream_node_properties(
                 # emit "[1]","[2]" instead of "[1,2]"); maps
                 # (@language/@index/... containers) and single values
                 # likewise expand as one unit
-                yield with_type({"@id": subject, key: values}), ctx
+                yield with_type({"@id": subject, key: values})
                 continue
             for item in values:
-                yield with_type({"@id": subject, key: [item]}), ctx
+                yield with_type({"@id": subject, key: [item]})
 
         # @reverse maps: one mini-doc per reverse-property item — each
         # re-derives {reverse-key: {rk: [item]}} so per-item expansion
         # applies the same validation (e.g. @list under @reverse raises)
-        for rkey in extras["reverse_keys"]:
+        for rkey in keys.get("@reverse", ()):
             rmap = doc[rkey]
             if not isinstance(rmap, dict):
                 # invalid @reverse value: expand as one unit → same error
-                yield with_type({"@id": subject, rkey: rmap}), ctx
+                yield with_type({"@id": subject, rkey: rmap})
                 continue
             for rk, rv in rmap.items():
                 items = rv if isinstance(rv, list) else [rv]
                 for item in items:
-                    yield with_type({"@id": subject, rkey: {rk: [item]}}), ctx
+                    yield with_type({"@id": subject, rkey: {rk: [item]}})
 
         # @included: each included node is an independent top-level node —
         # expand one at a time (per-item InvalidIncludedValue parity)
-        for ikey in extras["included_keys"]:
+        for ikey in keys.get("@included", ()):
             ival = doc[ikey]
             items = ival if isinstance(ival, list) else [ival]
             for item in items:
-                yield with_type({"@id": subject, ikey: [item]}), ctx
+                yield with_type({"@id": subject, ikey: [item]})
 
         # @nest entries expand as ONE unit (nested maps are metadata-sized
         # next to the giant property arrays this reader exists for)
-        for nkey in extras["nest_keys"]:
-            yield with_type({"@id": subject, nkey: doc[nkey]}), ctx
+        for nkey in keys.get("@nest", ()):
+            yield with_type({"@id": subject, nkey: doc[nkey]})
 
         # @graph on a wrapper WITH properties: named graph (graph name =
         # this node's @id, or the shared anonymous label) — stream its
         # elements one by one through {@id, @graph: [el]} mini-docs
-        for gkey in extras["graph_keys"]:
+        for gkey in keys.get("@graph", ()):
             gval = doc[gkey]
             elements = gval if isinstance(gval, list) else [gval]
             for el in elements:
-                yield with_type({"@id": subject, gkey: [el]}), ctx
+                yield with_type({"@id": subject, gkey: [el]})
 
     # The @type shell (first mini-doc) emits the node's type quads; the
     # property mini-docs re-include @type purely so type-SCOPED contexts
@@ -390,14 +308,10 @@ def _stream_node_properties(
     # shell quad is suppressed at most ONCE per mini-doc — a property
     # whose own IRI is rdf:type keeps its legitimately duplicate quad,
     # matching the batch multiset. Memory: O(node's type count).
-    from collections import Counter
-
     shell_type_quads: Counter = Counter()
-    for i, (md, c) in enumerate(minidocs()):
+    for i, md in enumerate(minidocs()):
         suppressed: Counter = Counter()
-        for q in _emit_elements(
-            [(md, c)], None, namer, options, rdf_direction, produce_generalized_rdf
-        ):
+        for q in _emit_elements([(md, ctx)], None, namer, options):
             if type_key is not None:
                 if i == 0:
                     shell_type_quads[q] += 1
@@ -405,27 +319,21 @@ def _stream_node_properties(
                     suppressed[q] += 1
                     continue
             yield q
-    if warnings_out is not None:
-        warnings_out.extend(options.warnings)
 
 
 def stream_doc_quads(
     doc,
     base: str | None = None,
     cache: ContextCache | None = None,
-    expand_context=None,
-    rdf_direction: str | None = None,
-    produce_generalized_rdf: bool = False,
-    processing_mode: str = "json-ld-1.1",
     warnings_out: list | None = None,
     strict_order: bool = False,
     rdfstar: bool = False,
 ) -> Iterator[Quad]:
     """Generator over the document's quads with bounded memory.
 
-    Streams element-by-element along the document's top-level spine when
-    one exists; falls back to the batch path (identical output) for
-    documents without a streamable spine.
+    Streams the document's spine element by element, or its top-level
+    node property item by property item (``_classify``); every other
+    shape takes the batch path (identical output).
 
     ``strict_order=True`` enforces the reference StreamingReader's
     single-pass key-order constraint (streaming_reader.rb raises
@@ -441,83 +349,32 @@ def stream_doc_quads(
             raise err.InvalidStreamingKeyOrder(
                 f"@context must come first in streaming mode, got keys {keys!r}"
             )
-    ctx = Context(
-        base=base, processing_mode=processing_mode, cache=cache or ContextCache()
-    )
-    if expand_context is not None:
-        ec = expand_context
-        if isinstance(ec, dict) and "@context" in ec:
-            ec = ec["@context"]
-        ctx = ctx.parse(ec, base_url=base)
-
-    spine = _streamable_spine(doc, ctx, base)
-    if spine is None:
-        node_probe = _streamable_node(doc, ctx, base)
-        if node_probe is not None:
-            yield from _stream_node_properties(
-                doc,
-                node_probe,
-                base,
-                rdf_direction,
-                produce_generalized_rdf,
-                warnings_out,
-                rdfstar=rdfstar,
-            )
-            return
-        vl_ctx = _value_or_list_ctx(doc, ctx, base)
-        if vl_ctx is not None:
-            options = ExpandOptions(base=base, rdfstar=rdfstar)
-            namer = BlankNodeNamer()
-            yield from _emit_elements(
-                ((doc, vl_ctx),),
-                None,
-                namer,
-                options,
-                rdf_direction,
-                produce_generalized_rdf,
-            )
-            if warnings_out is not None:
-                warnings_out.extend(options.warnings)
-            return
-        from ..to_rdf import doc_to_quads
-
+    cache = ContextCache() if cache is None else cache
+    shape = _classify(doc, Context(base=base, cache=cache), base)
+    if shape is None:
         yield from doc_to_quads(
-            doc,
-            base=base,
-            cache=cache,
-            expand_context=expand_context,
-            rdf_direction=rdf_direction,
-            produce_generalized_rdf=produce_generalized_rdf,
-            processing_mode=processing_mode,
-            warnings_out=warnings_out,
-            rdfstar=rdfstar,
+            doc, base=base, cache=cache, warnings_out=warnings_out, rdfstar=rdfstar
         )
         return
-
-    elements, graph_name, ctx, dropped = spine
-    if graph_name is not None and not _valid_resource(graph_name):
-        return
+    kind, ctx, detail = shape
     options = ExpandOptions(base=base, rdfstar=rdfstar)
-    options.warnings.extend(f"dropped key {key!r}" for key in dropped)
     namer = BlankNodeNamer()  # shared: document-scoped _:labels + one sequence
-    yield from _emit_elements(
-        ((el, ctx) for el in elements),
-        graph_name,
-        namer,
-        options,
-        rdf_direction,
-        produce_generalized_rdf,
-    )
+    if kind == "spine":
+        elements, graph_name, dropped = detail
+        options.warnings.extend(f"dropped key {key!r}" for key in dropped)
+        yield from _emit_elements(
+            ((el, ctx) for el in elements), graph_name, namer, options
+        )
+    else:
+        yield from _stream_node_properties(doc, ctx, *detail, namer, options)
     if warnings_out is not None:
         warnings_out.extend(options.warnings)
 
 
-def _emit_elements(
-    pairs, graph_name, namer, options, rdf_direction, produce_generalized_rdf
-) -> Iterator[Quad]:
+def _emit_elements(pairs, graph_name, namer, options) -> Iterator[Quad]:
     """Expand + node-map + emit each (element, ctx) pair independently —
     the bounded buffer, same role as the reference's provisional-
-    statement window."""
+    statement window.  An element's default graph is ``graph_name``."""
     for element, ctx in pairs:
         expanded = expand(element, None, ctx, options)
         if len(options.warnings) > 64:
@@ -528,26 +385,14 @@ def _emit_elements(
             options.warnings[:] = dict.fromkeys(options.warnings)
         if expanded is None:
             continue
-        expanded = expanded if isinstance(expanded, list) else [expanded]
         node_map: dict[str, dict] = {"@default": {}}
         create_node_map(expanded, node_map, namer)
-        emitter = _RdfEmitter(namer, rdf_direction, produce_generalized_rdf)
-        for gname in sorted(node_map):
-            g = graph_name if gname == "@default" else gname
-            if g is not None and not _valid_resource(g):
-                continue
-            graph = node_map[gname]
-            for id_ in sorted(graph):
-                emitter.node_to_quads(id_, graph[id_], g)
-        yield from emitter.quads
-        emitter.quads.clear()
+        yield from node_map_quads(node_map, namer, graph_name)
 
 
 def make_streaming_pages_to_triples(
     cache_bc,
     cache_version: str = "v0",
-    rdf_direction: str | None = None,
-    produce_generalized_rdf: bool = False,
     chunk_rows: int = 50_000,
     rdfstar: bool = False,
 ):
@@ -562,13 +407,7 @@ def make_streaming_pages_to_triples(
 
     def script_quads(doc, base, cache, warnings):
         return stream_doc_quads(
-            doc,
-            base=base,
-            cache=cache,
-            rdf_direction=rdf_direction,
-            produce_generalized_rdf=produce_generalized_rdf,
-            warnings_out=warnings,
-            rdfstar=rdfstar,
+            doc, base=base, cache=cache, warnings_out=warnings, rdfstar=rdfstar
         )
 
     def page_rows(url, html, cache):

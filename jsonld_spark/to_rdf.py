@@ -280,21 +280,36 @@ class _RdfEmitter:
                 self.emit(id_, prop, obj, lit, dt, lang, graph_name)
 
 
-def expanded_to_quads(
-    expanded,
+def node_map_quads(
+    node_map: dict,
+    namer: BlankNodeNamer,
+    default_graph: str | None = None,
     rdf_direction: str | None = None,
     produce_generalized_rdf: bool = False,
 ) -> list[Quad]:
-    node_map, namer = node_map_from_expanded(expanded)
+    """A node map's quads, graph by graph and subject by subject in
+    sorted order; the ``@default`` graph's quads carry ``default_graph``.
+    Graphs whose name is not an IRI or blank node emit nothing."""
     emitter = _RdfEmitter(namer, rdf_direction, produce_generalized_rdf)
     for graph_name in sorted(node_map):
-        g = None if graph_name == "@default" else graph_name
+        g = default_graph if graph_name == "@default" else graph_name
         if g is not None and not _valid_resource(g):
             continue
         graph = node_map[graph_name]
         for id_ in sorted(graph):
             emitter.node_to_quads(id_, graph[id_], g)
     return emitter.quads
+
+
+def expanded_to_quads(
+    expanded,
+    rdf_direction: str | None = None,
+    produce_generalized_rdf: bool = False,
+) -> list[Quad]:
+    node_map, namer = node_map_from_expanded(expanded)
+    return node_map_quads(
+        node_map, namer, None, rdf_direction, produce_generalized_rdf
+    )
 
 
 def doc_to_quads(

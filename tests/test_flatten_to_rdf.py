@@ -1,5 +1,7 @@
 """Flatten + toRdf unit tests (W3C-suite-style cases, written from spec)."""
 
+import json
+
 from jsonld_spark import (
     doc_to_quads,
     flatten_expanded,
@@ -233,6 +235,91 @@ def test_flatten_dedups_values():
     }
     flat = flatten_expanded(expand_document(doc))
     assert flat[0]["http://s.org/p"] == [{"@value": "v"}]
+
+
+def _count_json_eq(monkeypatch):
+    """Count json_eq calls (recursive ones included) wherever the node
+    map and fromRdf compare values."""
+    import jsonld_spark.flatten as flatten_mod
+    import jsonld_spark.from_rdf as from_rdf_mod
+
+    calls = []
+    real = flatten_mod.json_eq
+
+    def counted(a, b):
+        calls.append(1)
+        return real(a, b)
+
+    monkeypatch.setattr(flatten_mod, "json_eq", counted)
+    monkeypatch.setattr(from_rdf_mod, "json_eq", counted, raising=False)
+    return calls
+
+
+def test_node_map_value_dedup_is_linear(monkeypatch):
+    """An ItemList of N items puts N references on one property; the
+    node map's value dedup must not compare each to all earlier ones."""
+    n = 2000
+    doc = {
+        "@context": {"@vocab": "http://schema.org/"},
+        "@type": "ItemList",
+        "itemListElement": [
+            {"@type": "ListItem", "position": i, "name": f"item {i}"}
+            for i in range(n)
+        ],
+    }
+    calls = _count_json_eq(monkeypatch)
+    out = doc_to_quads(doc)
+    assert len(out) == 1 + 4 * n
+    assert len(calls) <= 4 * n
+
+
+def test_from_quads_value_dedup_is_linear(monkeypatch):
+    """fromRdf with N objects on one subject and property dedups each
+    value in O(1) comparisons, not against every earlier value."""
+    from jsonld_spark.from_rdf import from_quads
+
+    n = 2000
+    qs = [
+        Quad("http://e.com/s", "http://s.org/p", f"http://e.com/o{i}",
+             False, None, None, None)
+        for i in range(n)
+    ] + [Quad("http://e.com/s", "http://s.org/p", "http://e.com/o0",
+              False, None, None, None)]
+    calls = _count_json_eq(monkeypatch)
+    out = from_quads(qs)
+    subject = next(node for node in out if node["@id"] == "http://e.com/s")
+    assert len(subject["http://s.org/p"]) == n  # the repeat is deduped
+    assert len(calls) <= 4 * n
+
+
+def test_long_value_array_dedup_keeps_json_eq():
+    """Past the scan threshold the keyed dedup keeps json_eq's rules: a
+    boolean is not a number, 1 equals 1.0, object key order does not
+    matter, list order does."""
+    from jsonld_spark.flatten import json_eq
+
+    values = [{"@value": f"s{i}"} for i in range(10)] + [
+        {"@value": 1},
+        {"@value": True},
+        {"@value": 1.0},
+        {"@value": 0},
+        {"@value": False},
+        {"@value": "x", "@language": "en"},
+        {"@language": "en", "@value": "x"},
+        {"@value": [1, 2], "@type": "@json"},
+        {"@value": [2, 1], "@type": "@json"},
+        {"@value": {"a": 1, "b": [True]}, "@type": "@json"},
+        {"@type": "@json", "@value": {"b": [True], "a": 1.0}},
+        {"@value": "s3"},
+    ]
+    expected = []
+    for v in values:
+        if not any(json_eq(v, e) for e in expected):
+            expected.append(v)
+    assert len(expected) == len(values) - 4
+    doc = [{"@id": "http://e.com/a", "http://s.org/p": values}]
+    flat = flatten_expanded(json.loads(json.dumps(doc)))
+    assert flat[0]["http://s.org/p"] == expected
 
 
 def test_nquads_roundtrip():

