@@ -36,6 +36,12 @@ from .iri import (
 # (reference: MAX_CONTEXTS_LOADED, lib/json/ld.rb:111).
 MAX_CONTEXTS_LOADED = 50
 
+# Entries an IRI-expansion memo holds before it is cleared.  Terms and
+# types repeat, but every node id is a fresh entry: without a cap a
+# 200k-element dump spine (or a worker's pages sharing one memoized
+# context template) keeps one entry per id it ever expanded.
+IRI_MEMO_MAX = 10_000
+
 # Sentinel distinguishing "not set" from "explicitly null".
 UNSET = object()
 
@@ -674,6 +680,8 @@ class Context:
             if hit is not UNSET:
                 return hit
             result = self._expand_iri_uncached(value, document_relative, vocab, base)
+            if len(memo) >= IRI_MEMO_MAX:
+                memo.clear()
             memo[key] = result
             return result
         return self._expand_iri_full(
@@ -694,6 +702,8 @@ class Context:
             if value in KEYWORDS
             else self._expand_iri_uncached(value, False, True, None)
         )
+        if len(memo) >= IRI_MEMO_MAX:
+            memo.clear()
         memo[value] = result
         return result
 

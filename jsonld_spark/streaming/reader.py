@@ -7,14 +7,16 @@ bounded by the largest single node, not by the document's total quad
 count.  Streaming across pages happens at the pipeline level
 (``streaming.stream``); this reader exists to bound one giant page.
 
-``_classify`` parses a document's ``@context`` once, expands each
-top-level key once, and picks one of three routes:
+``_classify`` parses a document's ``@context`` once (through the
+per-process memo of base-independent contexts, as expansion does),
+expands each top-level key once, and picks one of three routes:
 
 * **spine** — a top-level array, a lone ``@set`` array, or an ``@graph``
   array whose wrapper holds at most an IRI ``@id`` besides keys that
   expansion drops (those count as absent and warn, as in batch).  This
-  is the dataset dump: each element runs expand → node map → emit on
-  its own, so peak memory is O(largest element), not O(total quads).
+  is the dataset dump: each element is emitted on its own
+  (``_emit_elements``), so peak memory is O(largest element), not
+  O(total quads).
 * **node** — one top-level node object, the other giant shape (one
   entity with a multi-million-item property array).  It streams
   property item by property item (``_stream_node_properties``, the
@@ -29,6 +31,23 @@ top-level key once, and picks one of three routes:
   handful of quads (free-floating values drop), and streaming it would
   still expand the whole document in one ``expand`` call, which is what
   the batch path does — so it does not stream.
+
+Per element (a spine element, or one of the node route's per-item
+mini-documents), ``_emit_elements`` takes one of two paths:
+
+* **flat node** — an element with an IRI ``@id``, IRI ``@type`` values
+  and scalar-valued IRI properties (``_flat_node`` lists every
+  condition), the dump shape ``{"@id", "@type", "cell"}``, goes from
+  JSON straight to quads, like the reference's reader: its node-map
+  entry is built with the expansion's own ``expand_key``,
+  ``expand_iri``, ``expand_value`` and ``add_unique_value`` calls and
+  emitted by one ``_RdfEmitter`` shared across the spine, with no
+  expanded form and no node map.
+* **general** — every other element, and every element that would warn,
+  raise, revert a non-propagated context or mint a blank node, runs
+  expand → node map → emit on its own.
+
+Both give the same quads in the same order (property-tested).
 
 Blank-node labels: one ``BlankNodeNamer`` is shared across elements, so
 explicit ``_:x`` labels keep their document-scoped identity.  Output is
@@ -64,12 +83,12 @@ from collections import Counter
 from typing import Iterator
 
 from .. import errors as err
-from ..context import UNSET, Context, ContextCache
+from ..context import UNSET, Context, ContextCache, parse_initial_cached
 from ..expand import ExpandOptions, expand
-from ..flatten import BlankNodeNamer, create_node_map
+from ..flatten import BlankNodeNamer, add_unique_value, create_node_map
 from ..iri import is_keyword
 from ..rdf_model import Quad
-from ..to_rdf import doc_to_quads, node_map_quads
+from ..to_rdf import _RdfEmitter, _valid_resource, doc_to_quads, node_map_quads
 
 # the keywords a streamed node object may carry; a document with any
 # other keyword takes the batch path
@@ -90,7 +109,14 @@ def _classify(doc, ctx: Context, base: str | None):
     if not isinstance(doc, dict):
         return None
     if "@context" in doc:
-        ctx = ctx.parse(doc["@context"], base_url=base)
+        if not ctx.has_terms() and ctx.previous_context is None:
+            # expand's step 10 rule: a pristine context takes the
+            # per-process memo of base-independent contexts
+            ctx = parse_initial_cached(
+                ctx.base, ctx.processing_mode, ctx.cache, doc["@context"], base
+            )
+        else:
+            ctx = ctx.parse(doc["@context"], base_url=base)
     keys: dict[str, list[str]] = {}
     props: list[str] = []
     dropped: list[str] = []
@@ -309,9 +335,10 @@ def _stream_node_properties(
     # whose own IRI is rdf:type keeps its legitimately duplicate quad,
     # matching the batch multiset. Memory: O(node's type count).
     shell_type_quads: Counter = Counter()
-    for i, md in enumerate(minidocs()):
+    pairs = ((md, ctx) for md in minidocs())
+    for i, quads in enumerate(_emit_elements(pairs, None, namer, options)):
         suppressed: Counter = Counter()
-        for q in _emit_elements([(md, ctx)], None, namer, options):
+        for q in quads:
             if type_key is not None:
                 if i == 0:
                     shell_type_quads[q] += 1
@@ -362,20 +389,102 @@ def stream_doc_quads(
     if kind == "spine":
         elements, graph_name, dropped = detail
         options.warnings.extend(f"dropped key {key!r}" for key in dropped)
-        yield from _emit_elements(
-            ((el, ctx) for el in elements), graph_name, namer, options
-        )
+        pairs = ((el, ctx) for el in elements)
+        for quads in _emit_elements(pairs, graph_name, namer, options):
+            yield from quads
     else:
         yield from _stream_node_properties(doc, ctx, *detail, namer, options)
     if warnings_out is not None:
         warnings_out.extend(options.warnings)
 
 
-def _emit_elements(pairs, graph_name, namer, options) -> Iterator[Quad]:
-    """Expand + node-map + emit each (element, ctx) pair independently —
-    the bounded buffer, same role as the reference's provisional-
-    statement window.  An element's default graph is ``graph_name``."""
+def _is_iri(value) -> bool:
+    """An expansion result naming an IRI: no keyword, no blank node,
+    nothing the expansion drops."""
+    return isinstance(value, str) and ":" in value and not value.startswith("_:")
+
+
+def _flat_node(element, ctx: Context, base: str | None) -> dict | None:
+    """The node-map entry ``expand`` → ``create_node_map`` builds for a
+    FLAT node object, built straight from the JSON element; None sends
+    the element down the general path.  Flat means: an IRI ``@id`` under
+    exactly one key, string ``@type`` values that expand to IRIs and
+    have no type-scoped context, and every other key an IRI property
+    whose term has no container, scoped context, reverse or ``@json``
+    type, holding one non-null scalar or an array of them (each
+    expanding to a value object or an IRI reference).  A term's ``@nest``
+    value only steers compaction, so it does not matter here; a key
+    expanding to ``@nest`` is a keyword and falls back.  Every case
+    that would warn, raise, revert the context or touch the blank-node
+    namer falls back, so the entry is exactly the general path's."""
+    if not isinstance(element, dict) or ctx.previous_context is not None:
+        return None
+    subject = None
+    types: list[str] = []
+    props: list[tuple[str, str, object]] = []
+    for key, value in element.items():
+        prop = ctx.expand_key(key)
+        if prop == "@id":
+            if subject is not None or not isinstance(value, str):
+                return None  # a second @id key raises CollidingKeywords
+            subject = ctx.expand_iri(value, document_relative=True, base=base)
+            if not _is_iri(subject):
+                return None
+        elif prop == "@type":
+            for t in value if isinstance(value, list) else (value,):
+                if not isinstance(t, str):
+                    return None
+                ttd = ctx.term(t)
+                if ttd is not None and ttd.local_context is not UNSET:
+                    return None
+                t = ctx.expand_iri(t, vocab=True, document_relative=True, base=base)
+                if not _is_iri(t):
+                    return None
+                types.append(t)
+        elif not _is_iri(prop):
+            return None
+        else:
+            td = ctx.term(key)
+            if td is not None and (
+                td.container_mapping
+                or td.local_context is not UNSET
+                or td.reverse_property
+                or td.type_mapping == "@json"
+            ):
+                return None
+            props.append((prop, key, value))
+    if subject is None:
+        return None
+    node: dict = {"@id": subject}
+    dedup: dict = {}
+    for t in types:
+        add_unique_value(node, "@type", t, dedup)
+    for prop, key, value in props:
+        for v in value if isinstance(value, list) else (value,):
+            if v is None or isinstance(v, (dict, list)):
+                return None
+            obj = ctx.expand_value(key, v, base=base)
+            if "@id" in obj and not _is_iri(obj["@id"]):
+                return None
+            add_unique_value(node, prop, obj, dedup)
+    return node
+
+
+def _emit_elements(pairs, graph_name, namer, options) -> Iterator[list[Quad]]:
+    """Each (element, ctx) pair's quads, one list per element — the
+    bounded buffer, same role as the reference's provisional-statement
+    window.  An element's default graph is ``graph_name``.  A flat node
+    object (``_flat_node``) goes straight to the shared emitter; any
+    other element runs expand → node map → emit on its own."""
+    emitter = _RdfEmitter(namer)
+    flat_ok = graph_name is None or _valid_resource(graph_name)
     for element, ctx in pairs:
+        node = _flat_node(element, ctx, options.base) if flat_ok else None
+        if node is not None:
+            emitter.quads = []
+            emitter.node_to_quads(node["@id"], node, graph_name)
+            yield emitter.quads
+            continue
         expanded = expand(element, None, ctx, options)
         if len(options.warnings) > 64:
             # per-item mini-docs re-derive the SAME warning for every
@@ -384,10 +493,11 @@ def _emit_elements(pairs, graph_name, namer, options) -> Iterator[Quad]:
             # the reader's bounded-memory contract
             options.warnings[:] = dict.fromkeys(options.warnings)
         if expanded is None:
+            yield []
             continue
         node_map: dict[str, dict] = {"@default": {}}
         create_node_map(expanded, node_map, namer)
-        yield from node_map_quads(node_map, namer, graph_name)
+        yield node_map_quads(node_map, namer, graph_name)
 
 
 def make_streaming_pages_to_triples(

@@ -4,6 +4,7 @@ hold for ARBITRARY generated JSON-LD documents, not just fixtures."""
 import json
 import string
 
+import pytest
 from hypothesis import example, given, settings, strategies as st
 
 from jsonld_spark import doc_to_quads, expand_document
@@ -400,3 +401,166 @@ def test_compact_expand_roundtrip_sound(doc, ctx):
         return (type(v).__name__, v)
 
     assert norm(reexpanded) == norm(expanded), (expanded, compacted, reexpanded)
+
+
+# --- bounded reader: flat node objects straight to quads -----------------------
+
+_XSD_INT = "http://www.w3.org/2001/XMLSchema#integer"
+_FLAT_TERMS = {
+    "s": "http://ex.org/s",
+    "s2": "http://ex.org/s",  # a second key expanding to the same IRI
+    "i": {"@id": "http://ex.org/i", "@type": "@id"},
+    "v": {"@id": "http://ex.org/v", "@type": "@vocab"},
+    "n": {"@id": "http://ex.org/n", "@type": _XSD_INT},
+    "none": {"@id": "http://ex.org/none", "@type": "@none"},
+    "j": {"@id": "http://ex.org/j", "@type": "@json"},
+    "fr": {"@id": "http://ex.org/fr", "@language": "fr"},
+    "nolang": {"@id": "http://ex.org/nolang", "@language": None},
+    "rtl": {"@id": "http://ex.org/rtl", "@direction": "rtl"},
+    "lst": {"@id": "http://ex.org/lst", "@container": "@list"},
+    "set": {"@id": "http://ex.org/set", "@container": "@set"},
+    "rev": {"@reverse": "http://ex.org/rev"},
+    "nest": {"@id": "http://ex.org/nest", "@nest": "@nest"},
+    "id": "@id",
+    "type": "@type",
+    "T": {"@id": "http://ex.org/T",
+          "@context": {"@language": "de", "s": "http://ex.org/scoped"}},
+    "drop": None,
+}
+# keys the flat path takes (with the context above); "undefined" is
+# an IRI only under @vocab
+_FLAT_KEYS = ["s", "s2", "http://ex.org/s", "i", "v", "n", "none", "fr",
+              "nolang", "rtl", "undefined"]
+_flat_scalar = st.one_of(
+    st.sampled_from(["x", "C", "ex:y", "http://ex.org/o", "", "rel/p", "_:b1", "@foo"]),
+    st.sampled_from([0, 1, 1.0, 1.5, True, False, 10**21]),
+)
+_flat_value = st.one_of(_flat_scalar, st.lists(_flat_scalar, max_size=4))
+_flat_type = st.sampled_from(["C", "http://ex.org/C", "ex:y", "rel/t"])
+# one change that may take an element off the flat path
+_PERTURBATIONS = [
+    *(("key", k) for k in ["j", "lst", "set", "rev", "nest", "drop", "@foo",
+                           "_:bp", "@index", "@context", "undefined"]),
+    ("value", None), ("value", [1, None]), ("value", {"s": "x"}),
+    ("value", {"@value": "x"}), ("value", [[1]]), ("value", []),
+    ("id", None), ("id", 5), ("id", "_:b1"), ("id", "@foo"), ("id", "collide"),
+    ("type", "T"), ("type", 5), ("type", "_:b1"), ("type", "@foo"), ("type", []),
+]
+
+
+@st.composite
+def _flat_ish_docs(draw, forced=None):
+    """Spine and single-node documents of flat node objects under
+    generated term definitions, each element with at most one change
+    that may send it down the general path; the first element gets the
+    ``forced`` change when one is given."""
+    ctx = dict(_FLAT_TERMS)
+    for key, choices in [
+        ("@vocab", ["http://ex.org/vocab/"]),
+        ("@language", ["en", "EN-gb"]),
+        ("@direction", ["ltr"]),
+    ]:
+        if draw(st.booleans()):
+            ctx[key] = draw(st.sampled_from(choices))
+    if draw(st.integers(0, 9)) == 0:
+        ctx["@propagate"] = False
+
+    def element(change):
+        id_key = draw(st.sampled_from(["@id", "@id", "id"]))
+        el = {id_key: draw(st.sampled_from(["http://ex.org/a", "ex:c", "rel/b"]))}
+        type_key = draw(st.sampled_from(["@type", "type", None]))
+        if type_key is not None:
+            el[type_key] = draw(st.one_of(_flat_type, st.lists(_flat_type, max_size=3)))
+        for key in draw(st.lists(st.sampled_from(_FLAT_KEYS), max_size=3)):
+            el[key] = draw(_flat_value)
+        if change is not None:
+            what, arg = change
+            if what == "key":
+                el[arg] = {"s": "http://ex.org/other"} if arg == "@context" else draw(_flat_value)
+            elif what == "value":
+                el[draw(st.sampled_from(_FLAT_KEYS))] = arg
+            elif what == "id" and arg is None:
+                del el[id_key]
+            elif what == "id" and arg == "collide":
+                el["id" if id_key == "@id" else "@id"] = "http://ex.org/z"
+            elif what == "id":
+                el[id_key] = arg
+            else:
+                el[type_key or "@type"] = arg
+        return el
+
+    changes = st.one_of(st.none(), st.sampled_from(_PERTURBATIONS))
+    elements = [element(forced)] if forced is not None else []
+    elements += [element(draw(changes)) for _ in range(draw(st.integers(1 - len(elements), 3)))]
+    if draw(st.booleans()):
+        doc = {"@context": ctx, "@graph": elements}
+        # a named graph, valid or not (a space is no IRI character)
+        name = draw(st.sampled_from([None, "http://ex.org/g", "http://ex.org/g h"]))
+        return doc if name is None else {"@id": name, **doc}
+    return {"@context": ctx, **elements[0]}
+
+
+def _reader_run(doc):
+    """(quads emitted before any error, warnings, error code)."""
+    from jsonld_spark.errors import JsonLdError
+    from jsonld_spark.streaming.reader import stream_doc_quads
+
+    quads, warnings, code = [], [], None
+    try:
+        for q in stream_doc_quads(
+            json.loads(json.dumps(doc)), base="http://base.e/", warnings_out=warnings
+        ):
+            quads.append(q)
+    except JsonLdError as e:
+        code = e.code
+    return quads, warnings, code
+
+
+@settings(max_examples=300, deadline=None)
+@given(_flat_ish_docs())
+@example(doc={
+    "@context": {"s": "http://ex.org/s", "s2": "http://ex.org/s", "id": "@id"},
+    "@graph": [{"id": "http://ex.org/a", "s": [1, 1.0, True], "s2": 1}],
+})
+@example(doc={
+    "@context": {"id": "@id"},
+    "@graph": [{"id": "http://ex.org/a", "@id": "http://ex.org/b"}],
+})
+@example(doc={
+    "@context": {"@vocab": "http://ex.org/vocab/", "@language": "en",
+                 "@direction": "ltr", "none": _FLAT_TERMS["none"],
+                 "n": _FLAT_TERMS["n"], "v": _FLAT_TERMS["v"]},
+    "@graph": [{"@id": "http://ex.org/a", "@type": ["C", "C"], "none": "x",
+                "n": [1, "2"], "v": ["C", "ex:y"], "p": []}],
+})
+@example(doc={
+    "@context": {"@vocab": "http://ex.org/vocab/", "drop": None},
+    "@graph": [{"@id": "http://ex.org/a", "p": "x", "drop": "y"}],
+})
+def test_flat_node_path_matches_general_path(doc):
+    """Property: the bounded reader's flat-node route gives exactly the
+    general per-element path's quad list (order included), warnings and
+    error code."""
+    from unittest import mock
+
+    from jsonld_spark.streaming import reader
+
+    with mock.patch.object(reader, "_flat_node", lambda *a: None):
+        want = _reader_run(doc)
+    assert _reader_run(doc) == want
+
+
+@pytest.mark.parametrize("change", _PERTURBATIONS, ids=lambda c: f"{c[0]}={c[1]!r}")
+@settings(max_examples=25, deadline=None)
+@given(data=st.data())
+def test_flat_node_path_matches_general_path_per_change(change, data):
+    """The same property with each change that may take an element off
+    the flat path forced onto the first element."""
+    from unittest import mock
+
+    from jsonld_spark.streaming import reader
+
+    doc = data.draw(_flat_ish_docs(change))
+    with mock.patch.object(reader, "_flat_node", lambda *a: None):
+        want = _reader_run(doc)
+    assert _reader_run(doc) == want

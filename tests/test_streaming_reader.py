@@ -511,3 +511,147 @@ def test_relative_graph_name_keeps_warnings():
     assert sorted(streamed) == sorted(batch)
     assert batch_warnings == ["dropped key '@foo'"]
     assert stream_warnings == batch_warnings
+
+
+def test_inline_context_parsed_once_per_process(monkeypatch):
+    """The classifier takes the per-process memo of base-independent
+    contexts (``parse_initial_cached``), like expansion does: two
+    documents sharing an inline context parse it once."""
+    from jsonld_spark.context import Context, ContextCache
+
+    calls = []
+    real = Context.parse
+
+    def counted(self, *args, **kwargs):
+        calls.append(1)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(Context, "parse", counted)
+    cache = ContextCache()
+    for i in range(2):
+        doc = {"@context": CTX, "@graph": [_entity(i), _entity(i + 10)]}
+        list(stream_doc_quads(doc, base=f"http://base.e/{i}", cache=cache))
+    assert len(calls) == 1
+
+
+def test_iri_memo_bounded_on_long_spine(monkeypatch):
+    """A 50k-element spine of fresh ids and fresh keys leaves both IRI
+    memos of its context at or under ``IRI_MEMO_MAX``: the reader's
+    memory stays O(largest element), not O(elements seen)."""
+    from jsonld_spark.context import IRI_MEMO_MAX, ContextCache
+    from jsonld_spark.streaming import reader
+
+    seen = []
+    real = reader._classify
+
+    def spy(*args):
+        shape = real(*args)
+        seen.append(shape[1])
+        return shape
+
+    monkeypatch.setattr(reader, "_classify", spy)
+    n = 50_000
+    doc = {
+        "@context": {"@vocab": "http://v.e/"},
+        "@graph": [
+            {"@id": f"http://e.com/{i}", "@type": "Row", f"k{i}": i}
+            for i in range(n)
+        ],
+    }
+    count = sum(1 for _ in stream_doc_quads(doc, base="http://base.e/", cache=ContextCache()))
+    assert count == 2 * n
+    (ctx,) = seen
+    assert len(ctx._iri_memo) <= IRI_MEMO_MAX
+    assert len(ctx._iri_memo_vocab) <= IRI_MEMO_MAX
+
+
+def _count_expand(monkeypatch):
+    from jsonld_spark.streaming import reader
+
+    calls = []
+    real = reader.expand
+
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(reader, "expand", counted)
+    return calls
+
+
+def _general_path(doc, base="http://base.e/"):
+    """The reader's quads and warnings with every element forced down
+    the general expand → node map → emit path."""
+    from unittest import mock
+
+    from jsonld_spark.streaming import reader
+
+    warnings: list = []
+    with mock.patch.object(reader, "_flat_node", lambda *a: None):
+        quads = list(stream_doc_quads(json.loads(json.dumps(doc)), base=base,
+                                      warnings_out=warnings))
+    return quads, warnings
+
+
+def test_dump_shape_never_calls_expand(monkeypatch):
+    """The dataset-dump element {"@id", "@type", "cell"} goes straight
+    from JSON to quads, and the quads (in order) equal the general
+    path's."""
+    doc = {
+        "@context": {"@vocab": "http://v.e/", "n": {"@type": "http://www.w3.org/2001/XMLSchema#integer"}},
+        "@graph": [
+            {"@id": f"row/{j}", "@type": "Row", "cell": f"v{j}", "n": [j, str(j)]}
+            for j in range(50)
+        ],
+    }
+    want, want_warnings = _general_path(doc)
+    calls = _count_expand(monkeypatch)
+    warnings: list = []
+    got = list(stream_doc_quads(json.loads(json.dumps(doc)), base="http://base.e/",
+                                warnings_out=warnings))
+    assert calls == []
+    assert got == want and warnings == want_warnings == []
+    assert len(got) == 50 * 4
+
+
+def test_giant_node_scalar_items_skip_expand(monkeypatch):
+    """The node path's per-item mini-documents are flat nodes too: a
+    giant node's scalar array streams without ``expand``."""
+    doc = {"@context": CTX, "@id": "http://e.com/big", "@type": "Thing",
+           "n": list(range(30)), "name": ["a", "b"]}
+    want, _ = _general_path(doc)
+    calls = _count_expand(monkeypatch)
+    got = list(stream_doc_quads(json.loads(json.dumps(doc)), base="http://base.e/"))
+    assert calls == []
+    assert got == want and len(got) == 1 + 30 + 2
+
+
+@pytest.mark.parametrize(
+    "doc",
+    [
+        {"@context": CTX, "@graph": [{"@id": "http://e.com/a", "child": {"p": "x"}}]},
+        {"@context": CTX, "@graph": [{"@id": "_:a", "name": "x"}]},
+        {"@context": {"@vocab": "http://v.e/", "l": {"@container": "@list"}},
+         "@graph": [{"@id": "http://e.com/a", "l": [1, 2]}]},
+        {"@context": {"@vocab": "http://v.e/",
+                      "T": {"@id": "http://v.e/T", "@context": {"p": "http://v.e/q"}}},
+         "@graph": [{"@id": "http://e.com/a", "@type": "T", "p": "x"}]},
+        {"@context": {"@vocab": "http://v.e/", "@propagate": False},
+         "@graph": [{"@id": "http://e.com/a", "p": "x"}]},
+    ],
+    ids=["nested-object", "bnode-id", "list-container", "type-scoped-context",
+         "propagate-false"],
+)
+def test_flat_path_fallback_triggers(doc, monkeypatch):
+    """Each non-flat trigger sends its element down the general path,
+    whose output matches batch."""
+    base = "http://base.e/"
+    batch_warnings, warnings = [], []
+    batch = doc_to_quads(json.loads(json.dumps(doc)), base=base,
+                         warnings_out=batch_warnings)
+    calls = _count_expand(monkeypatch)
+    got = list(stream_doc_quads(json.loads(json.dumps(doc)), base=base,
+                                warnings_out=warnings))
+    assert len(calls) == len(doc["@graph"])
+    assert sorted(got) == sorted(batch)
+    assert warnings == batch_warnings
