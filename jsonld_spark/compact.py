@@ -700,7 +700,7 @@ def compact_document(
     withheld from the compaction context, so absolute IRIs are NOT
     shortened to base-relative form (term/CURIE compaction is
     unaffected)."""
-    from .context import Context, ContextCache
+    from .context import Context
 
     ctx_value = context
     if isinstance(context, dict) and "@context" in context:
@@ -709,7 +709,7 @@ def compact_document(
     ctx = Context(
         base=compact_base,
         processing_mode=processing_mode,
-        cache=cache or ContextCache(),
+        cache=cache,
     )
     ctx = ctx.parse(ctx_value, base_url=base)
 

@@ -424,10 +424,6 @@ class Context:
             or self.default_direction
         )
 
-    def _key(self):
-        """Hashable identity for memoization (inverse context etc.)."""
-        return id(self)
-
     # -- 4.1 Context Processing ----------------------------------------------
 
     def parse(

@@ -786,9 +786,9 @@ def expand_document(
 
     ``doc`` is a parsed JSON value; returns the expanded array form.
     """
-    from .context import Context, ContextCache
+    from .context import Context
 
-    ctx = Context(base=base, processing_mode=processing_mode, cache=cache or ContextCache())
+    ctx = Context(base=base, processing_mode=processing_mode, cache=cache)
     if expand_context is not None:
         ec = expand_context
         if isinstance(ec, dict) and "@context" in ec:

@@ -612,9 +612,9 @@ def frame_document(
     # decide (expansion unwraps a top-level @graph wrapper, so the
     # expanded frame cannot be probed for it)
     f0 = expanded_frame[0] if expanded_frame else {}
-    from .context import Context as _Ctx, ContextCache as _CC
+    from .context import Context
 
-    raw_keys_ctx = _Ctx(base=base, cache=cache or _CC())
+    raw_keys_ctx = Context(base=base, cache=cache)
     if isinstance(frame, dict) and "@context" in frame:
         raw_keys_ctx = raw_keys_ctx.parse(frame["@context"], base_url=base)
     frame_uses_graph = isinstance(frame, dict) and any(
@@ -647,10 +647,9 @@ def frame_document(
     # single node in the (aliased) @graph key, omitGraph unwraps
     # singletons
     from .compact import compact, compact_iri
-    from .context import Context, ContextCache
 
     frame_ctx = frame.get("@context") if isinstance(frame, dict) else None
-    ctx = Context(base=base, cache=cache or ContextCache())
+    ctx = Context(base=base, cache=cache)
     if frame_ctx is not None:
         ctx = ctx.parse(frame_ctx, base_url=base)
     compacted = compact(results, ctx, None, True, ordered)

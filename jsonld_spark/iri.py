@@ -10,7 +10,6 @@ JSON-LD suite exercises.  (The reference delegates the same job to
 from __future__ import annotations
 
 import re
-from functools import lru_cache
 
 # --- JSON-LD 1.1 keywords ---------------------------------------------------
 
@@ -161,7 +160,6 @@ def _merge_paths(base_authority, base_path: str, ref_path: str) -> str:
     return base_path[: idx + 1] + ref_path
 
 
-@lru_cache(maxsize=65536)
 def resolve_iri(base: str | None, ref: str) -> str:
     """RFC 3986 §5.2 strict reference resolution (no backward-compat
     same-scheme special case). ``base=None`` returns ``ref`` unchanged."""

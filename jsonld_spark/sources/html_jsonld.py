@@ -11,6 +11,12 @@ Deliberately regex-based: full HTML5 parsing libs aren't available in
 the runtime, and CommonCrawl-scale extraction wants a linear scan.  The
 regexes handle attribute order/quoting variants and skip commented
 scripts the same way a streaming tokenizer would.
+
+Script bodies parse with stdlib ``json.loads`` (C-accelerated), whose
+integers are exact at any size — xsd:integer emission needs the
+lexical form of 18446744073709551617, not a float.  A faster parser
+that rounds big integers would need a digit-run guard per script, and
+on crawl-shaped pages that guard alone costs more than ``json.loads``.
 """
 
 from __future__ import annotations
@@ -18,28 +24,6 @@ from __future__ import annotations
 import json
 import re
 from typing import NamedTuple
-
-try:  # orjson: ~3x faster loads on script-sized docs; optional
-    import orjson
-
-    # orjson silently converts integers beyond u64 to floats, losing
-    # the exact lexical form xsd:integer emission needs; any 19+-digit
-    # run routes to stdlib json (rare in crawl data; string false
-    # positives just take the slower exact path)
-    _BIGDIGITS_RE = re.compile(r"\d{19}")
-
-    def _json_loads(s: str):
-        if _BIGDIGITS_RE.search(s):
-            return json.loads(s)
-        try:
-            return orjson.loads(s)
-        except ValueError:
-            # orjson is stricter on a few edge inputs; keep reference
-            # semantics — truly malformed input re-raises here
-            return json.loads(s)
-
-except ImportError:  # pragma: no cover
-    _json_loads = json.loads
 
 _SCRIPT_RE = re.compile(
     r"<script\b([^>]*)>(.*?)</script\s*>",
@@ -173,7 +157,7 @@ def extract_jsonld(
     out: list[ExtractedDoc] = []
     for b in blocks:
         try:
-            parsed = _json_loads(b.text)
+            parsed = json.loads(b.text)
             out.append(ExtractedDoc(b.text, base, b.index, None, parsed))
         except ValueError:
             # scripts in the wild carry //-comment lines; the reference
@@ -187,7 +171,7 @@ def extract_jsonld(
                 if not ln.lstrip().startswith("//")
             )
             try:
-                parsed = _json_loads(stripped)
+                parsed = json.loads(stripped)
                 out.append(ExtractedDoc(stripped, base, b.index, None, parsed))
             except ValueError:
                 out.append(

@@ -376,7 +376,6 @@ def stream_doc_quads(
             raise err.InvalidStreamingKeyOrder(
                 f"@context must come first in streaming mode, got keys {keys!r}"
             )
-    cache = ContextCache() if cache is None else cache
     shape = _classify(doc, Context(base=base, cache=cache), base)
     if shape is None:
         yield from doc_to_quads(

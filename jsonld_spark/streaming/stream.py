@@ -80,7 +80,6 @@ def stream_pages_to_triples(
     checkpoint_dir: str,
     cache_entries: dict | None = None,
     cache_version: str = "v1",
-    dedup_watermark: str | None = None,
     available_now: bool = True,
     bounded_reader: bool = False,
     rdfstar: bool = False,
@@ -103,8 +102,6 @@ def stream_pages_to_triples(
     from ..pipeline import LDJSON_PREFILTER, KGPipeline
 
     pages = read_pages_stream(spark, pages_dir)
-    if dedup_watermark:
-        pages = streaming_dedup_pages(pages, dedup_watermark)
     pipe = KGPipeline(spark, cache_entries, cache_version=cache_version, rdfstar=rdfstar)
     if bounded_reader:
         from ..udfs import TRIPLES_SCHEMA

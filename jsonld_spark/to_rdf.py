@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from typing import Any
 
-from .context import ContextCache
+from .context import IRI_MEMO_MAX, ContextCache
 from .expand import expand_document
 from .flatten import BlankNodeNamer, node_map_from_expanded
 from .iri import is_absolute_iri
@@ -45,8 +45,9 @@ from .rdf_model import (
 
 # process-level memo: predicates/types/graph names repeat across nodes
 # and documents, so the absolute-IRI regex runs once per distinct term.
-# Pure function of the string; capped so adversarial unique-IRI streams
-# can't grow worker memory.
+# Pure function of the string; cleared at ``IRI_MEMO_MAX`` entries like
+# the Context IRI memos, since every subject id of a long streamed spine
+# is a fresh entry.
 _VALID_RESOURCE_MEMO: dict[str, bool] = {}
 
 
@@ -55,7 +56,7 @@ def _valid_resource(term: str) -> bool:
     hit = memo.get(term)
     if hit is None:
         hit = is_bnode(term) or is_absolute_iri(term)
-        if len(memo) > 100_000:
+        if len(memo) >= IRI_MEMO_MAX:
             memo.clear()
         memo[term] = hit
     return hit

@@ -33,7 +33,7 @@ from typing import Callable, Iterable, Iterator
 from pyspark.sql import types as T
 
 from .canon import canonicalize_quads
-from .context import ContextCache
+from .context import EMPTY_CACHE, ContextCache
 from .errors import DocumentTooLarge, JsonLdError
 from .rdf_model import XSD_STRING, Quad
 from .sources.html_jsonld import ExtractedDoc, extract_jsonld
@@ -75,7 +75,7 @@ _CACHE_BY_KEY: dict[tuple, tuple[dict, ContextCache]] = {}
 
 def _get_cache(entries: dict | None, version: str) -> ContextCache:
     if entries is None:
-        return ContextCache()
+        return EMPTY_CACHE
     key = (version, id(entries))
     hit = _CACHE_BY_KEY.get(key)
     if hit is not None and hit[0] is entries:

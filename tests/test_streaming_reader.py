@@ -382,6 +382,30 @@ def test_streaming_udf_emits_warning_rows():
     assert len(quads) == 1  # warnings never suppress output
 
 
+def test_big_integers_keep_exact_lexical_form():
+    """Script parsing keeps integers past 2**53 and 2**64 exact, so both
+    UDFs emit their xsd:integer lexical form; an integer of 10**21 or
+    more becomes a canonical xsd:double, as JSON-LD toRdf prescribes."""
+    from jsonld_spark.context import ContextCache
+    from jsonld_spark.udfs import page_to_rows
+
+    xsd = "http://www.w3.org/2001/XMLSchema#"
+    page = _page(
+        '{"@context": {"@vocab": "http://v.e/"}, "@id": "http://e.com/n",'
+        ' "a": 18446744073709551617, "b": 9007199254740993,'
+        ' "c": 1234567890123456789012345}'
+    )
+    want = {
+        ("http://v.e/a", "18446744073709551617", xsd + "integer"),
+        ("http://v.e/b", "9007199254740993", xsd + "integer"),
+        ("http://v.e/c", "1.234567890123457E24", xsd + "double"),
+    }
+    batch = page_to_rows("http://p.e/1", page, ContextCache())
+    assert {(r[2], r[3], r[5]) for r in batch} == want
+    streamed = _drive_streaming_udf([("http://p.e/1", page)])
+    assert set(zip(streamed.pred, streamed.obj, streamed.obj_datatype)) == want
+
+
 def test_streaming_udf_salts_quoted_terms_like_batch():
     """Round-5 review fix: bnode labels INSIDE RDF-star quoted terms are
     salted in the streaming UDF, so the annotation references the same
@@ -478,14 +502,8 @@ def test_node_document_parses_context_once(monkeypatch):
     @context exactly once on its way through the reader."""
     from jsonld_spark.context import Context
 
-    calls = []
     real = Context.parse
-
-    def counted(self, *args, **kwargs):
-        calls.append(1)
-        return real(self, *args, **kwargs)
-
-    monkeypatch.setattr(Context, "parse", counted)
+    calls = _count_parses(monkeypatch)
     doc = {"@context": CTX, **_entity(3), "knows": [{"@id": "http://e.com/1"}]}
     streamed = set(stream_doc_quads(json.loads(json.dumps(doc)), base="http://base.e/"))
     assert len(calls) == 1
@@ -513,11 +531,10 @@ def test_relative_graph_name_keeps_warnings():
     assert stream_warnings == batch_warnings
 
 
-def test_inline_context_parsed_once_per_process(monkeypatch):
-    """The classifier takes the per-process memo of base-independent
-    contexts (``parse_initial_cached``), like expansion does: two
-    documents sharing an inline context parse it once."""
-    from jsonld_spark.context import Context, ContextCache
+def _count_parses(monkeypatch) -> list:
+    """Count ``Context.parse`` calls, starting from an empty per-process
+    memo of the default cache (earlier tests may have filled it)."""
+    from jsonld_spark.context import EMPTY_CACHE, Context
 
     calls = []
     real = Context.parse
@@ -527,17 +544,44 @@ def test_inline_context_parsed_once_per_process(monkeypatch):
         return real(self, *args, **kwargs)
 
     monkeypatch.setattr(Context, "parse", counted)
-    cache = ContextCache()
+    monkeypatch.setattr(EMPTY_CACHE, "_parse_memo", {})
+    return calls
+
+
+@pytest.mark.parametrize(
+    "quads_fn", [stream_doc_quads, doc_to_quads], ids=lambda f: f.__name__
+)
+def test_inline_context_parsed_once_per_process(monkeypatch, quads_fn):
+    """The classifier and expansion take the per-process memo of
+    base-independent contexts (``parse_initial_cached``) of the default
+    cache when the caller passes none: two documents sharing an inline
+    context parse it once."""
+    calls = _count_parses(monkeypatch)
     for i in range(2):
         doc = {"@context": CTX, "@graph": [_entity(i), _entity(i + 10)]}
-        list(stream_doc_quads(doc, base=f"http://base.e/{i}", cache=cache))
+        list(quads_fn(doc, base=f"http://base.e/{i}"))
+    assert len(calls) == 1
+
+
+def test_inline_context_parsed_once_across_partitions(monkeypatch):
+    """With no broadcast contexts the batch UDF's cache is the default
+    one, so a worker keeps its parse memo from partition to partition."""
+    from jsonld_spark.udfs import make_pages_to_triples
+
+    calls = _count_parses(monkeypatch)
+    fn = make_pages_to_triples(None)
+    for i in range(2):
+        out = pd.concat(list(fn(iter([_page_batch(2, url=f"http://s.e/{i}")]))))
+        assert out["error"].isna().all()
     assert len(calls) == 1
 
 
 def test_iri_memo_bounded_on_long_spine(monkeypatch):
     """A 50k-element spine of fresh ids and fresh keys leaves both IRI
-    memos of its context at or under ``IRI_MEMO_MAX``: the reader's
-    memory stays O(largest element), not O(elements seen)."""
+    memos of its context, and the emitter's resource memo, at or under
+    ``IRI_MEMO_MAX``: the reader's memory stays O(largest element), not
+    O(elements seen)."""
+    from jsonld_spark import to_rdf
     from jsonld_spark.context import IRI_MEMO_MAX, ContextCache
     from jsonld_spark.streaming import reader
 
@@ -550,6 +594,7 @@ def test_iri_memo_bounded_on_long_spine(monkeypatch):
         return shape
 
     monkeypatch.setattr(reader, "_classify", spy)
+    monkeypatch.setattr(to_rdf, "_VALID_RESOURCE_MEMO", {})
     n = 50_000
     doc = {
         "@context": {"@vocab": "http://v.e/"},
@@ -563,6 +608,7 @@ def test_iri_memo_bounded_on_long_spine(monkeypatch):
     (ctx,) = seen
     assert len(ctx._iri_memo) <= IRI_MEMO_MAX
     assert len(ctx._iri_memo_vocab) <= IRI_MEMO_MAX
+    assert len(to_rdf._VALID_RESOURCE_MEMO) <= IRI_MEMO_MAX
 
 
 def _count_expand(monkeypatch):
