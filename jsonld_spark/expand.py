@@ -63,6 +63,48 @@ def _add_value(obj: dict, key: str, value, as_array=True):
         obj[key] = vals if as_array else value
 
 
+def inline_context(ctx: Context, local_ctx, base: str | None) -> Context:
+    """Step 10: ``ctx`` with an element's inline ``@context`` applied.  A
+    pristine ``ctx`` takes the per-process memo of base-independent
+    contexts (``parse_initial_cached``); any other parses on top of it."""
+    if not ctx.has_terms() and ctx.previous_context is None:
+        return parse_initial_cached(
+            ctx.base, ctx.processing_mode, ctx.cache, local_ctx, base
+        )
+    return ctx.parse(local_ctx, base_url=base)
+
+
+def type_scoped(ctx: Context, type_values: list) -> Context:
+    """Steps 11-12: ``ctx`` with the type-scoped contexts of an element's
+    ``@type`` entries applied (``type_values`` holds one value per
+    ``@type`` key, keys in sorted order), each entry's string values in
+    lexicographic order.  As in expand.rb:107-110, every type term is
+    looked up in the PRE-loop ``ctx`` while each parse chains on the
+    previous result, so one type's scoped context cannot redefine a
+    later type."""
+    scoped = ctx
+    for tv in type_values:
+        tvals = tv if isinstance(tv, list) else (tv,)
+        for t in sorted(v for v in tvals if isinstance(v, str)):
+            td = ctx.term(t)
+            if td is not None and td.local_context is not UNSET:
+                scoped = scoped.parse(
+                    td.local_context,
+                    base_url=td.base_url,
+                    propagate=False,
+                    override_protected=False,
+                )
+    return scoped
+
+
+def drops_key(expanded_property) -> bool:
+    """Whether expansion drops a key that expanded to ``expanded_property``:
+    it is neither a keyword nor an IRI (expand.rb:265)."""
+    return expanded_property is None or (
+        ":" not in expanded_property and not is_keyword(expanded_property)
+    )
+
+
 def expand(
     element,
     active_property: str | None,
@@ -138,48 +180,22 @@ def expand(
             override_protected=True,
         )
 
-    # 10: inline @context (memoized process-wide when the active context
-    # is pristine and the inline context is base-independent)
+    # 10: inline @context
     if "@context" in element:
-        if not active_context.has_terms() and active_context.previous_context is None:
+        active_context = inline_context(
+            active_context, element["@context"], options.base
+        )
 
-            active_context = parse_initial_cached(
-                active_context.base,
-                active_context.processing_mode,
-                active_context.cache,
-                element["@context"],
-                options.base,
-            )
-        else:
-            active_context = active_context.parse(
-                element["@context"], base_url=options.base
-            )
-
-    # 11-12: type-scoped contexts — find @type keys, apply scoped contexts in
-    # lexicographic order of type values
+    # 11-12: type-scoped contexts.  A single unsorted pass FINDS the
+    # @type-expanding keys (most dicts have 0-1); only those are sorted
     type_key = None
-    # single unsorted pass to FIND @type-expanding keys (most dicts have
-    # 0-1); only those are sorted.  Mirrors expand.rb:107-110 exactly:
-    # the reference's eager `.sort.select` evaluates every key under the
-    # PRE-loop context, and scoped-term lookups use type_scoped_context
-    # (the pre-loop context), while parse chains on the mutating one.
-    type_scoped_context = active_context
     type_keys = [k for k in element if active_context.expand_key(k) == "@type"]
     if type_keys:
         type_keys.sort()
         type_key = type_keys[0]
-    for key in type_keys:
-        tv = element[key]
-        tvals = tv if isinstance(tv, list) else [tv]
-        for t in sorted(v for v in tvals if isinstance(v, str)):
-            ttd = type_scoped_context.term(t)
-            if ttd is not None and ttd.local_context is not UNSET:
-                active_context = active_context.parse(
-                    ttd.local_context,
-                    base_url=ttd.base_url,
-                    propagate=False,
-                    override_protected=False,
-                )
+        active_context = type_scoped(
+            active_context, [element[k] for k in type_keys]
+        )
 
     input_type = None
     if type_key is not None:
@@ -303,10 +319,7 @@ def _expand_object(
         # keys are plain strings and vocab-expansion ignores base —
         # expand_key is the memo-probe fast path
         expanded_property = active_context.expand_key(key)
-        if expanded_property is None or (
-            ":" not in expanded_property and not is_keyword(expanded_property)
-        ):
-            # drop keys that don't expand to keyword or IRI (expand.rb:265)
+        if drops_key(expanded_property):
             options.warnings.append(f"dropped key {key!r}")
             continue
 

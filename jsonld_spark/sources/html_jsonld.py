@@ -180,24 +180,6 @@ def extract_jsonld(
     return out
 
 
-def parse_all_scripts(html: str | bytes, url: str | None = None):
-    """Reference extractAllScripts=true merge semantics (api.rb:846-868):
-    all blocks parsed and concatenated into one array (top-level arrays
-    flattened)."""
-    merged: list = []
-    errors: list[str] = []
-    for doc in extract_jsonld(html, url, extract_all_scripts=True):
-        if doc.error:
-            errors.append(doc.error)
-            continue
-        parsed = doc.parsed
-        if isinstance(parsed, list):
-            merged.extend(parsed)
-        else:
-            merged.append(parsed)
-    return merged, errors
-
-
 # --- Hyperlink extraction (crawl link graph) ----------------------------------
 
 

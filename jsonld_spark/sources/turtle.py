@@ -336,16 +336,3 @@ def _unescape_iri(s: str) -> str:
 
 def parse_turtle(text: str, base: str | None = None) -> list[Quad]:
     return TurtleParser(text, base).parse()
-
-
-def parse_turtle_with_prefixes(
-    text: str, base: str | None = None
-) -> tuple[list[Quad], dict[str, str]]:
-    """Like ``parse_turtle`` but also returns the document's @prefix
-    declarations — the reference's Writer folds parsed input prefixes
-    into the output @context (writer_spec.rb 'serializes multiple
-    subjects'); a JSON-LD-side caller needs them to build that
-    context."""
-    p = TurtleParser(text, base)
-    quads = p.parse()
-    return quads, dict(p.prefixes)

@@ -7,9 +7,11 @@ bounded by the largest single node, not by the document's total quad
 count.  Streaming across pages happens at the pipeline level
 (``streaming.stream``); this reader exists to bound one giant page.
 
-``_classify`` parses a document's ``@context`` once (through the
-per-process memo of base-independent contexts, as expansion does),
-expands each top-level key once, and picks one of three routes:
+This module holds routing and streaming only; every expansion rule it
+applies is expansion's own function.  ``_classify`` applies a
+document's ``@context`` once (``expand.inline_context``, step 10),
+expands each top-level key once (``expand.drops_key`` marks the keys
+expansion drops), and picks one of three routes:
 
 * **spine** — a top-level array, a lone ``@set`` array, or an ``@graph``
   array whose wrapper holds at most an IRI ``@id`` besides keys that
@@ -23,8 +25,10 @@ expands each top-level key once, and picks one of three routes:
   analog of the reference's parse_property, streaming_reader.rb:425-575),
   and so do its ``@reverse`` maps, ``@included`` arrays and ``@graph``
   elements; each ``@nest`` entry expands as one unit and ``@index``
-  rides the ``@type`` shell.  Keys that expansion would drop stream as
-  properties, because a type-scoped context may define them.
+  rides the ``@type`` shell.  A property's container is read from the
+  node's type-scoped context (``expand.type_scoped``, steps 11-12).
+  Keys that expansion would drop stream as properties, because a
+  type-scoped context may define them.
 * **batch** — every other shape goes to ``doc_to_quads``: value and
   list objects, unknown or repeated keywords, a non-string ``@id``, an
   id-only node.  A top-level value or list object expands to at most a
@@ -36,13 +40,11 @@ Per element (a spine element, or one of the node route's per-item
 mini-documents), ``_emit_elements`` takes one of two paths:
 
 * **flat node** — an element with an IRI ``@id``, IRI ``@type`` values
-  and scalar-valued IRI properties (``_flat_node`` lists every
+  and scalar-valued IRI properties (``flatten.flat_node`` lists every
   condition), the dump shape ``{"@id", "@type", "cell"}``, goes from
-  JSON straight to quads, like the reference's reader: its node-map
-  entry is built with the expansion's own ``expand_key``,
-  ``expand_iri``, ``expand_value`` and ``add_unique_value`` calls and
-  emitted by one ``_RdfEmitter`` shared across the spine, with no
-  expanded form and no node map.
+  JSON straight to quads, like the reference's reader: ``flat_node``
+  builds its node-map entry without an expanded form or a node map, and
+  one ``_RdfEmitter`` shared across the spine emits it.
 * **general** — every other element, and every element that would warn,
   raise, revert a non-propagated context or mint a blank node, runs
   expand → node map → emit on its own.
@@ -83,9 +85,9 @@ from collections import Counter
 from typing import Iterator
 
 from .. import errors as err
-from ..context import UNSET, Context, ContextCache, parse_initial_cached
-from ..expand import ExpandOptions, expand
-from ..flatten import BlankNodeNamer, add_unique_value, create_node_map
+from ..context import Context, ContextCache
+from ..expand import ExpandOptions, drops_key, expand, inline_context, type_scoped
+from ..flatten import BlankNodeNamer, create_node_map, flat_node
 from ..iri import is_keyword
 from ..rdf_model import Quad
 from ..to_rdf import _RdfEmitter, _valid_resource, doc_to_quads, node_map_quads
@@ -109,27 +111,20 @@ def _classify(doc, ctx: Context, base: str | None):
     if not isinstance(doc, dict):
         return None
     if "@context" in doc:
-        if not ctx.has_terms() and ctx.previous_context is None:
-            # expand's step 10 rule: a pristine context takes the
-            # per-process memo of base-independent contexts
-            ctx = parse_initial_cached(
-                ctx.base, ctx.processing_mode, ctx.cache, doc["@context"], base
-            )
-        else:
-            ctx = ctx.parse(doc["@context"], base_url=base)
+        ctx = inline_context(ctx, doc["@context"], base)
     keys: dict[str, list[str]] = {}
     props: list[str] = []
     dropped: list[str] = []
     for key in doc:
         if key == "@context":
             continue
-        expanded = ctx.expand_iri(key, vocab=True)
+        expanded = ctx.expand_key(key)
         if isinstance(expanded, str) and is_keyword(expanded):
             keys.setdefault(expanded, []).append(key)
         else:
             props.append(key)
-            if expanded is None or ":" not in expanded:
-                dropped.append(key)  # the same drop rule as expand's key loop
+            if drops_key(expanded):
+                dropped.append(key)
 
     # spine: a pure wrapper — one key each for at most @set, or @graph
     # and @id; dropped keys count as absent
@@ -162,23 +157,6 @@ def _classify(doc, ctx: Context, base: str | None):
     if "@id" in keys and not isinstance(doc[keys["@id"][0]], str):
         return None  # embedded/invalid @id → batch path (error parity)
     return "node", ctx, (keys, props)
-
-
-def _type_scoped(ctx: Context, type_values) -> Context:
-    """Apply type-scoped contexts exactly as expansion steps 11-12 do
-    (expand.py) — needed once so every property mini-document expands
-    under the node's scoped context."""
-    tvals = type_values if isinstance(type_values, list) else [type_values]
-    for t in sorted(v for v in tvals if isinstance(v, str)):
-        ttd = ctx.term(t)
-        if ttd is not None and ttd.local_context is not UNSET:
-            ctx = ctx.parse(
-                ttd.local_context,
-                base_url=ttd.base_url,
-                propagate=False,
-                override_protected=False,
-            )
-    return ctx
 
 
 def _unused_bnode_label(doc) -> str:
@@ -260,7 +238,7 @@ def _stream_node_properties(
         # container probing uses the scoped ctx (a type-scoped context
         # may redefine a term's @container)
         scoped = (
-            _type_scoped(ctx, doc[type_key]) if type_key is not None else ctx
+            type_scoped(ctx, [doc[type_key]]) if type_key is not None else ctx
         )
 
         def with_type(md: dict) -> dict:
@@ -397,100 +375,33 @@ def stream_doc_quads(
         warnings_out.extend(options.warnings)
 
 
-def _is_iri(value) -> bool:
-    """An expansion result naming an IRI: no keyword, no blank node,
-    nothing the expansion drops."""
-    return isinstance(value, str) and ":" in value and not value.startswith("_:")
-
-
-def _flat_node(element, ctx: Context, base: str | None) -> dict | None:
-    """The node-map entry ``expand`` → ``create_node_map`` builds for a
-    FLAT node object, built straight from the JSON element; None sends
-    the element down the general path.  Flat means: an IRI ``@id`` under
-    exactly one key, string ``@type`` values that expand to IRIs and
-    have no type-scoped context, and every other key an IRI property
-    whose term has no container, scoped context, reverse or ``@json``
-    type, holding one non-null scalar or an array of them (each
-    expanding to a value object or an IRI reference).  A term's ``@nest``
-    value only steers compaction, so it does not matter here; a key
-    expanding to ``@nest`` is a keyword and falls back.  Every case
-    that would warn, raise, revert the context or touch the blank-node
-    namer falls back, so the entry is exactly the general path's."""
-    if not isinstance(element, dict) or ctx.previous_context is not None:
-        return None
-    subject = None
-    types: list[str] = []
-    props: list[tuple[str, str, object]] = []
-    for key, value in element.items():
-        prop = ctx.expand_key(key)
-        if prop == "@id":
-            if subject is not None or not isinstance(value, str):
-                return None  # a second @id key raises CollidingKeywords
-            subject = ctx.expand_iri(value, document_relative=True, base=base)
-            if not _is_iri(subject):
-                return None
-        elif prop == "@type":
-            for t in value if isinstance(value, list) else (value,):
-                if not isinstance(t, str):
-                    return None
-                ttd = ctx.term(t)
-                if ttd is not None and ttd.local_context is not UNSET:
-                    return None
-                t = ctx.expand_iri(t, vocab=True, document_relative=True, base=base)
-                if not _is_iri(t):
-                    return None
-                types.append(t)
-        elif not _is_iri(prop):
-            return None
-        else:
-            td = ctx.term(key)
-            if td is not None and (
-                td.container_mapping
-                or td.local_context is not UNSET
-                or td.reverse_property
-                or td.type_mapping == "@json"
-            ):
-                return None
-            props.append((prop, key, value))
-    if subject is None:
-        return None
-    node: dict = {"@id": subject}
-    dedup: dict = {}
-    for t in types:
-        add_unique_value(node, "@type", t, dedup)
-    for prop, key, value in props:
-        for v in value if isinstance(value, list) else (value,):
-            if v is None or isinstance(v, (dict, list)):
-                return None
-            obj = ctx.expand_value(key, v, base=base)
-            if "@id" in obj and not _is_iri(obj["@id"]):
-                return None
-            add_unique_value(node, prop, obj, dedup)
-    return node
-
-
 def _emit_elements(pairs, graph_name, namer, options) -> Iterator[list[Quad]]:
     """Each (element, ctx) pair's quads, one list per element — the
     bounded buffer, same role as the reference's provisional-statement
     window.  An element's default graph is ``graph_name``.  A flat node
-    object (``_flat_node``) goes straight to the shared emitter; any
-    other element runs expand → node map → emit on its own."""
+    object (``flatten.flat_node``) goes straight to the shared emitter;
+    any other element runs expand → node map → emit on its own.  Each
+    distinct warning is kept once, at its first occurrence: per-item
+    mini-docs re-derive the SAME warning for every element (e.g. one
+    droppable key over a 10M-item array), so warning memory stays
+    O(distinct), at O(1) per warning."""
     emitter = _RdfEmitter(namer)
     flat_ok = graph_name is None or _valid_resource(graph_name)
+    warnings = options.warnings
+    seen, kept = set(warnings), len(warnings)
     for element, ctx in pairs:
-        node = _flat_node(element, ctx, options.base) if flat_ok else None
+        node = flat_node(element, ctx, options.base) if flat_ok else None
         if node is not None:
             emitter.quads = []
             emitter.node_to_quads(node["@id"], node, graph_name)
             yield emitter.quads
             continue
         expanded = expand(element, None, ctx, options)
-        if len(options.warnings) > 64:
-            # per-item mini-docs re-derive the SAME warning for every
-            # element (e.g. one droppable key over a 10M-item array);
-            # dedup in place so warning memory is O(distinct), keeping
-            # the reader's bounded-memory contract
-            options.warnings[:] = dict.fromkeys(options.warnings)
+        if len(warnings) > kept:
+            new = [w for w in dict.fromkeys(warnings[kept:]) if w not in seen]
+            warnings[kept:] = new
+            seen.update(new)
+            kept = len(warnings)
         if expanded is None:
             yield []
             continue

@@ -6,7 +6,6 @@ from jsonld_spark.sources.html_jsonld import (
     extract_jsonld,
     find_jsonld_scripts,
     html_base_href,
-    parse_all_scripts,
 )
 
 
@@ -75,6 +74,21 @@ def test_profile_preference():
         profile="http://www.w3.org/ns/json-ld#flattened",
     )
     assert json.loads(docs[0].json_text)["@id"] == "flat"
+
+
+def parse_all_scripts(html, url=None):
+    """Reference extractAllScripts=true merge semantics (api.rb:846-868):
+    all blocks parsed and concatenated into one array (top-level arrays
+    flattened)."""
+    merged, errors = [], []
+    for doc in extract_jsonld(html, url, extract_all_scripts=True):
+        if doc.error:
+            errors.append(doc.error)
+        elif isinstance(doc.parsed, list):
+            merged.extend(doc.parsed)
+        else:
+            merged.append(doc.parsed)
+    return merged, errors
 
 
 def test_parse_all_merges_arrays():

@@ -310,6 +310,57 @@ def test_streaming_reader_isomorphic_on_rich_shapes(doc):
         ) is not None, "silent batch fallback on a streamable shape"
 
 
+_P_TERMS = [
+    {"@id": "http://v.e/p"},
+    {"@id": "http://v.e/p", "@container": "@list"},
+    {"@id": "http://v.e/p", "@container": "@set"},
+]
+
+
+@st.composite
+def _type_scoped_nodes(draw):
+    """Top-level node objects typed with terms whose type-scoped contexts
+    redefine ``p`` and each other, so a first type's scoped context may
+    redefine a later type."""
+    scoped_a = draw(st.fixed_dictionaries({}, optional={
+        "B": st.sampled_from([{"@id": "http://v.e/B"}, {"@id": "http://v.e/C"}]),
+        "p": st.sampled_from(_P_TERMS),
+    }))
+    scoped_b = draw(st.fixed_dictionaries({}, optional={"p": st.sampled_from(_P_TERMS)}))
+    types = draw(st.lists(st.sampled_from(["A", "B", "C"]), min_size=1, max_size=3,
+                          unique=True))
+    return {
+        "@context": {
+            "@vocab": "http://v.e/",
+            "A": {"@id": "http://v.e/A", "@context": scoped_a},
+            "B": {"@id": "http://v.e/B", "@context": scoped_b},
+        },
+        "@id": "http://e/s",
+        "@type": types if len(types) > 1 or draw(st.booleans()) else types[0],
+        # distinct items: a repeated one re-emits its quad when streamed
+        "p": draw(st.one_of(st.integers(0, 9),
+                            st.lists(st.integers(0, 9), max_size=4, unique=True))),
+    }
+
+
+@settings(max_examples=80, deadline=None)
+@given(_type_scoped_nodes())
+def test_streaming_reader_isomorphic_on_type_scoped_nodes(doc):
+    """Node objects under type-scoped contexts stream (no batch fallback)
+    to the batch path's graph, whichever type's scoped context defines
+    ``p``'s container."""
+    from jsonld_spark.canon import canonicalize_quads
+    from jsonld_spark.context import Context
+    from jsonld_spark.streaming.reader import _classify, stream_doc_quads
+
+    batch = doc_to_quads(json.loads(json.dumps(doc)))
+    streamed = list(stream_doc_quads(json.loads(json.dumps(doc))))
+    assert sorted(canonicalize_quads(sorted(streamed, key=repr)), key=repr) == sorted(
+        canonicalize_quads(sorted(batch, key=repr)), key=repr
+    )
+    assert _classify(doc, Context(), None)[0] == "node"
+
+
 def _value_or_list_docs():
     """Top-level VALUE and LIST objects (they expand to few/no quads and
     take the reader's batch path)."""
@@ -545,7 +596,7 @@ def test_flat_node_path_matches_general_path(doc):
 
     from jsonld_spark.streaming import reader
 
-    with mock.patch.object(reader, "_flat_node", lambda *a: None):
+    with mock.patch.object(reader, "flat_node", lambda *a: None):
         want = _reader_run(doc)
     assert _reader_run(doc) == want
 
@@ -561,6 +612,6 @@ def test_flat_node_path_matches_general_path_per_change(change, data):
     from jsonld_spark.streaming import reader
 
     doc = data.draw(_flat_ish_docs(change))
-    with mock.patch.object(reader, "_flat_node", lambda *a: None):
+    with mock.patch.object(reader, "flat_node", lambda *a: None):
         want = _reader_run(doc)
     assert _reader_run(doc) == want

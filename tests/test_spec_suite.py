@@ -1576,11 +1576,12 @@ def _writer_serialize(input_str, prefixes=None, standard_prefixes=False,
     the Spark-side equivalent)."""
     from jsonld_spark.compact import compact_document
     from jsonld_spark.from_rdf import from_quads
-    from jsonld_spark.sources.turtle import parse_turtle_with_prefixes
+    from jsonld_spark.sources.turtle import TurtleParser
 
     parsed_prefixes = {}
     if quads is None:
-        quads, parsed_prefixes = parse_turtle_with_prefixes(input_str)
+        parser = TurtleParser(input_str, None)
+        quads, parsed_prefixes = parser.parse(), dict(parser.prefixes)
     expanded = from_quads(quads, ordered=True)
     ctx = {}
     if standard_prefixes:

@@ -376,7 +376,7 @@ def test_streaming_udf_emits_warning_rows():
          "@id": "http://e/x", "name": "n", "junkkey": "dropped"}
     )
     out = _drive_streaming_udf([("http://p.e/1", _page(doc))])
-    warnings = out[out.error.str.startswith("warning:").fillna(False)]
+    warnings = out[out.error.str.startswith("warning:", na=False)]
     assert len(warnings) == 1 and "junkkey" in warnings.iloc[0].error
     quads = out[out.error.isna()]
     assert len(quads) == 1  # warnings never suppress output
@@ -633,7 +633,7 @@ def _general_path(doc, base="http://base.e/"):
     from jsonld_spark.streaming import reader
 
     warnings: list = []
-    with mock.patch.object(reader, "_flat_node", lambda *a: None):
+    with mock.patch.object(reader, "flat_node", lambda *a: None):
         quads = list(stream_doc_quads(json.loads(json.dumps(doc)), base=base,
                                       warnings_out=warnings))
     return quads, warnings
@@ -701,3 +701,72 @@ def test_flat_path_fallback_triggers(doc, monkeypatch):
     assert len(calls) == len(doc["@graph"])
     assert sorted(got) == sorted(batch)
     assert warnings == batch_warnings
+
+
+def test_type_scoped_lookups_use_the_pre_type_context():
+    """Steps 11-12 look every type term up in the context from before
+    the type loop: A's scoped context redefining B does not hide B's own
+    scoped context, which makes ``p`` a list.  The node route reads
+    ``p``'s container from that context, so it keeps the three items in
+    one list, as batch does."""
+    from collections import Counter
+
+    from jsonld_spark.canon import canonicalize_quads
+
+    doc = {
+        "@context": {
+            "@vocab": "http://v.e/",
+            "A": {"@id": "http://v.e/A", "@context": {"B": {"@id": "http://v.e/B"}}},
+            "B": {"@id": "http://v.e/B",
+                  "@context": {"p": {"@id": "http://v.e/p", "@container": "@list"}}},
+        },
+        "@id": "http://e/s",
+        "@type": ["A", "B"],
+        "p": [1, 2, 3],
+    }
+    batch = doc_to_quads(json.loads(json.dumps(doc)))
+    streamed = list(stream_doc_quads(json.loads(json.dumps(doc))))
+    assert len(batch) == 9
+    assert Counter(canonicalize_quads(sorted(streamed, key=repr))) == Counter(
+        canonicalize_quads(sorted(batch, key=repr))
+    )
+
+
+class _CountedWarning(str):
+    """A warning string that counts how often it is hashed."""
+
+    hashes = 0
+
+    def __hash__(self):
+        type(self).hashes += 1
+        return str.__hash__(self)
+
+
+def test_warning_dedup_is_linear(monkeypatch):
+    """A spine whose every element drops its own key: the reader keeps
+    each distinct warning once, in first-occurrence order, hashing each
+    a bounded number of times (not the whole list again per element)."""
+    from jsonld_spark.streaming import reader
+
+    real = reader.expand
+
+    def counted(element, prop, ctx, options):
+        n = len(options.warnings)
+        out = real(element, prop, ctx, options)
+        options.warnings[n:] = map(_CountedWarning, options.warnings[n:])
+        return out
+
+    monkeypatch.setattr(reader, "expand", counted)
+    monkeypatch.setattr(_CountedWarning, "hashes", 0)
+    n = 1000
+    doc = {"@graph": [
+        {"@id": f"http://e.com/{i}", f"junk{i}": 1, "http://v.e/p": i}
+        for i in range(n)
+    ] * 2}
+    batch_warnings, warnings = [], []
+    batch = doc_to_quads(json.loads(json.dumps(doc)), warnings_out=batch_warnings)
+    streamed = list(stream_doc_quads(doc, warnings_out=warnings))
+    assert warnings == list(dict.fromkeys(batch_warnings))
+    assert warnings == [f"dropped key 'junk{i}'" for i in range(n)]
+    assert sorted(set(streamed)) == sorted(batch)
+    assert _CountedWarning.hashes <= 4 * 2 * n
