@@ -148,7 +148,7 @@ def _q_jsonld_stream_triples(spark, sf_dir):
     from jsonld_spark.udfs import TRIPLES_SCHEMA
 
     pages = pages_from_documents(_docs(spark, sf_dir))
-    fn = make_streaming_pages_to_triples(None, chunk_rows=10_000)
+    fn = make_streaming_pages_to_triples(None)
     t = parallelize_small_input(pages.select("url", "html")).mapInPandas(
         fn, TRIPLES_SCHEMA
     )

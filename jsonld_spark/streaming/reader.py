@@ -62,7 +62,10 @@ namer), streaming mode does not apply URDNA2015-style canonical
 relabeling — that is a whole-document pass by construction.  A node
 recurring in several elements re-emits its quads (the batch path's
 whole-document node map dedups them); RDF set semantics make the
-repeats harmless and the pipeline's dropDuplicates absorbs them.
+repeats harmless and the pipeline's dropDuplicates absorbs them.  The
+same holds for a repeated item of one streamed property: the node
+route emits each item on its own, so ``"p": [0, 0]`` streams the quad
+twice where batch emits it once (same set, different multiset).
 
 Error semantics: AT-LEAST-PARTIAL emission.  The reader's UDF runs the
 batch path's own page loop (``udfs.iter_page_rows``: the same error,
@@ -413,16 +416,17 @@ def _emit_elements(pairs, graph_name, namer, options) -> Iterator[list[Quad]]:
 def make_streaming_pages_to_triples(
     cache_bc,
     cache_version: str = "v0",
-    chunk_rows: int = 50_000,
     rdfstar: bool = False,
 ):
     """mapInPandas factory for giant-document crawls: the batch path's
     page loop (``udfs.pages_fn`` / ``udfs.iter_page_rows``) fed by
-    ``stream_doc_quads``, so quads stream out in ≤``chunk_rows`` Arrow
-    batches and one multi-million-quad page cannot balloon the Python
-    worker (the batch path materializes each script's full quad list
-    before its first row leaves the UDF).  No html-size gate: giant
-    pages are what this reader is for."""
+    ``stream_doc_quads``, so quads stream out in Arrow frames of at most
+    ``udfs.CHUNK_ROWS`` rows.  One multi-million-quad page cannot
+    balloon the Python worker (the batch path materializes each script's
+    full quad list before its first row leaves the UDF), and the JVM
+    writes a giant page's first frames while the worker still builds its
+    later ones.  No html-size gate: giant pages are what this reader is
+    for."""
     from ..udfs import iter_page_rows, pages_fn
 
     def script_quads(doc, base, cache, warnings):
@@ -433,4 +437,4 @@ def make_streaming_pages_to_triples(
     def page_rows(url, html, cache):
         return iter_page_rows(url, html, cache, script_quads)
 
-    return pages_fn(cache_bc, cache_version, page_rows, chunk_rows)
+    return pages_fn(cache_bc, cache_version, page_rows)

@@ -88,8 +88,10 @@ def stream_pages_to_triples(
 
     ``bounded_reader=True`` swaps the batch extraction UDF for the
     per-document streaming reader (streaming/reader.py): quads leave the
-    Python worker in bounded Arrow chunks, so micro-batches containing
-    giant dataset-dump pages cannot balloon a worker.  Canonical bnode
+    Python worker in Arrow frames of at most ``udfs.CHUNK_ROWS`` rows, so
+    micro-batches containing giant dataset-dump pages cannot balloon a
+    worker, and the sink writes a giant page's early frames while the
+    worker still builds its later ones.  Canonical bnode
     relabeling is skipped in that mode (whole-document pass), and error
     semantics are AT-LEAST-PARTIAL: a page failing mid-document has
     already flushed its earlier elements' quads, which an append sink

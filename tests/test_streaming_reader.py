@@ -6,7 +6,7 @@ import json
 import pandas as pd
 import pytest
 
-from jsonld_spark import doc_to_quads
+from jsonld_spark import doc_to_quads, udfs
 from jsonld_spark.streaming.reader import (
     make_streaming_pages_to_triples,
     stream_doc_quads,
@@ -185,10 +185,11 @@ def _page_batch(n_entities: int, url: str = "http://s.e/p") -> pd.DataFrame:
     return pd.DataFrame({"url": [url], "html": [html]})
 
 
-def test_chunked_emission_bounds_worker_memory():
-    """One page with many entities must leave the UDF in ≤chunk_rows
+def test_chunked_emission_bounds_worker_memory(monkeypatch):
+    """One page with many entities must leave the UDF in ≤CHUNK_ROWS
     pieces, not one giant frame."""
-    fn = make_streaming_pages_to_triples(None, chunk_rows=100)
+    monkeypatch.setattr(udfs, "CHUNK_ROWS", 100)
+    fn = make_streaming_pages_to_triples(None)
     chunks = list(fn(iter([_page_batch(200)])))  # 200 entities × 5 quads
     assert len(chunks) > 5
     assert all(len(c) <= 100 for c in chunks)
@@ -197,7 +198,7 @@ def test_chunked_emission_bounds_worker_memory():
     assert all(c["error"].isna().all() for c in chunks)
 
 
-def test_streaming_spark_parity(spark):
+def test_streaming_spark_parity(spark, monkeypatch):
     """mapInPandas streaming output == batch pipeline output (canonical
     relabeling off — streaming cannot do a whole-doc pass) on real pages."""
     from jsonld_spark.pipeline import KGPipeline
@@ -225,7 +226,10 @@ def test_streaming_spark_parity(spark):
         rows.append((url, html.encode()))
     pages = spark.createDataFrame(rows, "url string, html binary")
 
-    fn = make_streaming_pages_to_triples(None, chunk_rows=7)
+    # the bound is read when the function is built and pickled with it,
+    # so the workers run with 7-row frames
+    monkeypatch.setattr(udfs, "CHUNK_ROWS", 7)
+    fn = make_streaming_pages_to_triples(None)
     streamed = pages.mapInPandas(fn, TRIPLES_SCHEMA)
 
     pipe = KGPipeline(spark, canonical_bnodes=False)
@@ -770,3 +774,15 @@ def test_warning_dedup_is_linear(monkeypatch):
     assert warnings == [f"dropped key 'junk{i}'" for i in range(n)]
     assert sorted(set(streamed)) == sorted(batch)
     assert _CountedWarning.hashes <= 4 * 2 * n
+
+
+def test_repeated_property_item_streams_once_per_item():
+    """The node route emits each item of a property on its own, so a
+    repeated item streams its quad once per occurrence, where batch's
+    node map keeps one: the same set of quads, a different multiset."""
+    doc = {"@context": {"@vocab": "http://v.e/"}, "@id": "http://e/s", "p": [0, 0]}
+    batch = doc_to_quads(json.loads(json.dumps(doc)))
+    streamed = list(stream_doc_quads(json.loads(json.dumps(doc))))
+    assert len(batch) == 1
+    assert streamed == batch * 2
+    assert set(streamed) == set(batch)
