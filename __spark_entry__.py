@@ -143,14 +143,12 @@ def _q_jsonld_stream_triples(spark, sf_dir):
     """Same lang-triple projection as jsonld_lang_triples but through the
     bounded-memory streaming reader (streaming/reader.py) — gives the
     generator path its own oracle-checked row."""
-    from jsonld_spark.pipeline import parallelize_small_input
+    from jsonld_spark.pipeline import page_stage
     from jsonld_spark.streaming.reader import make_streaming_pages_to_triples
-    from jsonld_spark.udfs import TRIPLES_SCHEMA
 
     pages = pages_from_documents(_docs(spark, sf_dir))
-    fn = make_streaming_pages_to_triples(None)
-    t = parallelize_small_input(pages.select("url", "html")).mapInPandas(
-        fn, TRIPLES_SCHEMA
+    t = page_stage(
+        pages, make_streaming_pages_to_triples(None), skip_scriptless=False
     )
     return (
         t.filter(F.col("error").isNull())

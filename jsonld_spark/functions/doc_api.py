@@ -1,20 +1,23 @@
 """Per-document JSON-LD API stages exposed as DataFrame transforms.
 
 Each wrapper runs one W3C API operation (expand / flatten / compact /
-frame) inside a single Arrow-batched ``mapInPandas`` stage over the
-pages table — the same fused-UDF shape as the triples path, so every
-API surface of the reference is exercisable as a distributed query.
+frame) on every ld+json script in the triples path's page stage
+(``pipeline.page_stage`` over ``udfs.pages_fn``, frames of at most
+``udfs.CHUNK_ROWS`` rows), so every API surface of the reference is
+exercisable as a distributed query.  ``error`` follows the triples
+path: its page-level errors, and ``udfs.script_error``'s text for an
+operation that raises (code, ``recursion limit`` or ``internal: …``).
 """
 
 from __future__ import annotations
 
 import json
-from typing import Callable, Iterator
+from typing import Callable
 
 from pyspark.sql import DataFrame, types as T
 
+from .. import udfs
 from ..compact import compact_document
-from ..context import ContextCache
 from ..expand import expand_document
 from ..flatten import flatten_expanded
 from ..frame import frame_document
@@ -29,55 +32,37 @@ DOC_RESULT_SCHEMA = T.StructType(
 )
 
 
-def _doc_op_udf(op: Callable, cache_bc, max_html_bytes: int):
-    import pandas as pd
+def doc_op_fn(op: Callable, cache_bc):
+    """The mapInPandas function of ``op(doc, base, cache)``; it reads
+    ``udfs.MAX_HTML_BYTES`` when built, as ``pages_fn`` reads its bound."""
+    max_html_bytes = udfs.MAX_HTML_BYTES
 
-    def fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        # broadcast + per-process memo (udfs._get_cache) — shipping the
-        # entries dict in the task closure would pay O(cache) pickling
-        # per task and lose cross-task context-parse memoization
-        from ..udfs import _get_cache, page_scripts
+    def page_rows(url, html, cache):
+        for d in udfs.page_scripts(url, html, max_html_bytes):
+            if d.error:
+                yield (url, d.script_index, None, d.error)
+                continue
+            try:
+                res = json.dumps(op(d.parsed, d.base or url, cache), sort_keys=True)
+            except Exception as e:  # noqa: BLE001
+                yield (url, d.script_index, None, udfs.script_error(e))
+                continue
+            yield (url, d.script_index, res, None)
 
-        entries = cache_bc.value if cache_bc is not None else None
-        cache = _get_cache(entries, "doc-api")
-        for pdf in batches:
-            out = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                # the triples path's page-level steps: NULL skip, size
-                # gate, extract and invalid-script rows
-                for d in page_scripts(url, html, max_html_bytes):
-                    if d.error:
-                        out.append((url, d.script_index, None, d.error))
-                        continue
-                    try:
-                        res = op(d.parsed, d.base or url, cache)
-                        out.append(
-                            (url, d.script_index, json.dumps(res, sort_keys=True), None)
-                        )
-                    except Exception as e:  # noqa: BLE001
-                        out.append((url, d.script_index, None, str(e)))
-            yield pd.DataFrame(
-                out, columns=["url", "script_index", "result", "error"]
-            )
-
-    return fn
-
-
-def _apply(
-    pages: DataFrame,
-    op: Callable,
-    cache_entries: dict | None,
-    max_html_bytes: int = 64_000_000,
-) -> DataFrame:
-    cache_bc = (
-        pages.sparkSession.sparkContext.broadcast(cache_entries)
-        if cache_entries
-        else None
+    return udfs.pages_fn(
+        cache_bc, "doc-api", page_rows, DOC_RESULT_SCHEMA.fieldNames()
     )
-    from ..pipeline import parallelize_small_input
 
-    return parallelize_small_input(pages.select("url", "html")).mapInPandas(
-        _doc_op_udf(op, cache_bc, max_html_bytes), DOC_RESULT_SCHEMA
+
+def _apply(pages: DataFrame, op: Callable, cache_entries: dict | None) -> DataFrame:
+    from ..pipeline import page_stage
+
+    sc = pages.sparkSession.sparkContext
+    cache_bc = sc.broadcast(cache_entries) if cache_entries else None
+    # no ld+json pre-filter: an oversized page without one keeps its
+    # ``document too large`` row
+    return page_stage(
+        pages, doc_op_fn(op, cache_bc), DOC_RESULT_SCHEMA, skip_scriptless=False
     )
 
 

@@ -126,6 +126,8 @@ def parallelize_small_input(df: DataFrame, min_bytes: int = 0) -> DataFrame:
     with an unconditional repartition), while the same op at 10× the
     input is dominated by the serial stage.  Heavy per-row ops (the
     JSON-LD Python stage, shingle+collect_list) keep the default 0."""
+    if df.isStreaming:  # no size estimate; asking throws (~10 ms)
+        return df
     # imported here, not at module top: a module-level pyspark.errors
     # import ahead of pyspark.sql can deadlock-break pyspark's package
     # import when another thread imports pyspark.sql at the same time
@@ -150,6 +152,19 @@ def parallelize_small_input(df: DataFrame, min_bytes: int = 0) -> DataFrame:
         "round-robin" if spread else "left as is",
     )
     return df.repartition(para) if spread else df
+
+
+def page_stage(
+    pages: DataFrame, fn, schema=TRIPLES_SCHEMA, skip_scriptless: bool = True
+) -> DataFrame:
+    """Every page-level Python stage: ``fn`` (a ``udfs.pages_fn`` loop)
+    as one ``mapInPandas`` over the url and html columns of ``pages``,
+    behind the ``LDJSON_PREFILTER`` when ``skip_scriptless`` (see
+    ``KGPipeline.extract``) and ``parallelize_small_input``."""
+    src = pages.select("url", "html")
+    if skip_scriptless:
+        src = src.filter(F.expr(LDJSON_PREFILTER))
+    return parallelize_small_input(src).mapInPandas(fn, schema)
 
 
 class KGPipeline:
@@ -180,16 +195,15 @@ class KGPipeline:
     def extract(
         self, pages: DataFrame, skip_scriptless: bool = True
     ) -> DataFrame:
-        """pages → (url, subj, …, graph, error) — triple rows + error rows.
+        """pages → (url, subj, …, graph, error) — triple rows + error rows:
+        the batch UDF (``udfs.make_pages_to_triples``) in ``page_stage``.
 
         ``skip_scriptless`` (default on) puts a whole-stage-codegen JVM
         pre-filter in front of the Arrow crossing: a page whose html
         lacks the (case-folded) ``ld+json`` substring cannot produce a
         single row from the scanner (sources/html_jsonld.py requires
         ``type="application/ld+json"``, case-insensitive, and a page
-        with no script block yields zero rows — udfs.iter_page_rows,
-        the one page loop of both the batch UDF and the streaming
-        reader),
+        with no script block yields zero rows — udfs.iter_page_rows),
         so filtering it JVM-side is semantically transparent while
         deleting the dominant cost at crawl scale: most real pages
         carry no JSON-LD, and without the filter every one of them pays
@@ -197,7 +211,7 @@ class KGPipeline:
         deliberately conservative (commented-out or text-only
         occurrences still cross — the Python scanner then emits zero
         rows as before).  One documented divergence: a page LARGER than
-        ``max_html_bytes`` with no ld+json substring no longer emits
+        ``udfs.MAX_HTML_BYTES`` with no ld+json substring no longer emits
         its ``document too large`` error row (it is skipped before the
         size gate); pass ``skip_scriptless=False`` for byte-identical
         observability on such pages."""
@@ -209,15 +223,7 @@ class KGPipeline:
             self.canonical_bnodes,
             rdfstar=self.rdfstar,
         )
-        # column pruning: only url+html cross the Arrow boundary
-        src = pages.select("url", "html")
-        if skip_scriptless:
-            src = src.filter(F.expr(LDJSON_PREFILTER))
-        # small-input parallelism: a one-split derived frame would run
-        # the whole Python stage on one core (no-op at crawl scale —
-        # see parallelize_small_input)
-        src = parallelize_small_input(src)
-        return src.mapInPandas(fn, TRIPLES_SCHEMA)
+        return page_stage(pages, fn, skip_scriptless=skip_scriptless)
 
     def triples(
         self, pages: DataFrame, skip_scriptless: bool = True

@@ -86,6 +86,9 @@ def stream_pages_to_triples(
 ):
     """Start (and return) the streaming query writing triple parquet.
 
+    Both modes extract through ``pipeline.page_stage`` (url and html
+    only, the ``ld+json`` pre-filter, no repartition of a streaming
+    frame, one mapInPandas) and differ only in the UDF.
     ``bounded_reader=True`` swaps the batch extraction UDF for the
     per-document streaming reader (streaming/reader.py): quads leave the
     Python worker in Arrow frames of at most ``udfs.CHUNK_ROWS`` rows, so
@@ -101,24 +104,16 @@ def stream_pages_to_triples(
     against the error rows on url, exactly
     ``KGPipeline.drop_failed_pages`` (see streaming/reader.py's
     error-semantics note)."""
-    from ..pipeline import LDJSON_PREFILTER, KGPipeline
+    from ..pipeline import KGPipeline, page_stage
 
     pages = read_pages_stream(spark, pages_dir)
     pipe = KGPipeline(spark, cache_entries, cache_version=cache_version, rdfstar=rdfstar)
     if bounded_reader:
-        from ..udfs import TRIPLES_SCHEMA
         from .reader import make_streaming_pages_to_triples
 
-        fn = make_streaming_pages_to_triples(
-            pipe.cache_bc, cache_version, rdfstar=rdfstar
-        )
-        # the batch path's extract() pre-filter: scriptless pages in a
-        # micro-batch never cross to Python
-        src = pages.select("url", "html").filter(F.expr(LDJSON_PREFILTER))
-        extracted = src.mapInPandas(fn, TRIPLES_SCHEMA)
+        fn = make_streaming_pages_to_triples(pipe.cache_bc, cache_version, rdfstar=rdfstar)
+        extracted = page_stage(pages, fn)
     else:
-        # extract()'s skip_scriptless pre-filter applies to streaming
-        # frames unchanged (stateless codegen filter)
         extracted = pipe.extract(pages)
     triples = extracted.filter(F.col("error").isNull()).drop("error")
     writer = (

@@ -7,14 +7,16 @@ boundary exactly once (SURVEY.md §4 item 5); everything downstream of
 this stage is relational (JVM-side, whole-stage codegen).
 
 The stage is one loop, written once: ``pages_fn`` (the mapInPandas
-loop) drives ``iter_page_rows`` (the per-page row and error loop) for
-both the batch path (``make_pages_to_triples``) and the bounded
-streaming reader (``streaming.reader.make_streaming_pages_to_triples``).
-The two differ only in their quad source, the function that turns one
-parsed script into quads: the batch path's ``doc_to_quads`` list
-(size-guarded and canonically relabeled) versus the reader's
-``stream_doc_quads`` generator.  The doc API (functions/doc_api.py)
-shares the page-level half, ``page_scripts``.
+loop, run by ``pipeline.page_stage``) drives ``iter_page_rows`` (the
+per-page row and error loop) for both the batch path
+(``make_pages_to_triples``) and the bounded streaming reader
+(``streaming.reader.make_streaming_pages_to_triples``).  The two differ
+only in their quad source, the function that turns one parsed script
+into quads: the batch path's ``doc_to_quads`` list (size-guarded and
+canonically relabeled) versus the reader's ``stream_doc_quads``
+generator.  The doc API (functions/doc_api.py) runs ``pages_fn`` over
+its own per-script rows.  A script that raises gets ``script_error``'s
+text on every path.
 
 Blank-node identity at cluster scale: doc-local labels (``_:b0``…) are
 rewritten to ``_:h<sha256(url ‖ script_index ‖ label)>`` inside the UDF.
@@ -43,8 +45,12 @@ from .to_rdf import doc_to_quads
 # ``document too large`` row instead of its triples.
 MAX_QUADS_PER_DOC = 100_000
 
-# Most rows one output frame of the mapInPandas loop carries, on both
-# paths.  Frames this small let the JVM decode, filter and write one
+# A batch-path or doc-API page over this many UTF-8 bytes becomes one
+# ``document too large`` row before its scripts are parsed.
+MAX_HTML_BYTES = 64_000_000
+
+# Most rows one output frame of the mapInPandas loop carries, on every
+# path.  Frames this small let the JVM decode, filter and write one
 # frame while the Python worker builds the next, so a task holding a
 # giant page streams through the Arrow crossing instead of handing it
 # over in one piece after all of its Python work.  On 4 vCPUs, 4,096
@@ -140,6 +146,17 @@ def _error_row(url: str, error: str) -> tuple:
     return (url, None, None, None, None, None, None, None, error)
 
 
+def script_error(e: Exception) -> str:
+    """The error column of a script whose processing raised ``e``: a
+    JSON-LD error's code, ``recursion limit``, or ``internal: <message>``
+    for anything else."""
+    if isinstance(e, JsonLdError):
+        return e.code
+    if isinstance(e, RecursionError):
+        return "recursion limit"
+    return f"internal: {e}"
+
+
 def page_scripts(
     url: str, html, max_html_bytes: int | None = None
 ) -> list[ExtractedDoc]:
@@ -184,9 +201,9 @@ def iter_page_rows(
     warnings_out)`` produces as salted triple rows, followed by the
     script's deduped ``warning:`` rows — observability that never
     suppresses output.  A script that raises yields one error row
-    (``JsonLdError`` → its code) after whatever rows it already
-    produced: none when ``script_quads`` returns a list, some when it
-    is a generator."""
+    (``script_error``) after whatever rows it already produced: none
+    when ``script_quads`` returns a list, some when it is a
+    generator."""
     for d in page_scripts(url, html, max_html_bytes):
         if d.error:
             yield _error_row(url, d.error)
@@ -207,14 +224,8 @@ def iter_page_rows(
         try:
             for q in script_quads(d.parsed, d.base or url, cache, warnings):
                 yield salt_quad_to_row(url, si, q, _salt)
-        except JsonLdError as e:
-            yield _error_row(url, e.code)
-            continue
-        except RecursionError:
-            yield _error_row(url, "recursion limit")
-            continue
         except Exception as e:  # noqa: BLE001
-            yield _error_row(url, f"internal: {e}")
+            yield _error_row(url, script_error(e))
             continue
         for w in dict.fromkeys(warnings):  # dedup, keep order
             yield _error_row(url, f"warning: {w}")
@@ -227,7 +238,7 @@ def page_to_rows(
     rdf_direction: str | None = None,
     produce_generalized_rdf: bool = False,
     canonical_bnodes: bool = True,
-    max_html_bytes: int = 64_000_000,
+    max_html_bytes: int = MAX_HTML_BYTES,
     rdfstar: bool = False,
 ) -> list[tuple]:
     """All triple/error rows for one page of the batch path (pure Python
@@ -261,13 +272,14 @@ def pages_fn(
     cache_bc,
     cache_version: str,
     page_rows: Callable[[str, object, ContextCache], Iterable[tuple]],
+    columns: list[str] = TRIPLE_COLS,
 ):
     """THE mapInPandas loop: ``page_rows(url, html, cache)`` over every
-    page, rows leaving in frames of at most ``CHUNK_ROWS``, flushed at
-    the end of each input batch.  The bound is read here, when the
-    function is built, so it travels in the pickled closure to the
-    workers.  ``cache_bc`` is a Spark broadcast of the raw context-cache
-    dict (url → context JSON)."""
+    page, rows (named ``columns``) leaving in frames of at most
+    ``CHUNK_ROWS``, flushed at the end of each input batch.  The bound
+    is read here, when the function is built, so it travels in the
+    pickled closure to the workers.  ``cache_bc`` is a Spark broadcast
+    of the raw context-cache dict (url → context JSON)."""
     import pandas as pd
 
     max_rows = CHUNK_ROWS
@@ -281,10 +293,10 @@ def pages_fn(
                 for row in page_rows(url, html, cache):
                     out.append(row)
                     if len(out) >= max_rows:
-                        yield pd.DataFrame(out, columns=TRIPLE_COLS)
+                        yield pd.DataFrame(out, columns=columns)
                         out = []
             if out:
-                yield pd.DataFrame(out, columns=TRIPLE_COLS)
+                yield pd.DataFrame(out, columns=columns)
                 out = []
 
     return fn
@@ -296,7 +308,7 @@ def make_pages_to_triples(
     rdf_direction: str | None = None,
     produce_generalized_rdf: bool = False,
     canonical_bnodes: bool = True,
-    max_html_bytes: int = 64_000_000,
+    max_html_bytes: int = MAX_HTML_BYTES,
     rdfstar: bool = False,
 ):
     """Build the batch mapInPandas function (see ``pages_fn``)."""

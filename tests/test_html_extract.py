@@ -173,14 +173,13 @@ def test_doc_pages_template_escapes_dirty_fields(spark):
     assert vals.get("source") == 'a"b\\'
 
 
-def _doc_api_rows(pages, max_html_bytes=64_000_000):
+def _doc_api_rows(pages, op=lambda doc, base, cache: doc):
     """Drive the doc API's mapInPandas function in-process (no Spark)."""
     import pandas as pd
 
-    from jsonld_spark.functions.doc_api import _doc_op_udf
+    from jsonld_spark.functions.doc_api import doc_op_fn
 
-    fn = _doc_op_udf(lambda doc, base, cache: doc, None, max_html_bytes)
-    frames = fn(iter([pd.DataFrame(pages, columns=["url", "html"])]))
+    frames = doc_op_fn(op, None)(iter([pd.DataFrame(pages, columns=["url", "html"])]))
     return [r for f in frames for r in f.itertuples(index=False, name=None)]
 
 
@@ -190,14 +189,61 @@ def test_doc_api_null_html_yields_no_rows():
     assert _doc_api_rows([("http://ex.org/null", None)]) == []
 
 
-def test_doc_api_size_gate_counts_utf8_bytes():
+def test_doc_api_size_gate_counts_utf8_bytes(monkeypatch):
     """The size gate counts UTF-8 bytes like the triples path: 40 × 'é'
     is 40 chars but 80 bytes, over a 50-byte gate."""
+    from jsonld_spark import udfs
+
     html = "é" * 40
-    assert _doc_api_rows([("http://ex.org/e", html)], max_html_bytes=50) == [
+    monkeypatch.setattr(udfs, "MAX_HTML_BYTES", 50)
+    assert _doc_api_rows([("http://ex.org/e", html)]) == [
         ("http://ex.org/e", -1, None, "document too large: 80 bytes > 50")
     ]
-    assert _doc_api_rows([("http://ex.org/e", html)], max_html_bytes=80) == []
+    monkeypatch.setattr(udfs, "MAX_HTML_BYTES", 80)
+    assert _doc_api_rows([("http://ex.org/e", html)]) == []
+
+
+def _script_page(doc) -> str:
+    return f'<script type="application/ld+json">{json.dumps(doc)}</script>'
+
+
+def _triples_error(url, html):
+    from jsonld_spark.context import EMPTY_CACHE
+    from jsonld_spark.udfs import page_to_rows
+
+    (row,) = page_to_rows(url, html, EMPTY_CACHE)
+    return row[-1]
+
+
+def test_doc_api_jsonld_error_matches_triples_path():
+    """A JSON-LD error raised with a message: the doc API's error column
+    carries its code, the same string as the page's triples error row
+    (not ``code: message``)."""
+    from jsonld_spark.expand import expand_document
+
+    url = "http://ex.org/bad"
+    html = _script_page({"@context": {"@vocab": 5}, "p": 1})
+    want = _triples_error(url, html)
+    assert want == "invalid vocab mapping"
+    rows = _doc_api_rows(
+        [(url, html)], lambda doc, base, cache: expand_document(doc, base=base, cache=cache)
+    )
+    assert rows == [(url, 0, None, want)]
+
+
+def test_doc_api_internal_error_matches_triples_path(monkeypatch):
+    """An op raising a non-JSON-LD exception: ``internal: <message>``,
+    the string the triples path writes for the same exception."""
+    from jsonld_spark import udfs
+
+    def boom(*_a, **_k):
+        raise ValueError("boom")
+
+    url = "http://ex.org/x"
+    html = _script_page({"@id": "http://ex.org/s", "http://ex.org/p": 1})
+    assert _doc_api_rows([(url, html)], boom) == [(url, 0, None, "internal: boom")]
+    monkeypatch.setattr(udfs, "doc_to_quads", boom)
+    assert _triples_error(url, html) == "internal: boom"
 
 
 def test_extract_links_resolution(spark):

@@ -688,3 +688,12 @@ def test_extract_links_survives_malformed_utf8(spark):
     assert {r.href for r in extract_links(df).collect()} == {
         "http://m.example/x"
     }
+
+
+def test_parallelize_small_input_returns_a_streaming_frame_as_is(spark):
+    """A streaming frame has no size estimate to ask for: the very same
+    frame comes back, with no repartition."""
+    from jsonld_spark.pipeline import parallelize_small_input
+
+    stream = spark.readStream.format("rate").load()
+    assert parallelize_small_input(stream) is stream

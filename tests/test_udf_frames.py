@@ -1,15 +1,18 @@
 """The output frame bound of the fused mapInPandas loop (``udfs.pages_fn``)
-on both UDF paths: frames of at most ``udfs.CHUNK_ROWS`` rows, the same
-rows in the same order as the unbounded loop, and a first frame that
-leaves before the page's later rows are built."""
+on every page stage (batch UDF, bounded reader, doc API): frames of at
+most ``udfs.CHUNK_ROWS`` rows, the same rows in the same order as the
+unbounded loop, and a first frame that leaves before the page's later
+rows are built."""
 
 import json
 
 import pandas as pd
+import pytest
 from pyspark import cloudpickle
 
 from jsonld_spark import udfs
 from jsonld_spark.context import EMPTY_CACHE
+from jsonld_spark.functions.doc_api import doc_op_fn
 from jsonld_spark.streaming.reader import make_streaming_pages_to_triples
 
 CTX = {"@vocab": "http://v.e/", "name": {"@language": "en"}}
@@ -89,12 +92,32 @@ def test_reader_udf_first_frame_leaves_before_the_page_is_built(monkeypatch):
     assert at_first < built == len(first) + sum(len(f) for f in rest)
 
 
-def test_frame_bound_travels_in_the_pickled_function(monkeypatch):
-    """The bound is read when the function is built, so a worker that
-    unpickles it keeps that bound whatever its own module says."""
+PAGE_STAGE_FNS = {
+    "batch": lambda: udfs.make_pages_to_triples(None),
+    "reader": lambda: make_streaming_pages_to_triples(None),
+    "doc_api": lambda: doc_op_fn(lambda doc, base, cache: doc, None),
+}
+
+
+@pytest.mark.parametrize("make_fn", PAGE_STAGE_FNS.values(), ids=PAGE_STAGE_FNS)
+def test_frame_bound_travels_in_the_pickled_function(monkeypatch, make_fn):
+    """On every page stage the bound is read when the function is built,
+    so a worker that unpickles it keeps that bound whatever its own
+    module says: a page of 20 scripts (one doc-API row each) leaves in
+    frames of at most 7 rows, with the unbounded loop's rows in order."""
+    scripts = "".join(
+        f'<script type="application/ld+json">'
+        f'{json.dumps({"@context": CTX, "@id": f"http://e.com/{i}", "name": str(i)})}'
+        f"</script>"
+        for i in range(20)
+    )
+    batch = pd.DataFrame({"url": [URL], "html": [scripts.encode()]})
     monkeypatch.setattr(udfs, "CHUNK_ROWS", 7)
-    payload = cloudpickle.dumps(make_streaming_pages_to_triples(None))
+    payload = cloudpickle.dumps(make_fn())
     monkeypatch.setattr(udfs, "CHUNK_ROWS", 10**9)
-    frames = _frames(cloudpickle.loads(payload), _big_page(10))
+    want = _rows(_frames(make_fn(), batch))
+    frames = _frames(cloudpickle.loads(payload), batch)
+    assert len(want) >= 20
     assert len(frames) > 1
     assert all(len(f) <= 7 for f in frames)
+    assert _rows(frames) == want
