@@ -88,6 +88,9 @@ def add_unique_value(obj: dict, key: str, value, dedup: dict) -> None:
     a property with N values costs O(N), not O(N²).  The keys catch up
     on values appended to the array directly."""
     arr = obj.setdefault(key, [])
+    if not arr:  # a property's first value: nothing to compare against
+        arr.append(value)
+        return
     if len(arr) < _DEDUP_SCAN_MAX:
         if not any(json_eq(value, existing) for existing in arr):
             arr.append(value)

@@ -133,25 +133,30 @@ def extract_features(payloads: DataFrame) -> DataFrame:
     anything else."""
     import pandas as pd
 
+    from ..udfs import release_launch_zip_finders
+
     def fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                digest = hashlib.md5(b).hexdigest()
-                parsed = parse_image_dims(b)
-                if parsed is not None:
-                    fmt, w, h = parsed
-                else:
-                    fmt = None
-                    w, h = _fake_dims(digest)
-                out.append((int(doc_id), len(b), digest, fmt, w, h))
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id", "n_bytes", "digest", "format", "width", "height",
-                ],
-            )
+        try:
+            for pdf in batches:
+                out = []
+                for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
+                    b = bytes(payload) if payload is not None else b""
+                    digest = hashlib.md5(b).hexdigest()
+                    parsed = parse_image_dims(b)
+                    if parsed is not None:
+                        fmt, w, h = parsed
+                    else:
+                        fmt = None
+                        w, h = _fake_dims(digest)
+                    out.append((int(doc_id), len(b), digest, fmt, w, h))
+                yield pd.DataFrame(
+                    out,
+                    columns=[
+                        "doc_id", "n_bytes", "digest", "format", "width", "height",
+                    ],
+                )
+        finally:
+            release_launch_zip_finders()
 
     from ..pipeline import parallelize_small_input
 
@@ -287,32 +292,37 @@ def sample_frames(payloads: DataFrame, n_frames: int = 4) -> DataFrame:
     offsets, digests) leave the stage; no shuffle."""
     import pandas as pd
 
+    from ..udfs import release_launch_zip_finders
+
     if n_frames < 1:
         raise ValueError("sample_frames: n_frames must be >= 1")
 
     def fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                n = len(b)
-                for i in range(n_frames):
-                    start = (i * n) // n_frames
-                    end = ((i + 1) * n) // n_frames
-                    frame = b[start:end]
-                    digest = hashlib.md5(
-                        frame.hex().upper().encode()
-                    ).hexdigest()
-                    out.append(
-                        (int(doc_id), i, i * 1000, end - start, digest)
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id", "frame_idx", "frame_ts_ms",
-                    "n_frame_bytes", "frame_digest",
-                ],
-            )
+        try:
+            for pdf in batches:
+                out = []
+                for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
+                    b = bytes(payload) if payload is not None else b""
+                    n = len(b)
+                    for i in range(n_frames):
+                        start = (i * n) // n_frames
+                        end = ((i + 1) * n) // n_frames
+                        frame = b[start:end]
+                        digest = hashlib.md5(
+                            frame.hex().upper().encode()
+                        ).hexdigest()
+                        out.append(
+                            (int(doc_id), i, i * 1000, end - start, digest)
+                        )
+                yield pd.DataFrame(
+                    out,
+                    columns=[
+                        "doc_id", "frame_idx", "frame_ts_ms",
+                        "n_frame_bytes", "frame_digest",
+                    ],
+                )
+        finally:
+            release_launch_zip_finders()
 
     from ..pipeline import parallelize_small_input
 

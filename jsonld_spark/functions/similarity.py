@@ -382,17 +382,24 @@ def ivf_assign(emb: DataFrame, centroids) -> DataFrame:
     import pandas as pd
     from pyspark.sql import types as T
 
+    from ..udfs import release_launch_zip_finders
+
     c = centroids.copy()
 
     def fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                yield pd.DataFrame({"vec_id": [], "cell": []})
-                continue
-            x = np.array(list(pdf["embedding"]), dtype=np.float64)
-            # argmin ||x-c||² via quantized scores (oracle-agreeable)
-            cells = _assign_scores(x, np.asarray(c)).argmin(axis=1)
-            yield pd.DataFrame({"vec_id": pdf["vec_id"], "cell": cells.astype("int32")})
+        try:
+            for pdf in batches:
+                if not len(pdf):
+                    yield pd.DataFrame({"vec_id": [], "cell": []})
+                    continue
+                x = np.array(list(pdf["embedding"]), dtype=np.float64)
+                # argmin ||x-c||² via quantized scores (oracle-agreeable)
+                cells = _assign_scores(x, np.asarray(c)).argmin(axis=1)
+                yield pd.DataFrame(
+                    {"vec_id": pdf["vec_id"], "cell": cells.astype("int32")}
+                )
+        finally:
+            release_launch_zip_finders()
 
     from ..pipeline import parallelize_small_input
 

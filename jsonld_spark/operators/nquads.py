@@ -123,34 +123,38 @@ def parse_nquads_lines(
     if mode not in ("strict", "drop"):
         raise ValueError(f"mode must be strict|drop: {mode}")
     from ..rdf_model import parse_nquads
+    from ..udfs import release_launch_zip_finders
 
     def fn(batches):
         import pandas as pd
 
-        for pdf in batches:
-            rows = []
-            for line in pdf[col].to_numpy():
-                if line is None:
-                    continue
-                try:
-                    quads = parse_nquads(line)
-                except ValueError:
-                    if mode == "strict":
-                        raise
-                    continue
-                for q in quads:
-                    rows.append(
-                        (
-                            q.subj,
-                            q.pred,
-                            q.obj,
-                            q.obj_is_literal,
-                            None if q.obj_datatype == XSD_STRING else q.obj_datatype,
-                            q.obj_lang,
-                            q.graph,
+        try:
+            for pdf in batches:
+                rows = []
+                for line in pdf[col].to_numpy():
+                    if line is None:
+                        continue
+                    try:
+                        quads = parse_nquads(line)
+                    except ValueError:
+                        if mode == "strict":
+                            raise
+                        continue
+                    for q in quads:
+                        rows.append(
+                            (
+                                q.subj,
+                                q.pred,
+                                q.obj,
+                                q.obj_is_literal,
+                                None if q.obj_datatype == XSD_STRING else q.obj_datatype,
+                                q.obj_lang,
+                                q.graph,
+                            )
                         )
-                    )
-            yield pd.DataFrame(rows, columns=_NQ_COLS)
+                yield pd.DataFrame(rows, columns=_NQ_COLS)
+        finally:
+            release_launch_zip_finders()
 
     return lines.select(F.col(col)).mapInPandas(fn, NQ_TRIPLES_SCHEMA)
 

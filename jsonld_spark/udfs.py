@@ -18,6 +18,17 @@ generator.  The doc API (functions/doc_api.py) runs ``pages_fn`` over
 its own per-script rows.  A script that raises gets ``script_error``'s
 text on every path.
 
+Per-task fixed cost: at the start of every task a pyspark worker calls
+``importlib.invalidate_caches()``, and on Python 3.11 that makes every
+``zipimporter`` in ``sys.path_importer_cache`` re-read its archive's
+central directory.  A warm worker holds about 16 of them, all on its
+launch ``PYTHONPATH`` (the pyspark zip, one importer per imported
+subpackage; the py4j zip; the spark-core jar), which cost about 0.1 s
+per task on 4 vCPUs.  Every engine ``mapInPandas`` function therefore
+ends with ``release_launch_zip_finders()``, which drops those importers
+(and only those) so the next task in the same worker skips the
+re-reads.
+
 Blank-node identity at cluster scale: doc-local labels (``_:b0``…) are
 rewritten to ``_:h<sha256(url ‖ script_index ‖ label)>`` inside the UDF.
 Deterministic given the row, so re-running a partition after failure
@@ -30,6 +41,9 @@ cluster-wide.
 from __future__ import annotations
 
 import hashlib
+import os
+import sys
+import zipimport
 from typing import Callable, Iterable, Iterator
 
 from pyspark.sql import types as T
@@ -268,6 +282,32 @@ def page_to_rows(
     return list(iter_page_rows(url, html, cache, script_quads, max_html_bytes))
 
 
+def release_launch_zip_finders() -> None:
+    """Drop from ``sys.path_importer_cache`` every ``zipimporter`` whose
+    archive is an entry of the worker's ``PYTHONPATH``, so the next
+    task's ``importlib.invalidate_caches()`` has none of them to
+    re-read.  That variable is Spark's launch path: the pyspark zip,
+    the py4j zip and the spark-core jar, files Spark never rewrites
+    while a worker lives.  Modules already imported are untouched, and
+    a later import through a dropped path entry re-creates its importer
+    from ``zipimport._zip_directory_cache`` without a re-read.
+
+    Kept: ``--py-files`` archives, which live under the SparkFiles root
+    and which every task re-adds to ``sys.path`` (they are what
+    ``invalidate_caches`` is there for), and every ``FileFinder``.  In
+    the driver and in tests pyspark comes from site-packages, so
+    nothing matches."""
+    launch = {
+        os.path.abspath(p)
+        for p in os.environ.get("PYTHONPATH", "").split(os.pathsep)
+        if p
+    }
+    cache = sys.path_importer_cache
+    for key, finder in list(cache.items()):
+        if isinstance(finder, zipimport.zipimporter) and finder.archive in launch:
+            cache.pop(key, None)
+
+
 def pages_fn(
     cache_bc,
     cache_version: str,
@@ -279,25 +319,34 @@ def pages_fn(
     ``CHUNK_ROWS``, flushed at the end of each input batch.  The bound
     is read here, when the function is built, so it travels in the
     pickled closure to the workers.  ``cache_bc`` is a Spark broadcast
-    of the raw context-cache dict (url → context JSON)."""
+    of the raw context-cache dict (url → context JSON).
+
+    The function ends, however it ends, with
+    ``release_launch_zip_finders()``: it drops the worker's launch-path
+    zip importers (pyspark, py4j, spark-core jar) and keeps
+    ``--py-files`` archives and ``FileFinder``s, so the next task in
+    this worker does not re-read those archives' directories."""
     import pandas as pd
 
     max_rows = CHUNK_ROWS
 
     def fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        entries = cache_bc.value if cache_bc is not None else None
-        cache = _get_cache(entries, cache_version)
-        out: list[tuple] = []
-        for pdf in batches:
-            for url, html in zip(pdf["url"].to_numpy(), pdf["html"].to_numpy()):
-                for row in page_rows(url, html, cache):
-                    out.append(row)
-                    if len(out) >= max_rows:
-                        yield pd.DataFrame(out, columns=columns)
-                        out = []
-            if out:
-                yield pd.DataFrame(out, columns=columns)
-                out = []
+        try:
+            entries = cache_bc.value if cache_bc is not None else None
+            cache = _get_cache(entries, cache_version)
+            out: list[tuple] = []
+            for pdf in batches:
+                for url, html in zip(pdf["url"].to_numpy(), pdf["html"].to_numpy()):
+                    for row in page_rows(url, html, cache):
+                        out.append(row)
+                        if len(out) >= max_rows:
+                            yield pd.DataFrame(out, columns=columns)
+                            out = []
+                if out:
+                    yield pd.DataFrame(out, columns=columns)
+                    out = []
+        finally:
+            release_launch_zip_finders()
 
     return fn
 

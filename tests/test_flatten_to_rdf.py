@@ -292,6 +292,44 @@ def test_from_quads_value_dedup_is_linear(monkeypatch):
     assert len(calls) <= 4 * n
 
 
+def test_first_value_of_a_property_costs_no_json_eq(monkeypatch):
+    """A property's first value has nothing to equal, so neither the node
+    map nor the reader's flat path scans for it: nodes whose properties
+    each hold one value cost zero ``json_eq`` calls and zero dedup scans
+    (the ``any(json_eq(...) for ...)`` in ``add_unique_value``, the only
+    ``any`` in flatten.py)."""
+    import jsonld_spark.flatten as flatten_mod
+    from jsonld_spark.context import Context
+    from jsonld_spark.flatten import flat_node
+
+    scans = []
+
+    def counted_any(it):
+        scans.append(1)
+        return any(it)
+
+    monkeypatch.setattr(flatten_mod, "any", counted_any, raising=False)
+
+    ctx = {"@vocab": "http://s.org/"}
+    nodes = [
+        {"@id": f"http://e.com/{i}", "@type": "Thing", "name": f"n{i}", "n": i}
+        for i in range(50)
+    ]
+    calls = _count_json_eq(monkeypatch)
+    out = doc_to_quads({"@context": ctx, "@graph": nodes})
+    assert len(out) == 3 * len(nodes)
+    parsed = Context(base="http://base.e/").parse(ctx)
+    flat = [flat_node(n, parsed, "http://base.e/") for n in nodes]
+    assert flat[0] == {
+        "@id": "http://e.com/0",
+        "@type": ["http://s.org/Thing"],
+        "http://s.org/name": [{"@value": "n0"}],
+        "http://s.org/n": [{"@value": 0}],
+    }
+    assert calls == []
+    assert scans == []
+
+
 def test_long_value_array_dedup_keeps_json_eq():
     """Past the scan threshold the keyed dedup keeps json_eq's rules: a
     boolean is not a number, 1 equals 1.0, object key order does not
