@@ -17,7 +17,6 @@ from __future__ import annotations
 from typing import Any
 
 from . import errors as err
-from .context import UNSET, Context
 from .expand import expand_document
 from .iri import is_keyword
 from .rdf_model import jcs_canonicalize
@@ -364,79 +363,6 @@ def create_node_map(
             value, node_map, namer, active_graph, id_, property_,
             None, False, True, dedup,
         )
-
-
-def _is_iri(value) -> bool:
-    """An expansion result naming an IRI: no keyword, no blank node,
-    nothing the expansion drops."""
-    return isinstance(value, str) and ":" in value and not value.startswith("_:")
-
-
-def flat_node(element, ctx: Context, base: str | None) -> dict | None:
-    """The node-map entry ``expand`` → ``create_node_map`` builds for a
-    FLAT node object, built straight from the JSON element with the
-    expansion's own ``expand_key``, ``expand_iri`` and ``expand_value``
-    calls; None means the element needs the general path.  Flat means:
-    an IRI ``@id`` under exactly one key, string ``@type`` values that
-    expand to IRIs and have no type-scoped context, and every other key
-    an IRI property whose term has no container, scoped context, reverse
-    or ``@json`` type, holding one non-null scalar or an array of them
-    (each expanding to a value object or an IRI reference).  A term's
-    ``@nest`` value only steers compaction, so it does not matter here;
-    a key expanding to ``@nest`` is a keyword and falls back.  Every case
-    that would warn, raise, revert the context or touch the blank-node
-    namer falls back, so the entry is exactly the general path's."""
-    if not isinstance(element, dict) or ctx.previous_context is not None:
-        return None
-    subject = None
-    types: list[str] = []
-    props: list[tuple[str, str, object]] = []
-    for key, value in element.items():
-        prop = ctx.expand_key(key)
-        if prop == "@id":
-            if subject is not None or not isinstance(value, str):
-                return None  # a second @id key raises CollidingKeywords
-            subject = ctx.expand_iri(value, document_relative=True, base=base)
-            if not _is_iri(subject):
-                return None
-        elif prop == "@type":
-            for t in value if isinstance(value, list) else (value,):
-                if not isinstance(t, str):
-                    return None
-                ttd = ctx.term(t)
-                if ttd is not None and ttd.local_context is not UNSET:
-                    return None
-                t = ctx.expand_iri(t, vocab=True, document_relative=True, base=base)
-                if not _is_iri(t):
-                    return None
-                types.append(t)
-        elif not _is_iri(prop):
-            return None
-        else:
-            td = ctx.term(key)
-            if td is not None and (
-                td.container_mapping
-                or td.local_context is not UNSET
-                or td.reverse_property
-                or td.type_mapping == "@json"
-            ):
-                return None
-            props.append((prop, key, value))
-    if subject is None:
-        return None
-    node: dict = {"@id": subject}
-    dedup: dict = {}
-    for t in types:
-        add_unique_value(node, "@type", t, dedup)
-    for prop, key, value in props:
-        for v in value if isinstance(value, list) else (value,):
-            if v is None or isinstance(v, (dict, list)):
-                return None
-            obj = ctx.expand_value(key, v, base=base)
-            if "@id" in obj and not _is_iri(obj["@id"]):
-                return None
-            add_unique_value(node, prop, obj, dedup)
-    return node
 
 
 def node_map_from_expanded(expanded) -> tuple[dict, BlankNodeNamer]:

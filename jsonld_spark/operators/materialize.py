@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..from_rdf import from_quads
 from ..rdf_model import Quad
+from ..udfs import release_launch_zip_finders
 
 MATERIALIZED_SCHEMA = T.StructType(
     [
@@ -63,33 +64,36 @@ def materialize_graphs(
     import pandas as pd
 
     def fold(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        g = pdf["graph"].iloc[0] if len(pdf) else None
-        if g is not None and not isinstance(g, str):
-            g = None
-        quads = [
-            Quad(
-                subj,
-                pred,
-                obj,
-                bool(lit),
-                ("http://www.w3.org/2001/XMLSchema#string"
-                 if lit and dt is None and lang is None
-                 else dt),
-                lang,
-                None,
+        try:
+            g = pdf["graph"].iloc[0] if len(pdf) else None
+            if g is not None and not isinstance(g, str):
+                g = None
+            quads = [
+                Quad(
+                    subj,
+                    pred,
+                    obj,
+                    bool(lit),
+                    ("http://www.w3.org/2001/XMLSchema#string"
+                     if lit and dt is None and lang is None
+                     else dt),
+                    lang,
+                    None,
+                )
+                for subj, pred, obj, lit, dt, lang in zip(
+                    pdf["subj"], pdf["pred"], pdf["obj"],
+                    pdf["obj_is_literal"], pdf["obj_datatype"], pdf["obj_lang"],
+                )
+            ]
+            docs = from_quads(quads, ordered=ordered, use_native_types=use_native_types)
+            n = len(docs)
+            out_doc = post(docs) if post is not None else docs
+            return pd.DataFrame(
+                [(g, json.dumps(out_doc, sort_keys=True), n)],
+                columns=["graph", "jsonld", "n_nodes"],
             )
-            for subj, pred, obj, lit, dt, lang in zip(
-                pdf["subj"], pdf["pred"], pdf["obj"],
-                pdf["obj_is_literal"], pdf["obj_datatype"], pdf["obj_lang"],
-            )
-        ]
-        docs = from_quads(quads, ordered=ordered, use_native_types=use_native_types)
-        n = len(docs)
-        out_doc = post(docs) if post is not None else docs
-        return pd.DataFrame(
-            [(g, json.dumps(out_doc, sort_keys=True), n)],
-            columns=["graph", "jsonld", "n_nodes"],
-        )
+        finally:
+            release_launch_zip_finders()
 
     sel = triples.select(
         "graph", "subj", "pred", "obj", "obj_is_literal", "obj_datatype", "obj_lang"

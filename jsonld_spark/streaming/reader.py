@@ -40,11 +40,14 @@ Per element (a spine element, or one of the node route's per-item
 mini-documents), ``_emit_elements`` takes one of two paths:
 
 * **flat node** — an element with an IRI ``@id``, IRI ``@type`` values
-  and scalar-valued IRI properties (``flatten.flat_node`` lists every
-  condition), the dump shape ``{"@id", "@type", "cell"}``, goes from
-  JSON straight to quads, like the reference's reader: ``flat_node``
-  builds its node-map entry without an expanded form or a node map, and
-  one ``_RdfEmitter`` shared across the spine emits it.
+  and scalar-valued IRI properties (``to_rdf.flat_node_quads`` lists
+  every condition), the dump shape ``{"@id", "@type", "cell"}``, goes
+  from JSON straight to quads, like the reference's reader.  The
+  key-level decisions (key expansion, term checks, the properties'
+  emission order and IRI checks, each ``@type`` value's expansion) are
+  made once per distinct key tuple of the document (``to_rdf.FlatPlans``);
+  per element only the values are checked and turned into quads, with
+  no expanded form and no node map.
 * **general** — every other element, and every element that would warn,
   raise, revert a non-propagated context or mint a blank node, runs
   expand → node map → emit on its own.
@@ -90,10 +93,16 @@ from typing import Iterator
 from .. import errors as err
 from ..context import Context, ContextCache
 from ..expand import ExpandOptions, drops_key, expand, inline_context, type_scoped
-from ..flatten import BlankNodeNamer, create_node_map, flat_node
+from ..flatten import BlankNodeNamer, create_node_map
 from ..iri import is_keyword
 from ..rdf_model import Quad
-from ..to_rdf import _RdfEmitter, _valid_resource, doc_to_quads, node_map_quads
+from ..to_rdf import (
+    FlatPlans,
+    _valid_resource,
+    doc_to_quads,
+    flat_node_quads,
+    node_map_quads,
+)
 
 # the keywords a streamed node object may carry; a document with any
 # other keyword takes the batch path
@@ -316,8 +325,7 @@ def _stream_node_properties(
     # whose own IRI is rdf:type keeps its legitimately duplicate quad,
     # matching the batch multiset. Memory: O(node's type count).
     shell_type_quads: Counter = Counter()
-    pairs = ((md, ctx) for md in minidocs())
-    for i, quads in enumerate(_emit_elements(pairs, None, namer, options)):
+    for i, quads in enumerate(_emit_elements(minidocs(), ctx, None, namer, options)):
         suppressed: Counter = Counter()
         for q in quads:
             if type_key is not None:
@@ -369,8 +377,7 @@ def stream_doc_quads(
     if kind == "spine":
         elements, graph_name, dropped = detail
         options.warnings.extend(f"dropped key {key!r}" for key in dropped)
-        pairs = ((el, ctx) for el in elements)
-        for quads in _emit_elements(pairs, graph_name, namer, options):
+        for quads in _emit_elements(elements, ctx, graph_name, namer, options):
             yield from quads
     else:
         yield from _stream_node_properties(doc, ctx, *detail, namer, options)
@@ -378,26 +385,27 @@ def stream_doc_quads(
         warnings_out.extend(options.warnings)
 
 
-def _emit_elements(pairs, graph_name, namer, options) -> Iterator[list[Quad]]:
-    """Each (element, ctx) pair's quads, one list per element — the
+def _emit_elements(elements, ctx, graph_name, namer, options) -> Iterator[list[Quad]]:
+    """Each element's quads under ``ctx``, one list per element — the
     bounded buffer, same role as the reference's provisional-statement
     window.  An element's default graph is ``graph_name``.  A flat node
-    object (``flatten.flat_node``) goes straight to the shared emitter;
-    any other element runs expand → node map → emit on its own.  Each
-    distinct warning is kept once, at its first occurrence: per-item
-    mini-docs re-derive the SAME warning for every element (e.g. one
-    droppable key over a 10M-item array), so warning memory stays
-    O(distinct), at O(1) per warning."""
-    emitter = _RdfEmitter(namer)
-    flat_ok = graph_name is None or _valid_resource(graph_name)
+    object goes straight to quads (``to_rdf.flat_node_quads``, its key
+    plans kept for this call); any other element runs expand → node map
+    → emit on its own.  Each distinct warning is kept once, at its first
+    occurrence: per-item mini-docs re-derive the SAME warning for every
+    element (e.g. one droppable key over a 10M-item array), so warning
+    memory stays O(distinct), at O(1) per warning."""
+    flat = (
+        FlatPlans(ctx, options.base, graph_name, namer)
+        if graph_name is None or _valid_resource(graph_name)
+        else None
+    )
     warnings = options.warnings
     seen, kept = set(warnings), len(warnings)
-    for element, ctx in pairs:
-        node = flat_node(element, ctx, options.base) if flat_ok else None
-        if node is not None:
-            emitter.quads = []
-            emitter.node_to_quads(node["@id"], node, graph_name)
-            yield emitter.quads
+    for element in elements:
+        quads = flat_node_quads(element, flat) if flat is not None else None
+        if quads is not None:
+            yield quads
             continue
         expanded = expand(element, None, ctx, options)
         if len(warnings) > kept:

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F, types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..udfs import release_launch_zip_finders
+
 _STATE_SCHEMA = T.StructType([T.StructField("seen", T.BooleanType())])
 
 _OUT_SCHEMA = T.StructType(
@@ -27,31 +29,34 @@ _OUT_SCHEMA = T.StructType(
 def _first_seen_fn(key, pdfs, state: GroupState):
     import pandas as pd
 
-    if state.exists:
-        # already emitted in an earlier batch → swallow re-crawls WITHOUT
-        # scanning this batch's chunks (the steady-state majority of a
-        # recrawl-heavy stream is already-seen keys)
-        (seen,) = state.get
-        if seen:
-            return iter(())
-    n = 0
-    first_ts = None
-    for pdf in pdfs:
-        n += len(pdf)
-        if len(pdf):
-            # a key's rows arrive as an ITERATOR of chunks (Arrow batch
-            # splits): the true first-seen ts is the min over ALL of
-            # them, not the first non-empty chunk's min
-            m = pdf["warc_ts"].min()
-            # Series.min skips NaN, so an all-null chunk yields NaT —
-            # never let it become (or stay) the running min: 'm < NaT'
-            # is always False and would poison first_ts for the key
-            if not pd.isna(m) and (first_ts is None or m < first_ts):
-                first_ts = m
-    state.update((True,))
-    return iter(
-        [pd.DataFrame([(key[0], first_ts, n)], columns=["url", "warc_ts", "n_occurrences"])]
-    )
+    try:
+        if state.exists:
+            # already emitted in an earlier batch → swallow re-crawls WITHOUT
+            # scanning this batch's chunks (the steady-state majority of a
+            # recrawl-heavy stream is already-seen keys)
+            (seen,) = state.get
+            if seen:
+                return iter(())
+        n = 0
+        first_ts = None
+        for pdf in pdfs:
+            n += len(pdf)
+            if len(pdf):
+                # a key's rows arrive as an ITERATOR of chunks (Arrow batch
+                # splits): the true first-seen ts is the min over ALL of
+                # them, not the first non-empty chunk's min
+                m = pdf["warc_ts"].min()
+                # Series.min skips NaN, so an all-null chunk yields NaT —
+                # never let it become (or stay) the running min: 'm < NaT'
+                # is always False and would poison first_ts for the key
+                if not pd.isna(m) and (first_ts is None or m < first_ts):
+                    first_ts = m
+        state.update((True,))
+        return iter(
+            [pd.DataFrame([(key[0], first_ts, n)], columns=["url", "warc_ts", "n_occurrences"])]
+        )
+    finally:
+        release_launch_zip_finders()
 
 
 def first_seen_pages(pages: DataFrame) -> DataFrame:
@@ -85,23 +90,26 @@ _ND_OUT_SCHEMA = T.StructType(
 def _near_dup_fn(key, pdfs, state: GroupState):
     import pandas as pd
 
-    urls: set[str] = set()
-    for pdf in pdfs:
-        urls.update(pdf["url"].tolist())
-    if not urls:
-        return iter(())
-    ordered = sorted(urls)
-    if state.exists:
-        (first,) = state.get
-    else:
-        # first holder of this band bucket, ever — deterministic keeper
-        first = ordered[0]
-        state.update((first,))
-        ordered = ordered[1:]
-    out = [(u, first, int(key[0])) for u in ordered if u != first]
-    if not out:
-        return iter(())
-    return iter([pd.DataFrame(out, columns=["url", "dup_of", "band_id"])])
+    try:
+        urls: set[str] = set()
+        for pdf in pdfs:
+            urls.update(pdf["url"].tolist())
+        if not urls:
+            return iter(())
+        ordered = sorted(urls)
+        if state.exists:
+            (first,) = state.get
+        else:
+            # first holder of this band bucket, ever — deterministic keeper
+            first = ordered[0]
+            state.update((first,))
+            ordered = ordered[1:]
+        out = [(u, first, int(key[0])) for u in ordered if u != first]
+        if not out:
+            return iter(())
+        return iter([pd.DataFrame(out, columns=["url", "dup_of", "band_id"])])
+    finally:
+        release_launch_zip_finders()
 
 
 def streaming_near_dup_pages(pages: DataFrame) -> DataFrame:

@@ -9,15 +9,20 @@ Output is a flat list of :class:`~jsonld_spark.rdf_model.Quad` — the
 exact row shape of the Spark ``triples`` DataFrame.  The pipeline calls
 :func:`doc_to_quads` once per document inside a pandas UDF and explodes
 the result (SURVEY.md §2.5: the UDF→REL boundary).
+
+The bounded streaming reader also emits FLAT node objects straight
+from JSON (:func:`flat_node_quads`): one key plan per element key shape
+(:class:`FlatPlans`) and the quads in :meth:`_RdfEmitter.node_to_quads`
+order, with no expanded form and no node map.
 """
 
 from __future__ import annotations
 
 from typing import Any
 
-from .context import IRI_MEMO_MAX, ContextCache
+from .context import IRI_MEMO_MAX, UNSET, Context, ContextCache
 from .expand import expand_document
-from .flatten import BlankNodeNamer, node_map_from_expanded
+from .flatten import BlankNodeNamer, add_unique_value, node_map_from_expanded
 from .iri import is_absolute_iri
 from .rdf_model import (
     _escape_literal,
@@ -300,6 +305,210 @@ def node_map_quads(
         for id_ in sorted(graph):
             emitter.node_to_quads(id_, graph[id_], g)
     return emitter.quads
+
+
+# -- flat nodes: JSON straight to quads (the bounded reader's path) ---------
+
+
+def _is_iri(value) -> bool:
+    """An expansion result naming an IRI: no keyword, no blank node,
+    nothing the expansion drops."""
+    return isinstance(value, str) and ":" in value and not value.startswith("_:")
+
+
+class FlatPlans:
+    """The flat-node path's memos for one run of elements under one
+    context, base and default graph: a key plan per element key tuple
+    (``plan``) and the expansion of each ``@type`` value (``type_iri``).
+    Both dicts are cleared at ``IRI_MEMO_MAX`` entries, so a spine of
+    distinct key shapes or types holds bounded memory."""
+
+    __slots__ = ("ctx", "base", "graph_name", "emitter", "plans", "types")
+
+    def __init__(
+        self, ctx: Context, base: str | None, graph_name, namer: BlankNodeNamer
+    ):
+        self.ctx = ctx
+        self.base = base
+        self.graph_name = graph_name
+        self.emitter = _RdfEmitter(namer)
+        self.plans: dict[tuple, tuple | None] = {}
+        self.types: dict[str, tuple | None] = {}
+
+    def plan(self, keys: tuple):
+        """The key-level half of the flat test, once per key tuple:
+        ``(id_key, type_keys, props)`` or None when a key sends the
+        element to the general path.  ``props`` lists each IRI property
+        in ``node_to_quads``' sorted order as ``(iri, emitted, keyed)``;
+        ``emitted`` is its ``_valid_resource`` verdict and ``keyed``
+        holds its keys in document order, each with the ``(datatype,
+        language)`` a string value becomes, or None when a string takes
+        ``expand_value`` (an ``@id``/``@vocab`` or ``rdf:JSON`` term)."""
+        plans = self.plans
+        if keys in plans:
+            return plans[keys]
+        ctx = self.ctx
+        plan = None
+        if ctx.previous_context is None:
+            id_keys, type_keys = [], []
+            by_prop: dict[str, list] = {}
+            for key in keys:
+                prop = ctx.expand_key(key)
+                if prop == "@id":
+                    id_keys.append(key)
+                elif prop == "@type":
+                    type_keys.append(key)
+                elif not _is_iri(prop):
+                    break
+                else:
+                    td = ctx.term(key)
+                    if td is not None and (
+                        td.container_mapping
+                        or td.local_context is not UNSET
+                        or td.reverse_property
+                        or td.type_mapping == "@json"
+                    ):
+                        break
+                    by_prop.setdefault(prop, []).append((key, self._string_literal(td)))
+            else:
+                # a second @id key raises CollidingKeywords: general path
+                if len(id_keys) == 1:
+                    plan = (
+                        id_keys[0],
+                        tuple(type_keys),
+                        tuple(
+                            (prop, _valid_resource(prop), tuple(by_prop[prop]))
+                            for prop in sorted(by_prop)
+                        ),
+                    )
+        if len(plans) >= IRI_MEMO_MAX:
+            plans.clear()
+        plans[keys] = plan
+        return plan
+
+    def _string_literal(self, td):
+        """The ``(datatype, language)`` of the literal a string value of
+        term ``td`` becomes (``Context.expand_value`` then
+        ``value_to_literal`` without rdf_direction), or None."""
+        type_mapping = td.type_mapping if td is not None else None
+        if type_mapping in ("@id", "@vocab", RDF_JSON):
+            return None
+        if type_mapping not in (None, "@none"):
+            return (type_mapping, None)
+        language = (
+            td.language_mapping
+            if td is not None and td.language_mapping is not UNSET
+            else self.ctx.default_language
+        )
+        if language is None:
+            return (XSD_STRING, None)
+        return (RDF_LANGSTRING, language.lower())
+
+    def type_iri(self, t: str):
+        """``(iri, emitted)`` for one string ``@type`` value, or None
+        when it has a type-scoped context or expands to no IRI."""
+        types = self.types
+        if t in types:
+            return types[t]
+        ctx = self.ctx
+        hit = None
+        ttd = ctx.term(t)
+        if ttd is None or ttd.local_context is UNSET:
+            iri = ctx.expand_iri(t, vocab=True, document_relative=True, base=self.base)
+            if _is_iri(iri):
+                hit = (iri, _valid_resource(iri))
+        if len(types) >= IRI_MEMO_MAX:
+            types.clear()
+        types[t] = hit
+        return hit
+
+
+def _flat_value(ctx: Context, key: str, v, base: str | None):
+    """``expand_value``'s object for one flat value, or None when the
+    value needs the general path: null, an array, an object, or an
+    ``@id`` that expands to no IRI."""
+    if v is None or isinstance(v, (dict, list)):
+        return None
+    obj = ctx.expand_value(key, v, base=base)
+    if "@id" in obj and not _is_iri(obj["@id"]):
+        return None
+    return obj
+
+
+def flat_node_quads(element, plans: FlatPlans) -> list[Quad] | None:
+    """The quads expand → node map → ``node_to_quads`` give for a FLAT
+    node object, in the same order, built straight from the JSON element;
+    None means the element needs the general path.  Flat means: an IRI
+    ``@id`` under exactly one key, string ``@type`` values that expand to
+    IRIs and have no type-scoped context, and every other key an IRI
+    property whose term has no container, scoped context, reverse or
+    ``@json`` type, holding one non-null scalar or an array of them (each
+    expanding to a value object or an IRI reference).  A term's ``@nest``
+    value only steers compaction, so it does not matter here; a key
+    expanding to ``@nest`` is a keyword and falls back.  Every case that
+    would warn, raise, revert the context or touch the blank-node namer
+    falls back.
+
+    The key-level decisions come from ``plans.plan``, once per key tuple;
+    every value is still checked here.  A property's one string value
+    becomes its literal directly; other values dedup as the node map
+    does (``add_unique_value``).  The subject is expanded and checked
+    without the IRI memos, since every subject of a spine is a fresh
+    entry."""
+    if not isinstance(element, dict):
+        return None
+    plan = plans.plan(tuple(element))
+    if plan is None:
+        return None
+    id_key, type_keys, props = plan
+    ctx, base, g = plans.ctx, plans.base, plans.graph_name
+    subject = element[id_key]
+    if not isinstance(subject, str):
+        return None
+    subject = ctx._expand_iri_uncached(subject, True, False, base)
+    if not _is_iri(subject):
+        return None
+    quads: list[Quad] = []
+    if type_keys:
+        types = []
+        for key in type_keys:
+            value = element[key]
+            for t in value if isinstance(value, list) else (value,):
+                if not isinstance(t, str):
+                    return None
+                hit = plans.type_iri(t)
+                if hit is None:
+                    return None
+                types.append(hit)
+        # a type IRI is a string: json_eq is ==, so dict keys dedup it
+        for iri, emitted in dict.fromkeys(types) if len(types) > 1 else types:
+            if emitted:
+                quads.append(Quad(subject, RDF_TYPE, iri, False, None, None, g))
+    emitter = plans.emitter
+    node: dict = {}
+    dedup: dict = {}
+    for prop, emitted, keyed in props:
+        if len(keyed) == 1:
+            key, literal = keyed[0]
+            v = element[key]
+            if literal is not None and isinstance(v, str):
+                if emitted:
+                    quads.append(Quad(subject, prop, v, True, literal[0], literal[1], g))
+                continue
+        for key, _ in keyed:
+            value = element[key]
+            for v in value if isinstance(value, list) else (value,):
+                obj = _flat_value(ctx, key, v, base)
+                if obj is None:
+                    return None
+                add_unique_value(node, prop, obj, dedup)
+        if emitted:
+            for obj in node.get(prop, ()):
+                term = emitter.object_to_term(obj, g)
+                if term is not None:
+                    quads.append(Quad(subject, prop, *term, g))
+    # an id outside the IRI grammar emits nothing (node_to_quads)
+    return quads if is_absolute_iri(subject) else []
 
 
 def expanded_to_quads(

@@ -300,7 +300,8 @@ def test_first_value_of_a_property_costs_no_json_eq(monkeypatch):
     ``any`` in flatten.py)."""
     import jsonld_spark.flatten as flatten_mod
     from jsonld_spark.context import Context
-    from jsonld_spark.flatten import flat_node
+    from jsonld_spark.flatten import BlankNodeNamer
+    from jsonld_spark.to_rdf import FlatPlans, flat_node_quads
 
     scans = []
 
@@ -312,20 +313,22 @@ def test_first_value_of_a_property_costs_no_json_eq(monkeypatch):
 
     ctx = {"@vocab": "http://s.org/"}
     nodes = [
-        {"@id": f"http://e.com/{i}", "@type": "Thing", "name": f"n{i}", "n": i}
+        {"@id": f"http://e.com/{i}", "@type": "Thing", "name": f"n{i}", "n": i,
+         "one": [f"o{i}"]}
         for i in range(50)
     ]
     calls = _count_json_eq(monkeypatch)
     out = doc_to_quads({"@context": ctx, "@graph": nodes})
-    assert len(out) == 3 * len(nodes)
+    assert len(out) == 4 * len(nodes)
     parsed = Context(base="http://base.e/").parse(ctx)
-    flat = [flat_node(n, parsed, "http://base.e/") for n in nodes]
-    assert flat[0] == {
-        "@id": "http://e.com/0",
-        "@type": ["http://s.org/Thing"],
-        "http://s.org/name": [{"@value": "n0"}],
-        "http://s.org/n": [{"@value": 0}],
-    }
+    plans = FlatPlans(parsed, "http://base.e/", None, BlankNodeNamer())
+    flat = [flat_node_quads(n, plans) for n in nodes]
+    assert flat[0] == [
+        Quad("http://e.com/0", RDF_TYPE, "http://s.org/Thing", False, None, None, None),
+        Quad("http://e.com/0", "http://s.org/n", "0", True, XSD_INTEGER, None, None),
+        Quad("http://e.com/0", "http://s.org/name", "n0", True, XSD_STRING, None, None),
+        Quad("http://e.com/0", "http://s.org/one", "o0", True, XSD_STRING, None, None),
+    ]
     assert calls == []
     assert scans == []
 

@@ -1,4 +1,5 @@
-"""``udfs.release_launch_zip_finders``: every engine mapInPandas function
+"""``udfs.release_launch_zip_finders``: every engine mapInPandas function,
+and every per-group function (applyInPandas, applyInPandasWithState),
 drops the worker's launch-path zip importers when it ends, so the next
 task's ``importlib.invalidate_caches()`` does not re-read those
 archives' directories.  ``--py-files`` archives and ``FileFinder``s
@@ -11,6 +12,7 @@ import zipimport
 from importlib.machinery import FileFinder
 
 import pandas as pd
+import pytest
 
 from jsonld_spark import udfs
 
@@ -67,6 +69,80 @@ def test_pages_fn_closed_early_still_releases(tmp_path, monkeypatch):
     assert list(next(gen)["url"]) == ["http://e.com/a"]
     assert set(cache) > kept  # released when the function ends
     gen.close()
+    assert set(cache) == kept
+
+
+class _State:
+    """The part of pyspark's ``GroupState`` the stateful functions use."""
+
+    def __init__(self, value=None):
+        self.value = value
+
+    @property
+    def exists(self):
+        return self.value is not None
+
+    @property
+    def get(self):
+        return self.value
+
+    def update(self, value):
+        self.value = value
+
+
+class _Frame:
+    """A DataFrame stand-in that keeps the function handed to
+    ``applyInPandas``."""
+
+    def __init__(self):
+        self.fns = []
+
+    def select(self, *cols):
+        return self
+
+    def groupBy(self, *cols):
+        return self
+
+    def applyInPandas(self, fn, schema):
+        self.fns.append(fn)
+
+
+def _group_calls():
+    """One call of each per-group function on a one-row group; each
+    returns the function's frames as a list."""
+    from jsonld_spark.operators.materialize import materialize_graphs
+    from jsonld_spark.streaming.stateful import _first_seen_fn, _near_dup_fn
+
+    triples = _Frame()
+    materialize_graphs(triples)
+    (fold,) = triples.fns
+    quads = pd.DataFrame({
+        "graph": [None], "subj": ["http://e.com/s"], "pred": ["http://e.com/p"],
+        "obj": ["x"], "obj_is_literal": [True], "obj_datatype": [None],
+        "obj_lang": [None],
+    })
+    pages = pd.DataFrame({"url": ["http://e.com/b"],
+                          "warc_ts": [pd.Timestamp("2024-01-01")]})
+    return {
+        "fold": lambda: [fold(quads)],
+        "first_seen": lambda: list(_first_seen_fn(("http://e.com/b",), iter([pages]), _State())),
+        "first_seen_again": lambda: list(
+            _first_seen_fn(("http://e.com/b",), iter([pages]), _State((True,)))
+        ),
+        "near_dup": lambda: list(_near_dup_fn((1, 7), iter([pages]), _State(("http://e.com/a",)))),
+    }
+
+
+@pytest.mark.parametrize(
+    "name, frames", [("fold", 1), ("first_seen", 1), ("first_seen_again", 0), ("near_dup", 1)]
+)
+def test_per_group_functions_release(tmp_path, monkeypatch, name, frames):
+    """The grouped functions run once per group; each return path
+    releases."""
+    call = _group_calls()[name]
+    cache, kept = _importer_cache(tmp_path, monkeypatch)
+    out = call()
+    assert len(out) == frames and all(len(f) == 1 for f in out)
     assert set(cache) == kept
 
 

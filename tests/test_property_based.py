@@ -463,6 +463,9 @@ _FLAT_TERMS = {
     "i": {"@id": "http://ex.org/i", "@type": "@id"},
     "v": {"@id": "http://ex.org/v", "@type": "@vocab"},
     "n": {"@id": "http://ex.org/n", "@type": _XSD_INT},
+    # rdf:JSON as an IRI, not @json: a string literal becomes its JCS text
+    "rj": {"@id": "http://ex.org/rj",
+           "@type": "http://www.w3.org/1999/02/22-rdf-syntax-ns#JSON"},
     "none": {"@id": "http://ex.org/none", "@type": "@none"},
     "j": {"@id": "http://ex.org/j", "@type": "@json"},
     "fr": {"@id": "http://ex.org/fr", "@language": "fr"},
@@ -480,7 +483,7 @@ _FLAT_TERMS = {
 }
 # keys the flat path takes (with the context above); "undefined" is
 # an IRI only under @vocab
-_FLAT_KEYS = ["s", "s2", "http://ex.org/s", "i", "v", "n", "none", "fr",
+_FLAT_KEYS = ["s", "s2", "http://ex.org/s", "i", "v", "n", "rj", "none", "fr",
               "nolang", "rtl", "undefined"]
 _flat_scalar = st.one_of(
     st.sampled_from(["x", "C", "ex:y", "http://ex.org/o", "", "rel/p", "_:b1", "@foo"]),
@@ -495,7 +498,12 @@ _PERTURBATIONS = [
     ("value", None), ("value", [1, None]), ("value", {"s": "x"}),
     ("value", {"@value": "x"}), ("value", [[1]]), ("value", []),
     ("id", None), ("id", 5), ("id", "_:b1"), ("id", "@foo"), ("id", "collide"),
+    ("id", "http://ex.org/a b"),  # no IRI (a space), so the node emits nothing
     ("type", "T"), ("type", 5), ("type", "_:b1"), ("type", "@foo"), ("type", []),
+    # a second element of the same key tuple whose values are not flat:
+    # the key plan the first element cached must not decide for them
+    ("twin", ("value", None)), ("twin", ("value", {"s": "x"})),
+    ("twin", ("id", "_:b1")), ("twin", ("id", "@foo")), ("twin", ("type", "T")),
 ]
 
 
@@ -504,7 +512,8 @@ def _flat_ish_docs(draw, forced=None):
     """Spine and single-node documents of flat node objects under
     generated term definitions, each element with at most one change
     that may send it down the general path; the first element gets the
-    ``forced`` change when one is given."""
+    ``forced`` change when one is given.  A ``twin`` change adds a
+    second element with the same keys after the first."""
     ctx = dict(_FLAT_TERMS)
     for key, choices in [
         ("@vocab", ["http://ex.org/vocab/"]),
@@ -516,7 +525,7 @@ def _flat_ish_docs(draw, forced=None):
     if draw(st.integers(0, 9)) == 0:
         ctx["@propagate"] = False
 
-    def element(change):
+    def elements_for(change):
         id_key = draw(st.sampled_from(["@id", "@id", "id"]))
         el = {id_key: draw(st.sampled_from(["http://ex.org/a", "ex:c", "rel/b"]))}
         type_key = draw(st.sampled_from(["@type", "type", None]))
@@ -524,26 +533,43 @@ def _flat_ish_docs(draw, forced=None):
             el[type_key] = draw(st.one_of(_flat_type, st.lists(_flat_type, max_size=3)))
         for key in draw(st.lists(st.sampled_from(_FLAT_KEYS), max_size=3)):
             el[key] = draw(_flat_value)
-        if change is not None:
-            what, arg = change
-            if what == "key":
-                el[arg] = {"s": "http://ex.org/other"} if arg == "@context" else draw(_flat_value)
-            elif what == "value":
-                el[draw(st.sampled_from(_FLAT_KEYS))] = arg
-            elif what == "id" and arg is None:
-                del el[id_key]
-            elif what == "id" and arg == "collide":
-                el["id" if id_key == "@id" else "@id"] = "http://ex.org/z"
+        if change is None:
+            return [el]
+        what, arg = change
+        if what == "twin":
+            what, arg = arg
+            if what == "value":
+                key = next((k for k in el if k in _FLAT_KEYS), None)
+                if key is None:
+                    key = draw(st.sampled_from(_FLAT_KEYS))
+                    el[key] = draw(_flat_value)
             elif what == "id":
-                el[id_key] = arg
+                key = id_key
             else:
-                el[type_key or "@type"] = arg
-        return el
+                if type_key is None:
+                    type_key = "@type"
+                    el[type_key] = draw(_flat_type)
+                key = type_key
+            return [el, {**el, key: arg}]
+        if what == "key":
+            el[arg] = {"s": "http://ex.org/other"} if arg == "@context" else draw(_flat_value)
+        elif what == "value":
+            el[draw(st.sampled_from(_FLAT_KEYS))] = arg
+        elif what == "id" and arg is None:
+            del el[id_key]
+        elif what == "id" and arg == "collide":
+            el["id" if id_key == "@id" else "@id"] = "http://ex.org/z"
+        elif what == "id":
+            el[id_key] = arg
+        else:
+            el[type_key or "@type"] = arg
+        return [el]
 
     changes = st.one_of(st.none(), st.sampled_from(_PERTURBATIONS))
-    elements = [element(forced)] if forced is not None else []
-    elements += [element(draw(changes)) for _ in range(draw(st.integers(1 - len(elements), 3)))]
-    if draw(st.booleans()):
+    elements = elements_for(forced) if forced is not None else []
+    for _ in range(draw(st.integers(1 - len(elements), 3))):
+        elements += elements_for(draw(changes))
+    if (forced is not None and forced[0] == "twin") or draw(st.booleans()):
         doc = {"@context": ctx, "@graph": elements}
         # a named graph, valid or not (a space is no IRI character)
         name = draw(st.sampled_from([None, "http://ex.org/g", "http://ex.org/g h"]))
@@ -596,7 +622,7 @@ def test_flat_node_path_matches_general_path(doc):
 
     from jsonld_spark.streaming import reader
 
-    with mock.patch.object(reader, "flat_node", lambda *a: None):
+    with mock.patch.object(reader, "flat_node_quads", lambda *a: None):
         want = _reader_run(doc)
     assert _reader_run(doc) == want
 
@@ -612,6 +638,6 @@ def test_flat_node_path_matches_general_path_per_change(change, data):
     from jsonld_spark.streaming import reader
 
     doc = data.draw(_flat_ish_docs(change))
-    with mock.patch.object(reader, "flat_node", lambda *a: None):
+    with mock.patch.object(reader, "flat_node_quads", lambda *a: None):
         want = _reader_run(doc)
     assert _reader_run(doc) == want

@@ -615,6 +615,73 @@ def test_iri_memo_bounded_on_long_spine(monkeypatch):
     assert len(to_rdf._VALID_RESOURCE_MEMO) <= IRI_MEMO_MAX
 
 
+def test_dump_key_work_is_per_shape_not_per_element(monkeypatch):
+    """A 4,000-element dump makes its key decisions once per key tuple:
+    ``Context.expand_key`` and ``Context.term`` run a constant number of
+    times, not per element, and no subject id lands in the emitter's
+    resource memo."""
+    from jsonld_spark import to_rdf
+    from jsonld_spark.context import Context, ContextCache
+
+    calls = []
+    for name in ("expand_key", "term"):
+        real = getattr(Context, name)
+
+        def counted(self, *args, _real=real, **kwargs):
+            calls.append(1)
+            return _real(self, *args, **kwargs)
+
+        monkeypatch.setattr(Context, name, counted)
+    memo: dict = {}
+    monkeypatch.setattr(to_rdf, "_VALID_RESOURCE_MEMO", memo)
+    n = 4_000
+    doc = {
+        "@context": {"@vocab": "http://v.e/"},
+        "@graph": [
+            {"@id": f"http://e.com/row/{j}", "@type": "Row", "cell": f"v{j}"}
+            for j in range(n)
+        ],
+    }
+    quads = list(stream_doc_quads(doc, base="http://base.e/", cache=ContextCache()))
+    assert len(quads) == 2 * n
+    assert len(calls) <= 10
+    assert not [k for k in memo if k.startswith("http://e.com/row/")]
+
+
+def test_key_plans_bounded_on_distinct_shapes(monkeypatch):
+    """12,000 elements with distinct key tuples and distinct types hold
+    at most ``IRI_MEMO_MAX`` key plans and type expansions at any time."""
+    from jsonld_spark.context import IRI_MEMO_MAX, ContextCache
+    from jsonld_spark.streaming import reader
+    from jsonld_spark.to_rdf import FlatPlans
+
+    sizes = []
+
+    class Spy(FlatPlans):
+        __slots__ = ()
+
+        def plan(self, keys):
+            plan = super().plan(keys)
+            sizes.append((len(self.plans), len(self.types)))
+            return plan
+
+    monkeypatch.setattr(reader, "FlatPlans", Spy)
+    n = 12_000
+    doc = {
+        "@context": {"@vocab": "http://v.e/"},
+        "@graph": [
+            {"@id": f"http://e.com/{i}", "@type": f"T{i}", f"k{i}": i}
+            for i in range(n)
+        ],
+    }
+    count = sum(1 for _ in stream_doc_quads(doc, base="http://base.e/", cache=ContextCache()))
+    assert count == 2 * n
+    assert len(sizes) == n
+    assert max(p for p, _ in sizes) == IRI_MEMO_MAX < n
+    assert max(t for _, t in sizes) <= IRI_MEMO_MAX
+    assert sizes[-1][0] == n - IRI_MEMO_MAX  # cleared once, then refilled
+
+
 def _count_expand(monkeypatch):
     from jsonld_spark.streaming import reader
 
@@ -637,7 +704,7 @@ def _general_path(doc, base="http://base.e/"):
     from jsonld_spark.streaming import reader
 
     warnings: list = []
-    with mock.patch.object(reader, "flat_node", lambda *a: None):
+    with mock.patch.object(reader, "flat_node_quads", lambda *a: None):
         quads = list(stream_doc_quads(json.loads(json.dumps(doc)), base=base,
                                       warnings_out=warnings))
     return quads, warnings
