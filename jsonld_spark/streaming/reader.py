@@ -25,10 +25,14 @@ expansion drops), and picks one of three routes:
   analog of the reference's parse_property, streaming_reader.rb:425-575),
   and so do its ``@reverse`` maps, ``@included`` arrays and ``@graph``
   elements; each ``@nest`` entry expands as one unit and ``@index``
-  rides the ``@type`` shell.  A property's container is read from the
-  node's type-scoped context (``expand.type_scoped``, steps 11-12).
-  Keys that expansion would drop stream as properties, because a
-  type-scoped context may define them.
+  rides the ``@type`` shell.  The shell expands under the document's
+  context and every item under the node's type-scoped context
+  (``expand.type_scoped``, steps 11-12), which also gives each
+  property's container; both expand as map entries, so a
+  non-propagated context holds for the node's own entries and reverts
+  for its nested nodes, as in one batch expansion.  Keys that
+  expansion would drop stream as properties, because a type-scoped
+  context may define them.
 * **batch** — every other shape goes to ``doc_to_quads``: value and
   list objects, unknown or repeated keywords, a non-string ``@id``, an
   id-only node.  A top-level value or list object expands to at most a
@@ -87,7 +91,6 @@ page-wide.
 
 from __future__ import annotations
 
-from collections import Counter
 from typing import Iterator
 
 from .. import errors as err
@@ -219,8 +222,14 @@ def _stream_node_properties(
     emitted independently, so peak memory is O(largest single value),
     not O(node's total quad count).  @reverse maps, @included arrays and
     @graph wrappers-with-properties stream per inner item the same way;
-    @index rides the shell mini-doc (validated there, emits no quads);
-    each @nest entry expands as one unit."""
+    each @nest entry expands as one unit.
+
+    The ``@type``/``@index`` shell expands under the document context
+    ``ctx`` and every item under the node's type-scoped context, as the
+    node's own entries do in one batch expansion; both steps expand as
+    map entries (``from_map``), so the node itself never reverts a
+    non-propagated context while its nested nodes still do.  Each type
+    statement is emitted once, by the shell."""
     (id_key,) = keys.get("@id", (None,))
     (type_key,) = keys.get("@type", (None,))
     (index_key,) = keys.get("@index", (None,))
@@ -231,33 +240,23 @@ def _stream_node_properties(
     # bnode labels so the shared namer can never merge distinct nodes.
     subject = doc[id_key] if id_key is not None else _unused_bnode_label(doc)
 
+    if type_key is not None or index_key is not None:
+        # shell: @id + @type (+ @index, which emits no quads but must be
+        # VALIDATED — a non-string @index raises here, before any
+        # property quads stream out)
+        shell = {"@id": subject}
+        for key in (type_key, index_key):
+            if key is not None:
+                shell[key] = doc[key]
+        shell_quads = _emit_elements([shell], ctx, None, namer, options, from_map=True)
+        for quads in shell_quads:
+            yield from quads
+
+    # the type-scoped context also decides each property's container (a
+    # type-scoped context may redefine a term's @container)
+    scoped = type_scoped(ctx, [doc[type_key]]) if type_key is not None else ctx
+
     def minidocs():
-        if type_key is not None or index_key is not None:
-            # shell: @id + @type (+ @index, which emits no quads but
-            # must be VALIDATED — a non-string @index raises here,
-            # before any property quads stream out).  The @type quads
-            # are also re-included in every property mini-doc below so
-            # type-SCOPED contexts apply — propagate=False scoping
-            # cannot be pre-applied to a fresh expansion, it reverts
-            # via previous_context.  The duplicate type quads that
-            # re-inclusion would emit are suppressed by the caller.
-            shell = {"@id": subject}
-            if type_key is not None:
-                shell[type_key] = doc[type_key]
-            if index_key is not None:
-                shell[index_key] = doc[index_key]
-            yield shell
-        # container probing uses the scoped ctx (a type-scoped context
-        # may redefine a term's @container)
-        scoped = (
-            type_scoped(ctx, [doc[type_key]]) if type_key is not None else ctx
-        )
-
-        def with_type(md: dict) -> dict:
-            if type_key is not None:
-                md[type_key] = doc[type_key]
-            return md
-
         for key in props:
             values = doc[key]
             td = scoped.term(key)
@@ -273,10 +272,10 @@ def _stream_node_properties(
                 # emit "[1]","[2]" instead of "[1,2]"); maps
                 # (@language/@index/... containers) and single values
                 # likewise expand as one unit
-                yield with_type({"@id": subject, key: values})
+                yield {"@id": subject, key: values}
                 continue
             for item in values:
-                yield with_type({"@id": subject, key: [item]})
+                yield {"@id": subject, key: [item]}
 
         # @reverse maps: one mini-doc per reverse-property item — each
         # re-derives {reverse-key: {rk: [item]}} so per-item expansion
@@ -285,12 +284,12 @@ def _stream_node_properties(
             rmap = doc[rkey]
             if not isinstance(rmap, dict):
                 # invalid @reverse value: expand as one unit → same error
-                yield with_type({"@id": subject, rkey: rmap})
+                yield {"@id": subject, rkey: rmap}
                 continue
             for rk, rv in rmap.items():
                 items = rv if isinstance(rv, list) else [rv]
                 for item in items:
-                    yield with_type({"@id": subject, rkey: {rk: [item]}})
+                    yield {"@id": subject, rkey: {rk: [item]}}
 
         # @included: each included node is an independent top-level node —
         # expand one at a time (per-item InvalidIncludedValue parity)
@@ -298,12 +297,12 @@ def _stream_node_properties(
             ival = doc[ikey]
             items = ival if isinstance(ival, list) else [ival]
             for item in items:
-                yield with_type({"@id": subject, ikey: [item]})
+                yield {"@id": subject, ikey: [item]}
 
         # @nest entries expand as ONE unit (nested maps are metadata-sized
         # next to the giant property arrays this reader exists for)
         for nkey in keys.get("@nest", ()):
-            yield with_type({"@id": subject, nkey: doc[nkey]})
+            yield {"@id": subject, nkey: doc[nkey]}
 
         # @graph on a wrapper WITH properties: named graph (graph name =
         # this node's @id, or the shared anonymous label) — stream its
@@ -312,29 +311,11 @@ def _stream_node_properties(
             gval = doc[gkey]
             elements = gval if isinstance(gval, list) else [gval]
             for el in elements:
-                yield with_type({"@id": subject, gkey: [el]})
+                yield {"@id": subject, gkey: [el]}
 
-    # The @type shell (first mini-doc) emits the node's type quads; the
-    # property mini-docs re-include @type purely so type-SCOPED contexts
-    # apply, so the identical type quads they emit are suppressed here —
-    # the reference's single-pass reader emits each type statement once
-    # (streaming_reader_spec.rb interface cases count exact statements).
-    # The re-included @type key re-emits EXACTLY the shell's type quads in
-    # every property mini-doc (same doc[type_key], same ctx), so each
-    # shell quad is suppressed at most ONCE per mini-doc — a property
-    # whose own IRI is rdf:type keeps its legitimately duplicate quad,
-    # matching the batch multiset. Memory: O(node's type count).
-    shell_type_quads: Counter = Counter()
-    for i, quads in enumerate(_emit_elements(minidocs(), ctx, None, namer, options)):
-        suppressed: Counter = Counter()
-        for q in quads:
-            if type_key is not None:
-                if i == 0:
-                    shell_type_quads[q] += 1
-                elif suppressed[q] < shell_type_quads[q]:
-                    suppressed[q] += 1
-                    continue
-            yield q
+    item_quads = _emit_elements(minidocs(), scoped, None, namer, options, from_map=True)
+    for quads in item_quads:
+        yield from quads
 
 
 def stream_doc_quads(
@@ -377,7 +358,9 @@ def stream_doc_quads(
     if kind == "spine":
         elements, graph_name, dropped = detail
         options.warnings.extend(f"dropped key {key!r}" for key in dropped)
-        for quads in _emit_elements(elements, ctx, graph_name, namer, options):
+        for quads in _emit_elements(
+            elements, ctx, graph_name, namer, options, from_map=False
+        ):
             yield from quads
     else:
         yield from _stream_node_properties(doc, ctx, *detail, namer, options)
@@ -385,13 +368,18 @@ def stream_doc_quads(
         warnings_out.extend(options.warnings)
 
 
-def _emit_elements(elements, ctx, graph_name, namer, options) -> Iterator[list[Quad]]:
+def _emit_elements(
+    elements, ctx, graph_name, namer, options, from_map: bool
+) -> Iterator[list[Quad]]:
     """Each element's quads under ``ctx``, one list per element — the
     bounded buffer, same role as the reference's provisional-statement
-    window.  An element's default graph is ``graph_name``.  A flat node
-    object goes straight to quads (``to_rdf.flat_node_quads``, its key
-    plans kept for this call); any other element runs expand → node map
-    → emit on its own.  Each distinct warning is kept once, at its first
+    window.  An element's default graph is ``graph_name``.  ``from_map``
+    is expansion's own flag: False for spine elements, which revert a
+    non-propagated ``ctx`` like any node in an array; True for the node
+    route's mini-documents, which hold the top node's own entries.  A
+    flat node object goes straight to quads (``to_rdf.flat_node_quads``,
+    its key plans kept for this call); any other element runs expand →
+    node map → emit on its own.  Each distinct warning is kept once, at its first
     occurrence: per-item mini-docs re-derive the SAME warning for every
     element (e.g. one droppable key over a 10M-item array), so warning
     memory stays O(distinct), at O(1) per warning."""
@@ -407,7 +395,7 @@ def _emit_elements(elements, ctx, graph_name, namer, options) -> Iterator[list[Q
         if quads is not None:
             yield quads
             continue
-        expanded = expand(element, None, ctx, options)
+        expanded = expand(element, None, ctx, options, from_map)
         if len(warnings) > kept:
             new = [w for w in dict.fromkeys(warnings[kept:]) if w not in seen]
             warnings[kept:] = new

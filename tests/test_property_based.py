@@ -321,7 +321,7 @@ _P_TERMS = [
 def _type_scoped_nodes(draw):
     """Top-level node objects typed with terms whose type-scoped contexts
     redefine ``p`` and each other, so a first type's scoped context may
-    redefine a later type."""
+    redefine a later type; their inline context may be non-propagated."""
     scoped_a = draw(st.fixed_dictionaries({}, optional={
         "B": st.sampled_from([{"@id": "http://v.e/B"}, {"@id": "http://v.e/C"}]),
         "p": st.sampled_from(_P_TERMS),
@@ -329,12 +329,16 @@ def _type_scoped_nodes(draw):
     scoped_b = draw(st.fixed_dictionaries({}, optional={"p": st.sampled_from(_P_TERMS)}))
     types = draw(st.lists(st.sampled_from(["A", "B", "C"]), min_size=1, max_size=3,
                           unique=True))
+    ctx = {
+        "@vocab": "http://v.e/",
+        "A": {"@id": "http://v.e/A", "@context": scoped_a},
+        "B": {"@id": "http://v.e/B", "@context": scoped_b},
+    }
+    if draw(st.booleans()):
+        # the node's own entries keep a non-propagated context
+        ctx["@propagate"] = False
     return {
-        "@context": {
-            "@vocab": "http://v.e/",
-            "A": {"@id": "http://v.e/A", "@context": scoped_a},
-            "B": {"@id": "http://v.e/B", "@context": scoped_b},
-        },
+        "@context": ctx,
         "@id": "http://e/s",
         "@type": types if len(types) > 1 or draw(st.booleans()) else types[0],
         # distinct items: a repeated one re-emits its quad when streamed

@@ -72,16 +72,40 @@ BNODE_GRAPH_DOC = {
     "@graph": [_entity(0), _entity(1)],
 }
 SET_DOC = {"@context": CTX, "@set": [_entity(0), _entity(1)]}
+# a top-level node's own entries keep a non-propagated inline context;
+# only its nested nodes revert (here b's name drops, in batch too)
+NO_PROPAGATE_CTX = {**CTX, "@propagate": False}
+NO_PROPAGATE_DOC = {
+    "@context": NO_PROPAGATE_CTX,
+    "@id": "http://e.com/np",
+    "name": "plain",
+    "n": 1,
+}
+NO_PROPAGATE_TYPED_DOC = {**NO_PROPAGATE_DOC, "@type": "Thing"}
+NO_PROPAGATE_REVERSE_DOC = {
+    "@context": NO_PROPAGATE_CTX,
+    "@id": "http://e.com/np",
+    "@type": "Thing",
+    "name": "hub",
+    "@reverse": {
+        "http://v.e/child": [
+            {"@id": "http://e.com/a"},
+            {"@id": "http://e.com/b", "name": "b"},
+        ]
+    },
+}
 
 
 @pytest.mark.parametrize(
     "doc",
     [ARRAY_DOC, GRAPH_DOC, NAMED_GRAPH_DOC, GRAPH_WITH_PROPS, _entity(7),
      REVERSE_DOC, INCLUDED_DOC, INDEX_DOC, NEST_DOC, BNODE_GRAPH_DOC,
-     SET_DOC],
+     SET_DOC, NO_PROPAGATE_DOC, NO_PROPAGATE_TYPED_DOC,
+     NO_PROPAGATE_REVERSE_DOC],
     ids=["array", "graph-wrapper", "named-graph", "graph-with-props",
          "single-node", "reverse", "included", "index", "nest",
-         "bnode-named-graph", "set-wrapper"],
+         "bnode-named-graph", "set-wrapper", "no-propagate",
+         "no-propagate-typed", "no-propagate-reverse"],
 )
 def test_stream_equals_batch(doc):
     batch = set(doc_to_quads(doc, base="http://base.e/"))
@@ -285,11 +309,10 @@ def test_json_typed_scoped_array_streams_as_one_literal():
 
 
 def test_rdf_type_valued_property_not_suppressed():
-    """Shell type-quad suppression must eat ONLY the re-included @type
-    copies, once per mini-doc — a regular term whose IRI is rdf:type
-    keeps its own (legitimately duplicate) type quad, so the streamed
-    MULTISET matches batch (ADVICE r4: equality suppression dropped
-    these)."""
+    """The node's type quads stream once, from its @type shell; a
+    regular term whose IRI is rdf:type streams its own (legitimately
+    duplicate) type quad beside them, so the streamed MULTISET matches
+    batch."""
     doc = {
         "@context": {
             "@vocab": "http://v.e/",
@@ -513,6 +536,32 @@ def test_node_document_parses_context_once(monkeypatch):
     assert len(calls) == 1
     monkeypatch.setattr(Context, "parse", real)
     assert streamed == set(doc_to_quads(doc, base="http://base.e/"))
+
+
+@pytest.mark.parametrize("n_items", [1, 2000])
+def test_scoped_type_node_parses_each_context_once(monkeypatch, n_items):
+    """A node typed by a term with a scoped context parses its contexts a
+    fixed number of times, however many items its property streams."""
+    from jsonld_spark.context import Context
+
+    real = Context.parse
+    calls = _count_parses(monkeypatch)
+    doc = {
+        "@context": {
+            **CTX,
+            "T": {"@id": "http://v.e/T", "@context": {"p": {"@type": "@id"}}},
+        },
+        "@id": "http://e.com/s",
+        "@type": "T",
+        "p": [f"http://e.com/o{i}" for i in range(n_items)],
+    }
+    streamed = list(stream_doc_quads(json.loads(json.dumps(doc)), base="http://base.e/"))
+    # the inline context and the scoped context its T term validates,
+    # then T's scoped context once for the @type shell, once for the items
+    assert len(calls) == 4
+    monkeypatch.setattr(Context, "parse", real)
+    assert sorted(streamed) == sorted(doc_to_quads(doc, base="http://base.e/"))
+    assert len(streamed) == n_items + 1
 
 
 def test_relative_graph_name_keeps_warnings():
@@ -821,9 +870,9 @@ def test_warning_dedup_is_linear(monkeypatch):
 
     real = reader.expand
 
-    def counted(element, prop, ctx, options):
+    def counted(element, prop, ctx, options, from_map):
         n = len(options.warnings)
-        out = real(element, prop, ctx, options)
+        out = real(element, prop, ctx, options, from_map)
         options.warnings[n:] = map(_CountedWarning, options.warnings[n:])
         return out
 
