@@ -1181,8 +1181,9 @@ def dedup_groups(docs: DataFrame) -> DataFrame:
             & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .select(F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst"))
-        .distinct()
     )
+    # a pair shared by several bands repeats: connected components
+    # dedups its edges once
     labels = connected_components(edges, src="src", dst="dst").select(
         F.col("id").alias("doc_id"), F.col("comp").alias("group_id")
     )

@@ -5,10 +5,13 @@ new engineering required by the north rule (SURVEY.md §4 item 2).
 Hand-rolled (no GraphFrames dependency).  Connected components is gated
 on size: an alias graph whose edge bytes fit under the session's
 ``spark.sql.autoBroadcastJoinThreshold`` is labeled by one union-find on
-the driver; a larger one runs min-label propagation with pointer
-jumping, which converges in O(log diameter) rounds, with a reliable
-``checkpoint()`` per round to truncate lineage — NOT
-``localCheckpoint``, whose executor-memory-backed partitions become
+the driver.  The bytes come from the caller when it already knows a
+bound (``KGPipeline.run`` sums one over its persisted extract, so its
+edges are collected straight from there), else from metrics observed
+while the deduped edges are checkpointed.  A larger graph runs min-label
+propagation with pointer jumping, which converges in O(log diameter)
+rounds, with a reliable ``checkpoint()`` per round to truncate lineage —
+NOT ``localCheckpoint``, whose executor-memory-backed partitions become
 unrecoverable when an executor is lost, failing the whole job on a real
 cluster.  Mega-component skew on the ``groupBy(id)`` min is left to AQE
 skew handling plus the two-stage partial aggregation Spark already
@@ -35,16 +38,23 @@ SCHEMA_SAME_AS = "http://schema.org/sameAs"
 SAME_AS_PREDICATES = (OWL_SAME_AS, SCHEMA_SAME_AS, "https://schema.org/sameAs")
 
 
+def is_sameas_edge():
+    """The triples rows ``sameas_edges`` keeps: a sameAs predicate, a
+    resource object, and a subject other than the object."""
+    return (
+        F.col("pred").isin(*SAME_AS_PREDICATES)
+        & ~F.col("obj_is_literal")
+        & (F.col("subj") != F.col("obj"))
+    )
+
+
 def sameas_edges(triples: DataFrame) -> DataFrame:
     """Alias edges from the triples table: (src, dst) where pred is a
-    sameAs predicate and the object is a resource."""
-    return (
-        triples.filter(
-            F.col("pred").isin(*SAME_AS_PREDICATES) & ~F.col("obj_is_literal")
-        )
-        .select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
+    sameAs predicate and the object is a resource.  A repeated triple
+    repeats its edge: ``connected_components`` ignores repeats on the
+    driver and dedups them once before the distributed rounds."""
+    return triples.filter(is_sameas_edge()).select(
+        F.col("subj").alias("src"), F.col("obj").alias("dst")
     )
 
 
@@ -78,30 +88,55 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 25,
+    edge_bytes: int | None = None,
 ) -> DataFrame:
     """→ DataFrame(id, comp): every vertex labeled with the lexicographic
     minimum IRI of its component (the canonical representative).  The
     labels keep the type of the edge columns (IRIs, or the long doc ids
-    of ``text.dedup_groups``).
+    of ``text.dedup_groups``).  ``edges`` may repeat an edge.
 
-    Two paths, chosen after the symmetric edge frame is checkpointed
-    (the only time ``edges`` is evaluated on either path):
+    Two paths, gated on ``spark.sql.autoBroadcastJoinThreshold``
+    (``-1`` turns the driver path off, like the broadcast):
 
-    * the edge bytes fit under ``spark.sql.autoBroadcastJoinThreshold``
-      → the edges are collected and labeled by ONE union-find on the
-      driver, rooted at each component's least vertex, and returned as
-      a local relation (which a downstream join then broadcasts).  The
-      threshold bounds what the driver holds: below it, the broadcast
-      of the mapping in ``link_entities`` already puts that much data
-      on the driver.  ``-1`` turns this path off, like the broadcast.
-      At that size the rounds' joins, group-bys, checkpoints and
-      convergence probes are job-scheduling cost, not data movement.
-      Edges with a NULL endpoint contribute no vertex here.
-    * otherwise: min-label propagation with pointer jumping, one
-      reliable checkpoint per round (every-round checkpointing beat
-      every 2nd round in an interleaved A/B on an 800k-page crawl,
-      22.4/22.5/24.8 s vs 23.8/26.0/27.0 s)."""
+    * driver: the edges are collected and labeled by ONE union-find on
+      the driver, rooted at each component's least vertex, and returned
+      as a local relation (which a downstream join then broadcasts).
+      The threshold bounds what the driver holds: below it, the
+      broadcast of the mapping in ``link_entities`` already puts that
+      much data on the driver.  At that size the rounds' joins,
+      group-bys, checkpoints and convergence probes are job-scheduling
+      cost, not data movement.  Edges with a NULL endpoint contribute
+      no vertex here.  The gate is read one of two ways:
+
+      - a caller bound: ``edge_bytes``, an upper bound on the symmetric
+        edge bytes the observed gate would measure (``KGPipeline.run``
+        sums it in the aggregate it already runs over its extract).
+        When it is under the threshold, ``edges`` is collected as it
+        is: no checkpoint, no exchange, and repeated edges stay, since
+        the union-find ignores them;
+      - observed, without a bound or above it: the edges are deduped,
+        their symmetric frame is checkpointed, and its bytes ride that
+        job as observed metrics (the only time ``edges`` is evaluated).
+    * distributed: min-label propagation with pointer jumping over the
+      checkpointed frame, one reliable checkpoint per round
+      (every-round checkpointing beat every 2nd round in an interleaved
+      A/B on an 800k-page crawl, 22.4/22.5/24.8 s vs 23.8/26.0/27.0 s)."""
+    spark = edges.sparkSession
+    threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    vertex = edges.schema[src].dataType
+    schema = StructType([StructField("id", vertex), StructField("comp", vertex)])
+    if edge_bytes is not None and 0 <= edge_bytes <= threshold:
+        log.debug(
+            "connected_components: driver path, caller bound %d bytes, "
+            "autoBroadcastJoinThreshold %d", edge_bytes, threshold,
+        )
+        pairs = edges.select(src, dst).dropna().collect()
+        return local_frame(spark, _min_root_labels(pairs), schema)
+
     _ensure_checkpoint_dir(edges)
+    # the one dedup of the edges (a caller's own distinct on the same
+    # columns collapses into it)
+    edges = edges.select(src, dst).distinct()
     sym = edges.select(
         F.col(src).alias("a"), F.col(dst).alias("b")
     ).union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
@@ -119,8 +154,6 @@ def connected_components(
     )
     observed = size.get
     n_rows, n_bytes = observed["rows"], observed["bytes"] or 0
-    spark = edges.sparkSession
-    threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
     on_driver = n_bytes <= threshold
     log.debug(
         "connected_components: %s path, %d symmetric edge rows, %d bytes, "
@@ -131,8 +164,6 @@ def connected_components(
         # each undirected edge once (a self-loop too, so its vertex
         # stays); the comparison drops NULL endpoints
         pairs = sym.filter(F.col("a") <= F.col("b")).collect()
-        vertex = sym.schema["a"].dataType
-        schema = StructType([StructField("id", vertex), StructField("comp", vertex)])
         return local_frame(spark, _min_root_labels(pairs), schema)
 
     # no init checkpoint: round 0 consumes labels twice (message join +
@@ -281,9 +312,10 @@ def dense_ids_by_sorted_order(df: DataFrame, col: str = "iri") -> DataFrame:
     )
 
 
-def canonical_mapping(edges: DataFrame) -> DataFrame:
-    """→ DataFrame(iri, canon) for IRIs whose canonical form differs."""
-    labels = connected_components(edges)
+def canonical_mapping(edges: DataFrame, edge_bytes: int | None = None) -> DataFrame:
+    """→ DataFrame(iri, canon) for IRIs whose canonical form differs.
+    ``edge_bytes`` is ``connected_components``' caller bound."""
+    labels = connected_components(edges, edge_bytes=edge_bytes)
     return labels.filter(F.col("id") != F.col("comp")).select(
         F.col("id").alias("iri"), F.col("comp").alias("canon")
     )

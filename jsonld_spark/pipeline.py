@@ -369,13 +369,20 @@ class KGPipeline:
         triples: DataFrame,
         dedup: bool = True,
         ifp_preds: tuple = (),
+        edge_bytes: int | None = None,
     ) -> DataFrame:
         """``ifp_preds``: inverse-functional predicates (foaf:mbox-like
         literal keys) whose shared values add link edges alongside the
         explicit sameAs ones — k-1 star edges per value group, junk
         keys bounded by ``ifp_sameas_edges``' ``max_group``
         (operators/graph.py); one connected-components pass merges both
-        evidence kinds."""
+        evidence kinds and dedups their union once.
+
+        ``edge_bytes``: an upper bound on the symmetric sameAs edge
+        bytes of ``triples`` (``connected_components``' caller bound);
+        it does not cover IFP edges, so it is dropped with ``ifp_preds``."""
+        # resolved at call time, so a rebinding of
+        # graph.canonical_mapping (perfbench's phase names) applies
         from .operators.graph import (
             SAME_AS_PREDICATES,
             canonical_mapping,
@@ -387,11 +394,9 @@ class KGPipeline:
         edges = sameas_edges(triples)
         for p in ifp_preds:
             edges = edges.union(ifp_sameas_edges(triples, p))
-        if ifp_preds:
-            # one dedup exchange over the whole union, not one per
-            # predicate
-            edges = edges.distinct()
-        mapping = canonical_mapping(edges)
+        mapping = canonical_mapping(
+            edges, edge_bytes=None if ifp_preds else edge_bytes
+        )
         linked = link_entities(triples, mapping)
         # canonicalization makes sameAs rows degenerate (x sameAs x) and
         # collapses distinct rows into duplicates — clean both up
@@ -521,7 +526,13 @@ class KGPipeline:
         * the lineage rows of this run are one collected per-bucket
           aggregate of the extracted rows (at most ``num_buckets``
           rows), appended to ``_lineage`` after the triples write from
-          a driver-local frame.
+          a driver-local frame.  The aggregate is the run's first
+          action, so it materializes the persisted extract; it also
+          sums the sameAs edge bytes (``2 × Σ(octet_length(subj) +
+          octet_length(obj))`` over the rows ``graph.sameas_edges``
+          keeps, repeats counted), the bound under which linking
+          collects its alias graph straight from the extract
+          (``connected_components``' driver path).
         * ``triples`` / ``errors`` / ``warnings`` sum those rows,
           merged over this run_id's earlier rows for the buckets this
           run did not write (a resume under the same run_id counts the
@@ -549,16 +560,48 @@ class KGPipeline:
         # re-derive bucket from url post-UDF (deterministic — avoids
         # shipping part_id through the Arrow boundary)
         raw = self.with_bucket(raw)
-        # the write and the lineage aggregation both consume this
-        # stage — persist so the Python UDF runs ONCE (triples are far
-        # smaller than the input html)
+        # the lineage aggregation, the sameAs edge collect and the write
+        # all consume this stage — persist so the Python UDF runs ONCE
+        # (triples are far smaller than the input html)
         from pyspark import StorageLevel
 
-        from .operators.graph import local_frame
+        from .operators.graph import is_sameas_edge, local_frame
 
         raw = raw.persist(StorageLevel.MEMORY_AND_DISK)
 
-        triples = raw.filter(F.col("error").isNull()).drop("error")
+        # the first action, so it materializes the persist: at most
+        # num_buckets rows, aggregated on the cluster, appended after the
+        # write from the driver as a local frame (no Python task).  Its
+        # sameAs byte sum bounds the symmetric alias-graph bytes (repeated
+        # rows counted), which lets connected components skip its edge
+        # checkpoint when the graph is broadcast-sized.
+        is_triple = F.col("error").isNull()
+        buckets = (
+            raw.groupBy("part_id")
+            .agg(
+                F.min("url").alias("url_min"),
+                F.max("url").alias("url_max"),
+                F.sum(F.when(is_triple, 1).otherwise(0)).alias("triple_count"),
+                F.sum(
+                    F.when(
+                        ~is_triple & ~F.col("error").startswith("warning:"), 1
+                    ).otherwise(0)
+                ).alias("error_count"),
+                F.sum(
+                    F.when(F.col("error").startswith("warning:"), 1).otherwise(0)
+                ).alias("warning_count"),
+                F.sum(
+                    F.when(
+                        is_triple & is_sameas_edge(),
+                        F.octet_length("subj") + F.octet_length("obj"),
+                    )
+                ).alias("sameas_bytes"),
+            )
+            .collect()
+        )
+        sameas_bytes = 2 * sum(b.sameas_bytes or 0 for b in buckets)
+
+        triples = raw.filter(is_triple).drop("error")
         # an explicit partition count, which AQE does not coalesce: the
         # write runs one task per core instead of one task writing every
         # bucket.  Each part_id still lands in one partition, so each
@@ -572,7 +615,9 @@ class KGPipeline:
             # requirement — ONE full shuffle of the linked triples
             # instead of two (dropDuplicates' 8-column exchange followed
             # by the bucket repartition).
-            linked = self.linked_triples(triples, dedup=False)
+            linked = self.linked_triples(
+                triples, dedup=False, edge_bytes=sameas_bytes
+            )
             linked = self.with_bucket(linked.drop("part_id"))
             out = linked.repartition(n_parts, "part_id").dropDuplicates(
                 ("part_id", *TRIPLE_KEY)
@@ -633,29 +678,6 @@ class KGPipeline:
         else:
             writer.save(triples_path)
 
-        # at most num_buckets rows: aggregate on the cluster, append
-        # from the driver as a local frame (no Python task)
-        buckets = (
-            raw.groupBy("part_id")
-            .agg(
-                F.min("url").alias("url_min"),
-                F.max("url").alias("url_max"),
-                F.sum(F.when(F.col("error").isNull(), 1).otherwise(0)).alias(
-                    "triple_count"
-                ),
-                F.sum(
-                    F.when(
-                        F.col("error").isNotNull()
-                        & ~F.col("error").startswith("warning:"),
-                        1,
-                    ).otherwise(0)
-                ).alias("error_count"),
-                F.sum(
-                    F.when(F.col("error").startswith("warning:"), 1).otherwise(0)
-                ).alias("warning_count"),
-            )
-            .collect()
-        )
         raw.unpersist()
         rows = [
             (run_id, b.part_id, b.url_min, b.url_max, self.cache_version,

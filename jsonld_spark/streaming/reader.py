@@ -376,7 +376,8 @@ def _emit_elements(
     window.  An element's default graph is ``graph_name``.  ``from_map``
     is expansion's own flag: False for spine elements, which revert a
     non-propagated ``ctx`` like any node in an array; True for the node
-    route's mini-documents, which hold the top node's own entries.  A
+    route's mini-documents, which hold the top node's own entries, so
+    they take the flat path under a type-scoped context too.  A
     flat node object goes straight to quads (``to_rdf.flat_node_quads``,
     its key plans kept for this call); any other element runs expand →
     node map → emit on its own.  Each distinct warning is kept once, at its first
@@ -384,7 +385,7 @@ def _emit_elements(
     element (e.g. one droppable key over a 10M-item array), so warning
     memory stays O(distinct), at O(1) per warning."""
     flat = (
-        FlatPlans(ctx, options.base, graph_name, namer)
+        FlatPlans(ctx, options.base, graph_name, namer, from_map)
         if graph_name is None or _valid_resource(graph_name)
         else None
     )

@@ -321,12 +321,22 @@ class FlatPlans:
     context, base and default graph: a key plan per element key tuple
     (``plan``) and the expansion of each ``@type`` value (``type_iri``).
     Both dicts are cleared at ``IRI_MEMO_MAX`` entries, so a spine of
-    distinct key shapes or types holds bounded memory."""
+    distinct key shapes or types holds bounded memory.
 
-    __slots__ = ("ctx", "base", "graph_name", "emitter", "plans", "types")
+    ``from_map`` is expansion's own flag for the elements: a
+    non-propagated context (one with a ``previous_context``) reverts for
+    an element that is not a map entry, so every key tuple then takes
+    the general path; map entries keep the context and plan as usual."""
+
+    __slots__ = ("ctx", "base", "graph_name", "emitter", "plans", "types", "reverts")
 
     def __init__(
-        self, ctx: Context, base: str | None, graph_name, namer: BlankNodeNamer
+        self,
+        ctx: Context,
+        base: str | None,
+        graph_name,
+        namer: BlankNodeNamer,
+        from_map: bool,
     ):
         self.ctx = ctx
         self.base = base
@@ -334,6 +344,7 @@ class FlatPlans:
         self.emitter = _RdfEmitter(namer)
         self.plans: dict[tuple, tuple | None] = {}
         self.types: dict[str, tuple | None] = {}
+        self.reverts = ctx.previous_context is not None and not from_map
 
     def plan(self, keys: tuple):
         """The key-level half of the flat test, once per key tuple:
@@ -349,7 +360,7 @@ class FlatPlans:
             return plans[keys]
         ctx = self.ctx
         plan = None
-        if ctx.previous_context is None:
+        if not self.reverts:
             id_keys, type_keys = [], []
             by_prop: dict[str, list] = {}
             for key in keys:

@@ -321,7 +321,7 @@ def test_first_value_of_a_property_costs_no_json_eq(monkeypatch):
     out = doc_to_quads({"@context": ctx, "@graph": nodes})
     assert len(out) == 4 * len(nodes)
     parsed = Context(base="http://base.e/").parse(ctx)
-    plans = FlatPlans(parsed, "http://base.e/", None, BlankNodeNamer())
+    plans = FlatPlans(parsed, "http://base.e/", None, BlankNodeNamer(), False)
     flat = [flat_node_quads(n, plans) for n in nodes]
     assert flat[0] == [
         Quad("http://e.com/0", RDF_TYPE, "http://s.org/Thing", False, None, None, None),

@@ -97,6 +97,60 @@ def test_cc_size_gate_picks_path(spark):
         spark.conf.set(BROADCAST_THRESHOLD, prev)
 
 
+def _count_checkpoints(monkeypatch, df) -> list:
+    calls = []
+    real = type(df).checkpoint
+
+    def counted(self, *args, **kwargs):
+        calls.append(1)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(df), "checkpoint", counted)
+    return calls
+
+
+def test_cc_caller_bound_picks_path(spark, monkeypatch):
+    """A caller's ``edge_bytes`` bound under the threshold labels on the
+    driver straight from ``edges``: no checkpoint, repeated edges kept.
+    A bound over the threshold falls back to the observed gate, which
+    checkpoints the deduped edges and still labels small graphs on the
+    driver; a threshold of ``-1`` always takes the distributed rounds."""
+    big = [(f"http://e/{i:04d}", f"http://e/{i + 1:04d}") for i in range(0, 40, 2)]
+    small = big[:1] * 3
+    small_labels = {("http://e/0000", "http://e/0000"), ("http://e/0001", "http://e/0000")}
+    big_labels = {(v, s) for s, d in big for v in (s, d)}
+    prev = spark.conf.get(BROADCAST_THRESHOLD)
+    spark.conf.set(BROADCAST_THRESHOLD, "300")
+    try:
+        cases = [
+            # (edges, bound, driver path, checkpoints, labels)
+            # the symmetric bytes with repeats counted: 2 × 3 × (13 + 13)
+            (small, 156, True, 0, small_labels),
+            # an edge with a NULL endpoint contributes no vertex
+            (small + [(None, "http://e/0009")], 156, True, 0, small_labels),
+            (small, 301, True, 1, small_labels),
+            (big, 10_000, False, None, big_labels),
+        ]
+        for pairs, bound, on_driver, n_ckpt, labels in cases:
+            e = _edges(spark, pairs)
+            calls = _count_checkpoints(monkeypatch, e)
+            cc = connected_components(e, edge_bytes=bound)
+            assert _labeled_on_driver(cc) == on_driver, (pairs, bound)
+            if n_ckpt is not None:
+                assert len(calls) == n_ckpt, (pairs, bound)
+            else:
+                assert len(calls) > 1, (pairs, bound)  # the edges, then rounds
+            assert {(r.id, r.comp) for r in cc.collect()} == labels
+        spark.conf.set(BROADCAST_THRESHOLD, "-1")
+        cc = connected_components(_edges(spark, small), edge_bytes=0)
+        assert not _labeled_on_driver(cc)
+        assert {(r.id, r.comp) for r in cc.collect()} == small_labels
+        mapping = canonical_mapping(_edges(spark, small), edge_bytes=0)
+        assert not _labeled_on_driver(mapping)
+    finally:
+        spark.conf.set(BROADCAST_THRESHOLD, prev)
+
+
 def test_link_entities_rewrites(spark):
     triples = spark.createDataFrame(
         [

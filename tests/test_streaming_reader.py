@@ -564,6 +564,35 @@ def test_scoped_type_node_parses_each_context_once(monkeypatch, n_items):
     assert len(streamed) == n_items + 1
 
 
+def test_scoped_type_node_items_take_the_flat_path(monkeypatch):
+    """The items of a node typed by a term with a scoped context are map
+    entries, which never revert the non-propagated scoped context, so
+    they take the flat path: expansion runs for the ``@type`` shell
+    only, not once per item."""
+    from jsonld_spark.streaming import reader
+
+    real, calls = reader.expand, []
+
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(reader, "expand", counted)
+    doc = {
+        "@context": {
+            **CTX,
+            "T": {"@id": "http://v.e/T", "@context": {"p": {"@type": "@id"}}},
+        },
+        "@id": "http://e.com/s",
+        "@type": "T",
+        "p": [f"http://e.com/o{i}" for i in range(2000)],
+    }
+    streamed = list(stream_doc_quads(json.loads(json.dumps(doc)), base="http://base.e/"))
+    assert len(calls) == 1
+    assert sorted(streamed) == sorted(doc_to_quads(doc, base="http://base.e/"))
+    assert len(streamed) == 2001
+
+
 def test_relative_graph_name_keeps_warnings():
     """A spine wrapper whose @id does not resolve to an IRI (no base)
     emits no quads, as in batch, but still reports the dropped top-level
