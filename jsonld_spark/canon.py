@@ -275,7 +275,7 @@ def _solve(hashes, quads, inc, bnodes, budget) -> tuple[list[str], str] | None:
     return best
 
 
-def canonical_bnode_labels(quads: list[Quad], prefix: str = "c") -> dict[str, str]:
+def canonical_bnode_labels(quads: list[Quad]) -> dict[str, str]:
     """→ {old_label: canonical label} with labels ``_:c0.._:cn`` assigned
     in canonical (content-determined) order: invariant under bnode
     relabeling AND quad/element reordering of the same graph."""
@@ -299,7 +299,7 @@ def canonical_bnode_labels(quads: list[Quad], prefix: str = "c") -> dict[str, st
     if len(bnodes) == 1:
         # fast path: a single bnode needs no canonical ordering — the
         # common crawl case (one anonymous node per doc)
-        return {next(iter(bnodes)): f"_:{prefix}0"}
+        return {next(iter(bnodes)): "_:c0"}
 
     inc = _incident_map(quads, bnodes)
     # round 0: first-degree hashes (labels=None → no input labels leak)
@@ -312,7 +312,7 @@ def canonical_bnode_labels(quads: list[Quad], prefix: str = "c") -> dict[str, st
         # Poison-graph fallback: polynomial greedy individualization —
         # still label-independent (see module docstring)
         ordered = _greedy_order(hashes, inc, bnodes)
-    return {b: f"_:{prefix}{i}" for i, b in enumerate(ordered)}
+    return {b: f"_:c{i}" for i, b in enumerate(ordered)}
 
 
 def _greedy_order(hashes, inc, bnodes) -> list[str]:
@@ -361,9 +361,9 @@ def _greedy_order(hashes, inc, bnodes) -> list[str]:
         hashes[pick] = mark
 
 
-def canonicalize_quads(quads: list[Quad], prefix: str = "c") -> list[Quad]:
+def canonicalize_quads(quads: list[Quad]) -> list[Quad]:
     """Relabel all bnodes canonically (order of quads preserved)."""
-    mapping = canonical_bnode_labels(quads, prefix)
+    mapping = canonical_bnode_labels(quads)
     if not mapping:
         return quads
     out = []

@@ -87,12 +87,13 @@ InvalidFrame = _err("InvalidFrame", "invalid frame")
 InvalidEmbedValue = type(
     "InvalidEmbedValue", (InvalidFrame,), {"code": "invalid @embed value"}
 )
-# RDF-star embedded nodes (expand.rb:333-338); rdfstar is out of scope so
-# this surfaces only through the @annotation warning path
+# RDF-star embedded nodes (expand.rb:333-338): under ``rdfstar=True``
+# expansion raises it for an embedded node with @reverse or not exactly
+# one statement
 InvalidEmbeddedNode = _err("InvalidEmbeddedNode", "invalid embedded node")
-# strict key-order contract of the reference's streaming reader
-# (streaming_reader.rb); our spine-streaming design has no key-order
-# requirement, the class exists for taxonomy/API parity
+# key-order rule of the reference's one-pass streaming reader
+# (streaming_reader.rb); the bounded reader takes parsed documents and
+# has no key-order requirement, the class exists for taxonomy parity
 InvalidStreamingKeyOrder = _err(
     "InvalidStreamingKeyOrder", "invalid streaming key order"
 )

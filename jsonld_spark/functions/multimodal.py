@@ -17,14 +17,6 @@ from typing import Iterator
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
-PAYLOAD_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("media_type", T.StringType()),
-    ]
-)
-
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),

@@ -315,15 +315,6 @@ WITH t AS (SELECT doc_id, {_DUCK_TOKENS} AS toks FROM documents),
      h AS (SELECT doc_id, list_transform(shingles, s -> {_duck_h32('s')} % {MINHASH_P}) AS hs FROM s)"""
 
 
-def _minhash_sql() -> str:
-    return f"""{_DUCK_MINHASH_CTES}
-SELECT doc_id, [{_duck_sig_items()}] AS sig FROM h ORDER BY doc_id
-"""
-
-
-MINHASH_SQL = _minhash_sql()
-
-
 def minhash_signature_str(docs: DataFrame) -> DataFrame:
     """Signature as a comma-joined string — array columns crash the
     driver's canonical sort (pandas can't factorize lists), so the
@@ -1184,7 +1175,7 @@ def dedup_groups(docs: DataFrame) -> DataFrame:
     )
     # a pair shared by several bands repeats: connected components
     # dedups its edges once
-    labels = connected_components(edges, src="src", dst="dst").select(
+    labels = connected_components(edges).select(
         F.col("id").alias("doc_id"), F.col("comp").alias("group_id")
     )
     return (

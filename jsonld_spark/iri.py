@@ -102,9 +102,6 @@ def is_absolute_iri(value) -> bool:
     return True
 
 
-_BNODE_RE = re.compile(r"\A_:")
-
-
 def is_blank_node_id(value) -> bool:
     return isinstance(value, str) and value.startswith("_:")
 

@@ -85,15 +85,14 @@ def _ensure_checkpoint_dir(df: DataFrame) -> None:
 
 def connected_components(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     max_iter: int = 25,
     edge_bytes: int | None = None,
 ) -> DataFrame:
-    """→ DataFrame(id, comp): every vertex labeled with the lexicographic
-    minimum IRI of its component (the canonical representative).  The
-    labels keep the type of the edge columns (IRIs, or the long doc ids
-    of ``text.dedup_groups``).  ``edges`` may repeat an edge.
+    """``edges(src, dst)`` → DataFrame(id, comp): every vertex labeled
+    with the lexicographic minimum IRI of its component (the canonical
+    representative).  The labels keep the type of the edge columns
+    (IRIs, or the long doc ids of ``text.dedup_groups``).  ``edges``
+    may repeat an edge.
 
     Two paths, gated on ``spark.sql.autoBroadcastJoinThreshold``
     (``-1`` turns the driver path off, like the broadcast):
@@ -123,23 +122,23 @@ def connected_components(
       A/B on an 800k-page crawl, 22.4/22.5/24.8 s vs 23.8/26.0/27.0 s)."""
     spark = edges.sparkSession
     threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
-    vertex = edges.schema[src].dataType
+    vertex = edges.schema["src"].dataType
     schema = StructType([StructField("id", vertex), StructField("comp", vertex)])
     if edge_bytes is not None and 0 <= edge_bytes <= threshold:
         log.debug(
             "connected_components: driver path, caller bound %d bytes, "
             "autoBroadcastJoinThreshold %d", edge_bytes, threshold,
         )
-        pairs = edges.select(src, dst).dropna().collect()
+        pairs = edges.select("src", "dst").dropna().collect()
         return local_frame(spark, _min_root_labels(pairs), schema)
 
     _ensure_checkpoint_dir(edges)
     # the one dedup of the edges (a caller's own distinct on the same
     # columns collapses into it)
-    edges = edges.select(src, dst).distinct()
+    edges = edges.select("src", "dst").distinct()
     sym = edges.select(
-        F.col(src).alias("a"), F.col(dst).alias("b")
-    ).union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+        F.col("src").alias("a"), F.col("dst").alias("b")
+    ).union(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
     # the size rides the checkpoint job as observed metrics: no extra
     # job, and a retried task can only over-count (→ distributed path)
     size = Observation()
@@ -322,7 +321,8 @@ def canonical_mapping(edges: DataFrame, edge_bytes: int | None = None) -> DataFr
 
 
 def link_entities(triples: DataFrame, mapping: DataFrame) -> DataFrame:
-    """Rewrite subj/obj through the canonical-IRI mapping.
+    """Rewrite subj/obj through the canonical-IRI mapping, in place:
+    the result has the columns of ``triples``, in their order.
 
     The mapping (alias table) is small relative to the triples at crawl
     scale; sizing the join is left to the planner — no eager driver-side
@@ -346,11 +346,14 @@ def link_entities(triples: DataFrame, mapping: DataFrame) -> DataFrame:
             (~triples.obj_is_literal) & (triples.obj == obj_map.o_iri),
             "left",
         )
-        .withColumn("subj", F.coalesce("s_canon", "subj"))
-        .withColumn("obj", F.coalesce("o_canon", "obj"))
-        .drop("s_iri", "s_canon", "o_iri", "o_canon")
     )
-    return out
+    canon = {"subj": "s_canon", "obj": "o_canon"}
+    return out.select(
+        *[
+            F.coalesce(canon[c], c).alias(c) if c in canon else c
+            for c in triples.columns
+        ]
+    )
 
 
 def transitive_closure(

@@ -9,15 +9,18 @@ Stages (SURVEY.md §3.1 re-trace):
    document;
 3. deterministic bucketing ``part_id = pmod(xxhash64(url), N)`` — the
    salted shuffle key (url-hash, NOT subject) so mega-domain subject
-   skew cannot concentrate a partition;
+   skew cannot concentrate a partition.  It is derived once, on the
+   extract's rows; the pages get it too only on a resume, to skip the
+   completed buckets before the extract;
 4. optional sameAs entity linking (operators.graph): connected
    components over the sameAs edges — one driver-side union-find when
    the edges fit under ``spark.sql.autoBroadcastJoinThreshold``,
    checkpointed pointer-jumping rounds otherwise — then the alias join,
    which broadcasts a driver-labeled mapping;
 5. partitioned write + per-partition lineage rows → idempotent resume
-   (completed buckets are skipped; dynamic partition overwrite makes
-   bucket re-runs exactly-once).  The write runs one task per core
+   (buckets any earlier run on the out_dir completed are skipped;
+   dynamic partition overwrite makes bucket re-runs exactly-once).
+   The write runs one task per core
    (``min(num_buckets, defaultParallelism)`` hash partitions of
    ``part_id``, one file per bucket directory).  The run never re-reads
    its own output: ``_lineage`` is read once, before the extract and
@@ -68,11 +71,10 @@ LINEAGE_SCHEMA = (
 )
 
 
-def _completed(lineage: list, scoped: bool) -> set[int]:
+def _completed(lineage: list) -> set[int]:
     """Complete buckets of this engine's cache version among
-    ``KGPipeline._read_lineage`` rows — only the run's own when
-    ``scoped``."""
-    return {r.part_id for r in lineage if r.current and (r.mine or not scoped)}
+    ``KGPipeline._read_lineage`` rows, whichever run completed them."""
+    return {r.part_id for r in lineage if r.current}
 
 
 def default_session(
@@ -239,17 +241,15 @@ class KGPipeline:
             .drop("error")
         )
 
-    def errors(
-        self, pages: DataFrame, skip_scriptless: bool = False
-    ) -> DataFrame:
-        """Error-row observability view.  Defaults to
-        ``skip_scriptless=False`` (unlike extract/triples): the
-        pre-filter would drop oversized scriptless pages before their
-        'document too large' row, and the error view is cold-path —
-        byte-identical observability matters more there than the
-        pre-filter win (ADVICE r6)."""
+    def errors(self, pages: DataFrame) -> DataFrame:
+        """Error-row observability view.  Runs the extract without the
+        ``ld+json`` pre-filter (unlike extract/triples): the pre-filter
+        would drop oversized scriptless pages before their 'document
+        too large' row, and the error view is cold-path — byte-identical
+        observability matters more there than the pre-filter win
+        (ADVICE r6)."""
         return (
-            self.extract(pages, skip_scriptless=skip_scriptless)
+            self.extract(pages, skip_scriptless=False)
             .filter(F.col("error").isNotNull())
             .select("url", "error")
         )
@@ -357,9 +357,9 @@ class KGPipeline:
 
     # -- stage 3: deterministic bucketing ------------------------------------
 
-    def with_bucket(self, df: DataFrame, url_col: str = "url") -> DataFrame:
+    def with_bucket(self, df: DataFrame) -> DataFrame:
         return df.withColumn(
-            "part_id", F.pmod(F.xxhash64(F.col(url_col)), F.lit(self.num_buckets))
+            "part_id", F.pmod(F.xxhash64(F.col("url")), F.lit(self.num_buckets))
         )
 
     # -- stage 4: entity linking ---------------------------------------------
@@ -367,11 +367,16 @@ class KGPipeline:
     def linked_triples(
         self,
         triples: DataFrame,
-        dedup: bool = True,
         ifp_preds: tuple = (),
         edge_bytes: int | None = None,
     ) -> DataFrame:
-        """``ifp_preds``: inverse-functional predicates (foaf:mbox-like
+        """``triples`` with subjects and resource objects rewritten to
+        their component's canonical IRI and the degenerate ``x sameAs
+        x`` rows dropped.  Rows that canonicalization makes equal are
+        NOT deduped here: ``run`` dedups once, on the bucket layout it
+        writes (``dropDuplicates`` over ``part_id`` + ``TRIPLE_KEY``).
+
+        ``ifp_preds``: inverse-functional predicates (foaf:mbox-like
         literal keys) whose shared values add link edges alongside the
         explicit sameAs ones — k-1 star edges per value group, junk
         keys bounded by ``ifp_sameas_edges``' ``max_group``
@@ -397,17 +402,10 @@ class KGPipeline:
         mapping = canonical_mapping(
             edges, edge_bytes=None if ifp_preds else edge_bytes
         )
-        linked = link_entities(triples, mapping)
-        # canonicalization makes sameAs rows degenerate (x sameAs x) and
-        # collapses distinct rows into duplicates — clean both up
-        linked = linked.filter(
+        # canonicalization makes sameAs rows degenerate (x sameAs x)
+        return link_entities(triples, mapping).filter(
             ~(F.col("pred").isin(*SAME_AS_PREDICATES) & (F.col("subj") == F.col("obj")))
         )
-        if dedup:
-            linked = linked.dropDuplicates(
-                TRIPLE_KEY if "url" in linked.columns else None
-            )
-        return linked
 
     def write_bucketed_table(
         self, triples: DataFrame, table_name: str, buckets: int = 64
@@ -470,19 +468,6 @@ class KGPipeline:
             .collect()
         )
 
-    def completed_buckets(self, out_dir: str, run_id: str | None = None) -> set[int]:
-        """Buckets recorded complete — optionally scoped to ``run_id``.
-
-        Unscoped (the default used by ``run(resume_scope="out_dir")``)
-        implements crash-retry resume: a re-submitted job gets a fresh
-        run_id but must still skip buckets a previous attempt finished.
-        The caller contract that makes this safe is ``new input ⇒ new
-        out_dir`` — every input covers all url-hash buckets, so pointing
-        a NEW crawl at an old out_dir would skip everything; pass
-        ``resume_scope="run_id"`` (or a run_id here) when out_dirs are
-        reused across inputs and retries keep their run_id."""
-        return _completed(self._read_lineage(out_dir, run_id), run_id is not None)
-
     def run(
         self,
         pages: DataFrame,
@@ -492,16 +477,20 @@ class KGPipeline:
         link_entities: bool = False,
         dedup: bool = False,
         table_format: str = "parquet",
-        resume_scope: str = "out_dir",
     ) -> dict:
         """Execute the pipeline; returns run stats.
 
-        ``resume_scope`` controls which lineage rows count as already
-        done: ``"out_dir"`` (default) skips buckets completed by ANY
-        prior run on this out_dir — the crash-retry pattern, where each
-        re-submission carries a fresh run_id; ``"run_id"`` only skips
-        buckets this exact run_id completed, for deployments that reuse
-        an out_dir across different inputs (see ``completed_buckets``).
+        ``resume`` skips every bucket that ANY earlier run on this
+        out_dir completed under this engine's ``cache_version`` — the
+        crash-retry pattern, where each re-submission carries a fresh
+        run_id.  The caller contract that makes this safe is ``new
+        input ⇒ new out_dir``: every input covers all url-hash buckets,
+        so a new crawl pointed at an old out_dir would skip its buckets.
+        The contract also covers linking: a linked run links the
+        buckets it runs against their own alias graph only, so resumed
+        over buckets that an earlier run on a PARTIAL input completed,
+        it can write other canonical IRIs than one fresh run over the
+        whole input.
 
         ``table_format`` selects the sink data source.  The sandbox ships
         no Iceberg runtime jar, so the default (and all tests) use
@@ -544,22 +533,23 @@ class KGPipeline:
           exist before the run, else a metadata-only parquet
           ``count()`` of the directory (older buckets included)."""
         t0 = time.time()
-        if resume_scope not in ("out_dir", "run_id"):
-            raise ValueError(f"resume_scope must be out_dir|run_id: {resume_scope}")
         if dedup:
             pages = self.dedup_pages(pages)
-        pages_b = self.with_bucket(pages)
         # the only lineage read of the run, before the extract: the
         # buckets to skip and this run_id's earlier rows for the totals
         lineage = self._read_lineage(out_dir, run_id)
-        done = _completed(lineage, resume_scope == "run_id") if resume else set()
+        done = _completed(lineage) if resume else set()
         if done:
-            pages_b = pages_b.filter(~F.col("part_id").isin(*done))
+            pages = (
+                self.with_bucket(pages)
+                .filter(~F.col("part_id").isin(*done))
+                .drop("part_id")
+            )
 
-        raw = self.extract(pages_b.drop("part_id"))
-        # re-derive bucket from url post-UDF (deterministic — avoids
-        # shipping part_id through the Arrow boundary)
-        raw = self.with_bucket(raw)
+        # the bucket is derived from url after the UDF (deterministic —
+        # part_id never crosses the Arrow boundary), and rides unchanged
+        # through linking, which rewrites only subj and obj
+        raw = self.with_bucket(self.extract(pages))
         # the lineage aggregation, the sameAs edge collect and the write
         # all consume this stage — persist so the Python UDF runs ONCE
         # (triples are far smaller than the input html)
@@ -615,10 +605,7 @@ class KGPipeline:
             # requirement — ONE full shuffle of the linked triples
             # instead of two (dropDuplicates' 8-column exchange followed
             # by the bucket repartition).
-            linked = self.linked_triples(
-                triples, dedup=False, edge_bytes=sameas_bytes
-            )
-            linked = self.with_bucket(linked.drop("part_id"))
+            linked = self.linked_triples(triples, edge_bytes=sameas_bytes)
             out = linked.repartition(n_parts, "part_id").dropDuplicates(
                 ("part_id", *TRIPLE_KEY)
             )

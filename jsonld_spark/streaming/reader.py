@@ -93,7 +93,6 @@ from __future__ import annotations
 
 from typing import Iterator
 
-from .. import errors as err
 from ..context import Context, ContextCache
 from ..expand import ExpandOptions, drops_key, expand, inline_context, type_scoped
 from ..flatten import BlankNodeNamer, create_node_map
@@ -323,29 +322,17 @@ def stream_doc_quads(
     base: str | None = None,
     cache: ContextCache | None = None,
     warnings_out: list | None = None,
-    strict_order: bool = False,
     rdfstar: bool = False,
 ) -> Iterator[Quad]:
     """Generator over the document's quads with bounded memory.
 
     Streams the document's spine element by element, or its top-level
     node property item by property item (``_classify``); every other
-    shape takes the batch path (identical output).
-
-    ``strict_order=True`` enforces the reference StreamingReader's
-    single-pass key-order constraint (streaming_reader.rb raises
-    ``invalid streaming key order`` when ``@context`` follows other
-    entries, since a one-pass reader would already have emitted under
-    the wrong context).  Off by default: this reader receives parsed
-    documents, so tolerating late ``@context`` is free — the flag exists
-    for spec-parity validation.
+    shape takes the batch path (identical output).  Key order is free:
+    the reader receives parsed documents, so a ``@context`` after other
+    entries still applies to them (the reference's one-pass
+    StreamingReader raises ``invalid streaming key order`` there).
     """
-    if strict_order and isinstance(doc, dict):
-        keys = list(doc)
-        if "@context" in keys and keys.index("@context") > 0:
-            raise err.InvalidStreamingKeyOrder(
-                f"@context must come first in streaming mode, got keys {keys!r}"
-            )
     shape = _classify(doc, Context(base=base, cache=cache), base)
     if shape is None:
         yield from doc_to_quads(

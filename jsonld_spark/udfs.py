@@ -361,10 +361,11 @@ def make_pages_to_triples(
     rdf_direction: str | None = None,
     produce_generalized_rdf: bool = False,
     canonical_bnodes: bool = True,
-    max_html_bytes: int = MAX_HTML_BYTES,
     rdfstar: bool = False,
 ):
-    """Build the batch mapInPandas function (see ``pages_fn``)."""
+    """Build the batch mapInPandas function (see ``pages_fn``); it reads
+    ``MAX_HTML_BYTES`` when built, as ``pages_fn`` reads its bound."""
+    max_html_bytes = MAX_HTML_BYTES
 
     def page_rows(url, html, cache):
         return page_to_rows(

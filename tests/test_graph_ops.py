@@ -201,41 +201,57 @@ def test_end_to_end_sameas_merge(spark):
     assert names[0].subj == "http://x/a"
 
 
-def test_post_link_dedup_exchange_shape(spark):
-    """VERDICT r3 #8: the post-link dropDuplicates is ONE exchange keyed
-    on the full 8-tuple — fine-grained (key cardinality ≈ row count, so
-    no mega-domain key can skew it), and there is no url-only exchange
-    in the dedup subtree that a hot domain could pile onto.  See
-    PLANS.md 'Post-link dedup'."""
-    from jsonld_spark.pipeline import KGPipeline
+def test_post_link_dedup_exchange_shape(spark, tmp_path, monkeypatch):
+    """VERDICT r3 #8: the linked run's one post-link dedup shares the
+    write's exchange — ONE hash exchange, keyed on part_id (a pure
+    function of url, so equal rows are co-located and the dedup over
+    part_id + the 8-tuple needs no exchange of its own) — and there is
+    no url-only exchange in the dedup subtree that a hot domain could
+    pile onto.  See PLANS.md 'Post-link dedup'."""
+    import json
 
-    pipe = KGPipeline(spark)
-    triples = spark.createDataFrame(
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from jsonld_spark.pipeline import TRIPLE_KEY, KGPipeline
+
+    plans = []
+    real = DataFrameWriter.save
+
+    def save(self, path=None, *args, **kwargs):
+        if str(path).endswith("triples"):
+            plans.append(self._df._jdf.queryExecution().executedPlan().toString())
+        return real(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "save", save)
+
+    def script(doc):
+        return '<script type="application/ld+json">' + json.dumps(doc) + "</script>"
+
+    pages = spark.createDataFrame(
         [
-            ("http://s/p", "http://x/b", "http://schema.org/sameAs",
-             "http://x/a", False, None, None, None),
-            ("http://s/p", "http://x/b", "http://p/name", "B", True,
-             None, None, None),
+            ("http://s/p", script({
+                "@id": "http://x/b",
+                "http://schema.org/sameAs": {"@id": "http://x/a"},
+                "http://p/name": "B",
+            }).encode()),
+            ("http://s/q", script({"@id": "http://x/a", "http://p/name": "B"}).encode()),
         ],
-        "url string, subj string, pred string, obj string, "
-        "obj_is_literal boolean, obj_datatype string, obj_lang string, "
-        "graph string",
+        "url string, html binary",
     )
-    out = pipe.linked_triples(triples)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    dedup_exchanges = [
-        ln
-        for ln in plan.splitlines()
-        if "Exchange hashpartitioning" in ln
-        and "url" in ln
-        and "subj" in ln  # the dedup exchange carries the full tuple
-    ]
-    assert dedup_exchanges, plan
-    for ln in dedup_exchanges:
-        # full 8-tuple key: every column participates in the hash
-        for col in ("url", "subj", "pred", "obj", "obj_is_literal",
-                    "obj_datatype", "obj_lang", "graph"):
-            assert col in ln, (col, ln)
+    KGPipeline(spark, num_buckets=4).run(
+        pages, str(tmp_path / "out"), run_id="d", link_entities=True
+    )
+    (plan,) = plans
+    lines = plan.splitlines()
+    # the dedup subtree: from the top dedup aggregate down to the scan
+    # of the persisted extract
+    top = next(i for i, ln in enumerate(lines) if "HashAggregate(keys=[" in ln)
+    keys = lines[top].split("keys=[", 1)[1].split("]", 1)[0].split(", ")
+    assert {k.split("#")[0] for k in keys} == {"part_id", *TRIPLE_KEY}, lines[top]
+    end = next(i for i, ln in enumerate(lines) if "InMemoryTableScan" in ln)
+    exchanges = [ln for ln in lines[top:end] if "Exchange hashpartitioning" in ln]
+    assert len(exchanges) == 1, plan
+    assert "hashpartitioning(part_id#" in exchanges[0] and "url#" not in exchanges[0]
 
 
 def test_link_entities_is_lazy(spark):

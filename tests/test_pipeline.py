@@ -88,27 +88,12 @@ def test_run_lineage_and_resume(spark, pipe, pages):
     total_from_lineage = lineage.agg(F.sum("triple_count")).collect()[0][0]
     assert total_from_lineage == stats1["triples"]
 
-    # resume (default out_dir scope): a retried job gets a NEW run_id
-    # but must still skip buckets a previous attempt completed
+    # resume: a retried job gets a NEW run_id but must still skip
+    # buckets a previous attempt completed
     stats2 = pipe.run(pages, out, run_id="r2", resume=True)
     assert stats2["skipped_buckets"] > 0
     written = spark.read.parquet(os.path.join(out, "triples"))
     assert written.count() == stats1["triples"]
-
-    # run_id scope: "r3" never completed anything, so nothing skips —
-    # the mode for deployments that reuse an out_dir across inputs
-    stats3 = pipe.run(pages, out, run_id="r3", resume=True, resume_scope="run_id")
-    assert stats3["skipped_buckets"] == 0
-    assert stats3["triples"] == stats1["triples"]
-    # ...and a second pass under the SAME run_id skips everything
-    stats4 = pipe.run(pages, out, run_id="r3", resume=True, resume_scope="run_id")
-    assert stats4["skipped_buckets"] > 0
-    assert (
-        spark.read.parquet(os.path.join(out, "triples")).count()
-        == stats1["triples"]
-    )
-    with pytest.raises(ValueError, match="resume_scope"):
-        pipe.run(pages, out, run_id="r4", resume_scope="bogus")
 
 
 def test_resume_after_partial_failure(spark, pipe, pages):
@@ -267,18 +252,13 @@ def test_giant_document_gated_before_parse():
 
 
 def test_errors_default_reports_oversized_scriptless_page(spark, pipe, monkeypatch):
-    """``errors()`` defaults to ``skip_scriptless=False``: an oversized
+    """``errors()`` runs without the ld+json pre-filter: an oversized
     page with no ld+json still reports its 'document too large' row,
     while ``extract()``'s default pre-filter drops the page before the
     size gate."""
-    import jsonld_spark.pipeline as pipeline_mod
-    from jsonld_spark.udfs import make_pages_to_triples
+    from jsonld_spark import udfs
 
-    monkeypatch.setattr(
-        pipeline_mod,
-        "make_pages_to_triples",
-        lambda *a, **k: make_pages_to_triples(*a, max_html_bytes=1024, **k),
-    )
+    monkeypatch.setattr(udfs, "MAX_HTML_BYTES", 1024)
     url = "http://page.example/big-scriptless"
     pages = spark.createDataFrame(
         [(url, b"<html><p>" + b"x" * 4000 + b"</p></html>")],
@@ -600,6 +580,32 @@ def test_linked_run_job_count(spark, pipe, pages):
     jobs = sc.statusTracker().getJobIdsForGroup("linked_run_job_count")
     assert len(jobs) <= 9, sorted(jobs)
     shutil.rmtree(out, ignore_errors=True)
+
+
+def test_linked_run_derives_the_bucket_once(spark, pipe, pages, monkeypatch):
+    """A fresh linked run derives ``part_id`` once, on the extract's
+    rows; linking keeps it.  A resume derives it on the pages too, to
+    skip the completed buckets before the extract."""
+    calls = []
+    real = KGPipeline.with_bucket
+
+    def counted(self, df):
+        calls.append(1)
+        return real(self, df)
+
+    monkeypatch.setattr(KGPipeline, "with_bucket", counted)
+    out = os.path.join(DATA_DIR, "kg_out_linked_bucket")
+    shutil.rmtree(out, ignore_errors=True)
+    try:
+        pipe.run(pages, out, run_id="b1", link_entities=True)
+        assert len(calls) == 1
+        _drop_odd_bucket_lineage(spark, out)
+        calls.clear()
+        resumed = pipe.run(pages, out, run_id="b2", link_entities=True)
+        assert resumed["skipped_buckets"] > 0
+        assert len(calls) == 2
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
 
 
 def test_linked_run_same_output_on_both_cc_paths(spark, pipe, monkeypatch):

@@ -82,6 +82,9 @@ NO_PROPAGATE_DOC = {
     "n": 1,
 }
 NO_PROPAGATE_TYPED_DOC = {**NO_PROPAGATE_DOC, "@type": "Thing"}
+# @context after the other entries: the reader takes parsed documents,
+# so key order is free (the reference's one-pass reader raises here)
+LATE_CONTEXT_DOC = {"@graph": [_entity(0), _entity(1)], "@context": CTX}
 NO_PROPAGATE_REVERSE_DOC = {
     "@context": NO_PROPAGATE_CTX,
     "@id": "http://e.com/np",
@@ -101,11 +104,11 @@ NO_PROPAGATE_REVERSE_DOC = {
     [ARRAY_DOC, GRAPH_DOC, NAMED_GRAPH_DOC, GRAPH_WITH_PROPS, _entity(7),
      REVERSE_DOC, INCLUDED_DOC, INDEX_DOC, NEST_DOC, BNODE_GRAPH_DOC,
      SET_DOC, NO_PROPAGATE_DOC, NO_PROPAGATE_TYPED_DOC,
-     NO_PROPAGATE_REVERSE_DOC],
+     NO_PROPAGATE_REVERSE_DOC, LATE_CONTEXT_DOC],
     ids=["array", "graph-wrapper", "named-graph", "graph-with-props",
          "single-node", "reverse", "included", "index", "nest",
          "bnode-named-graph", "set-wrapper", "no-propagate",
-         "no-propagate-typed", "no-propagate-reverse"],
+         "no-propagate-typed", "no-propagate-reverse", "late-context"],
 )
 def test_stream_equals_batch(doc):
     batch = set(doc_to_quads(doc, base="http://base.e/"))
